@@ -143,27 +143,27 @@ object Maintenance {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** One reusable daemon thread for bounded Observation waits (the t21
-    * observe discipline, shared): a metric that rode an already-finished
-    * job normally surfaces in milliseconds; a stuck listener bus costs
-    * the caller's fallback and an interrupt, never a parked thread. */
-  private lazy val obsWaiter = java.util.concurrent.Executors
-    .newSingleThreadExecutor { (r: Runnable) =>
-      val t = new Thread(r, "graft-maint-obs-wait"); t.setDaemon(true); t }
-
-  /** The named observed metric, or `fallback` if the listener bus hasn't
-    * surfaced it within 10 s (or the metric row's value is null — an
-    * empty observed input). */
+  /** The named observed metric, or `fallback` if it did not surface within
+    * 10 s of this call (the t21 observe discipline, shared). A metric that
+    * rode an already-finished job normally surfaces in milliseconds. The
+    * wait runs on the caller's thread against the Observation's own
+    * future, so each call has its own deadline, no caller queues behind
+    * another's wait, and a timeout leaves no parked thread behind. Every
+    * failure of the wait takes the fallback: a timeout, a failed metric
+    * future, a null value (an empty observed input), and an interrupt,
+    * whose flag is restored for the caller to act on. */
   private[graft] def observedOr[A](obs: org.apache.spark.sql.Observation,
       key: String)(fallback: => A): A = {
-    val fut = obsWaiter.submit(new java.util.concurrent.Callable[Any] {
-      override def call(): Any = obs.get.getOrElse(key, null)
-    })
-    try {
-      val v = fut.get(10, java.util.concurrent.TimeUnit.SECONDS)
-      if (v == null) fallback else v.asInstanceOf[A]
-    } catch { case _: java.util.concurrent.TimeoutException =>
-      fut.cancel(true); fallback }
+    val v =
+      try {
+        val row = scala.concurrent.Await.result(obs.future,
+          scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.SECONDS))
+        row.getValuesMap[Any](row.schema.fieldNames.toSeq).getOrElse(key, null)
+      } catch {
+        case _: InterruptedException => Thread.currentThread().interrupt(); null
+        case scala.util.control.NonFatal(_) => null
+      }
+    if (v == null) fallback else v.asInstanceOf[A]
   }
 
   private[graft] def inParallel[A](tasks: Seq[() => A]): Seq[A] = {

@@ -133,7 +133,7 @@ object Landing {
 
   /** Small-file compaction of a partitioned landing table — the
     * maintenance pass every streaming sink needs (each micro-batch lands
-    * `batch-<id>-part-*` files; a day of 1-minute batches is 1440 files
+    * `<run>-batch-<id>-part-*` files; a day of 1-minute batches is 1440 files
     * per partition, and at 100 TB the NameNode/scan-planning cost of tiny
     * files dwarfs the data). Partitions with more than `maxFiles` files
     * are rewritten: one job reads only those partitions, `repartition`

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Counters, Graphs, Layout, Profile, Relational}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Round-5 operators: iterative PageRank (x31), native CountMax UDAF (a11),
@@ -63,6 +64,48 @@ class GraphLayoutSpec extends SparkSpec {
     val r = spark.range(0).selectExpr("id AS x").agg(cm)
       .select(col("cm.cnt"), col("cm.max_ts")).collect().head
     assert(r.getLong(0) == 0L && r.isNullAt(1))
+  }
+
+  /** logdate → (cnt, max) from a `map<string, struct<cnt, max>>` value. */
+  private def keyedCountMaxOf(m: scala.collection.Map[String, org.apache.spark.sql.Row]) =
+    m.map { case (k, r) => k -> (r.getLong(0), Option(r.get(1))) }.toMap
+
+  private def keyedCountMaxCol(key: Column, value: Column): Column = {
+    import org.apache.spark.sql.graft.bridge
+    bridge.column(expressions.KeyedCountMax(bridge.expression(key), bridge.expression(value))
+      .toAggregateExpression()).as("kcm")
+  }
+
+  /** Events keyed by logdate, with a null epoch on every 13th row; 7 input
+    * partitions force partial buffers through serialize/merge. */
+  private def keyedInput = Tables.events(spark, sf).repartition(7, col("event_id"))
+    .select(graft.functions.Times.logdate(col("ts")).as("k"),
+      when(col("event_id") % 13 === 0, lit(null).cast("long"))
+        .otherwise(graft.functions.Times.epochSeconds(col("ts"))).as("v"))
+
+  private def groupByTruth(df: org.apache.spark.sql.DataFrame) =
+    df.groupBy(col("k")).agg(count(lit(1)), max(col("v"))).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), Option(r.get(2)))).toMap
+
+  test("a11: keyed CountMax equals groupBy(key).agg(count, max) under partial merge") {
+    val in = keyedInput
+    assert(in.rdd.getNumPartitions >= 4)
+    val got = keyedCountMaxOf(in.agg(keyedCountMaxCol(col("k"), col("v")))
+      .collect().head.getMap[String, org.apache.spark.sql.Row](0))
+    val truth = groupByTruth(in)
+    assert(truth.size > 1 && got == truth)
+  }
+
+  test("a11: keyed CountMax holds as an observe metric on a file write; empty input is an empty map") {
+    val in = keyedInput
+    val obs = org.apache.spark.sql.Observation()
+    in.observe(obs, keyedCountMaxCol(col("k"), col("v")))
+      .write.mode("overwrite").orc(Tables.scratchDir("graft_kcm_obs").toString)
+    val got = keyedCountMaxOf(
+      obs.get("kcm").asInstanceOf[scala.collection.Map[String, org.apache.spark.sql.Row]])
+    assert(got == groupByTruth(in))
+    val empty = in.where(lit(false)).agg(keyedCountMaxCol(col("k"), col("v"))).collect().head
+    assert(empty.getMap[String, org.apache.spark.sql.Row](0).isEmpty)
   }
 
   test("j13: SCD2 intervals tile each customer's history exactly once") {

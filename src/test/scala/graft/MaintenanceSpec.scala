@@ -338,6 +338,49 @@ class MaintenanceSpec extends SparkSpec {
       "the leg's own exception must propagate, not a wrapper")
   }
 
+  /** An Observation on a Dataset that is never run: its metric never surfaces. */
+  private def neverObserved() = {
+    val obs = org.apache.spark.sql.Observation()
+    spark.range(3).observe(obs, count(lit(1)).as("n"))
+    obs
+  }
+
+  test("observedOr: a surfaced metric is returned; one that never surfaces takes the " +
+      "fallback, and concurrent callers each wait on their own deadline") {
+    val ran = org.apache.spark.sql.Observation()
+    spark.range(3).observe(ran, count(lit(1)).as("n")).collect()
+    assert(Maintenance.observedOr[Long](ran, "n")(-1L) == 3L)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val t0 = System.nanoTime()
+      val waits = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Long] {
+        override def call(): Long = Maintenance.observedOr[Long](neverObserved(), "n")(-1L)
+      }))
+      assert(waits.map(_.get) == Seq(-1L, -1L))
+      val s = (System.nanoTime() - t0) / 1e9
+      // one 10 s bound each, side by side; a wait queued behind the other
+      // would have taken 20 s
+      assert(s < 16.0, f"two concurrent waits took $s%.1f s")
+    } finally pool.shutdownNow()
+  }
+
+  test("observedOr: an interrupted caller takes the fallback and keeps its interrupt flag") {
+    val result = new java.util.concurrent.atomic.AtomicLong(0L)
+    @volatile var flagKept = false
+    val caller = new Thread(() => {
+      result.set(Maintenance.observedOr[Long](neverObserved(), "n")(-1L))
+      flagKept = Thread.currentThread().isInterrupted
+    })
+    val t0 = System.nanoTime()
+    caller.start()
+    Thread.sleep(300)
+    caller.interrupt()
+    caller.join(20000)
+    assert(!caller.isAlive)
+    assert((System.nanoTime() - t0) / 1e9 < 5.0, "the interrupt must end the wait")
+    assert(result.get == -1L && flagKept)
+  }
+
   test("x94 orchestrator: one pass with shared derivations equals the per-artifact " +
       "sequential composition; a full replay converges; the enriched batch is " +
       "lineage-truncated (tokenized/shingled once)") {

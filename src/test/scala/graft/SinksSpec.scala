@@ -3,6 +3,7 @@ package graft
 import graft.operators.Counters
 import graft.sources.{Bookkeeping, Landing}
 import graft.streaming.StreamingIngest
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** S5/S6/S7/S8/S9 + T9 — the side-effecting sink surface: JDBC bookkeeping
@@ -139,14 +140,128 @@ class SinksSpec extends SparkSpec {
     val batch = Tables.events(spark, sf)
       .withColumn("logdate", graft.functions.Times.logdate(col("ts")))
       .where(col("event_id") < 500) // deterministic subset, same rows every call
-    StreamingIngest.landBatchIdempotent(batch, 7L, out, ckpt, fs)
+    StreamingIngest.landBatchIdempotent(batch, "run-a", 7L, out, ckpt, fs)
     val first = spark.read.orc(out).count()
     // crash-replay of the same batchId: deterministic names overwrite
-    StreamingIngest.landBatchIdempotent(batch, 7L, out, ckpt, fs)
+    StreamingIngest.landBatchIdempotent(batch, "run-a", 7L, out, ckpt, fs)
     assert(spark.read.orc(out).count() == first)
     // a different batch appends alongside, not over
-    StreamingIngest.landBatchIdempotent(batch, 8L, out, ckpt, fs)
+    StreamingIngest.landBatchIdempotent(batch, "run-a", 8L, out, ckpt, fs)
     assert(spark.read.orc(out).count() == 2 * first)
+    // read back by its own names: exactly one landing of one batch of one run
+    def perLogdate(df: DataFrame) = df.groupBy(col("logdate"))
+      .agg(count(lit(1)), max(graft.functions.Times.epochSeconds(col("ts")))).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(perLogdate(StreamingIngest.landedBatch(spark, batch.schema, "run-a", 7L, out, fs))
+      == perLogdate(batch))
+    assert(StreamingIngest.landedBatch(spark, batch.schema, "run-b", 7L, out, fs).count() == 0)
+  }
+
+  /** A private sfDir whose `events.parquet` is `df` as one file (the
+    * landing stream reads each sfDir through its own source dir). */
+  private def eventsSf(prefix: String, df: DataFrame): String = {
+    import scala.jdk.CollectionConverters._
+    val staged = tmp(prefix + "_w")
+    df.coalesce(1).write.mode("overwrite").parquet(staged)
+    val part = java.nio.file.Files.list(java.nio.file.Paths.get(staged)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val dir = graft.Tables.scratchDir(prefix)
+    java.nio.file.Files.copy(part, dir.resolve("events.parquet"))
+    dir.toString
+  }
+
+  /** The fixture events plus the batch shapes the epilogue must count:
+    * `no_category` events (null event_type) and late events, landing 40
+    * days behind the rest in partitions of their own. */
+  private def lateAndUncategorized: DataFrame = {
+    val ev = Tables.events(spark, sf)
+      .withColumn("event_type", when(col("event_id") % 10 === 3, lit(null).cast("string"))
+        .otherwise(col("event_type")))
+      .withColumn("ts", when(col("event_id") % 10 === 7, col("ts") - expr("INTERVAL 40 DAYS"))
+        .otherwise(col("ts")))
+    assert(ev.where(col("event_type").isNull).count() > 0)
+    ev
+  }
+
+  /** logdate → (count, max event epoch) of an sfDir's events, by groupBy. */
+  private def perLogdateTruth(sfDir: String): Map[String, (Long, Long)] =
+    Tables.normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+      .groupBy(graft.functions.Times.logdate(col("ts")))
+      .agg(count(lit(1)), max(graft.functions.Times.epochSeconds(col("ts"))))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  test("S9: a fresh micro-batch lands in ONE Spark job; its bookkeeping equals the groupBy truth") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val mySf = eventsSf("graft_onejob_sf", lateAndUncategorized)
+    val out = tmp("graft_onejob_out")
+    val url = Bookkeeping.derbyUrl(s"${tmp("graft_derby_onejob")}/bk")
+    val fenceDesc = "graft spec fence"
+    val batchJobs = new java.util.concurrent.atomic.AtomicInteger
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    // streaming batch jobs carry "…\nbatch = <id>" as their description
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description"))) match {
+          case Some(d) if d.contains("\nbatch = ") => batchJobs.incrementAndGet(); ()
+          case Some(`fenceDesc`) => fence.countDown()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val report =
+      try {
+        val r = StreamingIngest.landStream(spark, mySf, out, tmp("graft_onejob_ckpt"),
+          StreamingIngest.LandingCallbacks(jdbcUrl = Some(url)))
+        graft.operators.Maintenance.labeled(spark, fenceDesc)(
+          spark.sparkContext.parallelize(Seq(1), 1).count())
+        assert(fence.await(20, java.util.concurrent.TimeUnit.SECONDS))
+        r
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(batchJobs.get == 1, s"${batchJobs.get} jobs for one micro-batch")
+    val truth = perLogdateTruth(mySf)
+    val onTime = Tables.events(spark, sf)
+      .agg(min(graft.functions.Times.logdate(col("ts")))).collect().head.getString(0)
+    assert(truth.keySet.exists(_ < onTime), "the fixture must carry late logdates")
+    assert(report.logdates.toSet == truth.keySet)
+    assert(spark.read.orc(out).count() == truth.values.map(_._1).sum)
+    val bk = Bookkeeping.read(spark, url)
+      .select(col("logdate"), col("receivecount"), col("sinkcount"), col("updatetime"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(bk == truth.map { case (ld, (n, maxe)) => ld -> (n, n, maxe) })
+  }
+
+  test("S2: a batch whose commit marker exists lands nothing and still reports its logdates") {
+    import org.apache.hadoop.fs.Path
+    val mySf = eventsSf("graft_marker_sf", lateAndUncategorized)
+    val out = tmp("graft_marker_out")
+    val ckpt = tmp("graft_marker_ckpt")
+    val marker = new Path(ckpt, "graft_commits/0")
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.mkdirs(marker.getParent)
+    fs.create(marker, true).close()
+    val listener = new graft.streaming.CompletenessListener(300L)(_ => ())
+    val report = StreamingIngest.landStream(spark, mySf, out, ckpt,
+      StreamingIngest.LandingCallbacks(completeness = Some(listener)))
+    val truth = perLogdateTruth(mySf).keySet
+    assert(report.logdates.toSet == truth)
+    listener.advanceWatermark(Long.MaxValue) // fires every registered logdate
+    assert(listener.completed == truth)
+    val landed = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+    try assert(landed.filter(_.toString.endsWith(".orc")).count() == 0)
+    finally landed.close()
+  }
+
+  test("S2: two landing runs sharing one out path keep both runs' rows") {
+    val ev = Tables.events(spark, sf).orderBy(col("event_id"))
+    val out = tmp("graft_shared_out")
+    // B's events are a prefix of A's, so B's batch 0 lands in A's partitions
+    val a = StreamingIngest.landStream(spark, eventsSf("graft_shared_a", ev.limit(100)),
+      out, tmp("graft_shared_ckpt_a"))
+    val b = StreamingIngest.landStream(spark, eventsSf("graft_shared_b", ev.limit(50)),
+      out, tmp("graft_shared_ckpt_b"))
+    assert(a.nEvents == 100 && b.nEvents == 50)
+    assert(b.logdates.toSet.subsetOf(a.logdates.toSet))
+    assert(spark.read.orc(out).count() == 150)
   }
 
   test("T9 epilogue: catalog partitions + JDBC bookkeeping + HTTP notify + observed metrics") {
