@@ -554,8 +554,9 @@ object Dedup {
     // in [[dedupIndexDeleteKeys]] — manifest-pruned dirty read, one
     // staged rewrite, one manifest swap
     if (VersionedLayers.isVersioned(spark, idxDir)) {
-      if (VersionedLayers.layers(spark, idxDir).isEmpty) return Seq.empty
-      val idx = VersionedLayers.read(spark, idxDir)(return Seq.empty)
+      val live = VersionedLayers.layers(spark, idxDir)
+      if (live.isEmpty) return Seq.empty
+      val idx = VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
       val k = broadcast(keys.select(col("doc_id")).distinct())
       val touches = idx.join(k, col("id1") === col("doc_id"), "leftsemi")
         .unionByName(idx.join(k, col("id2") === col("doc_id"), "leftsemi"))
@@ -780,9 +781,8 @@ object Dedup {
         .getOrElse {
         if (live.isEmpty) Seq.empty[String]
         else {
-          val idx = VersionedLayers.read(spark, dirs.edgesDir)(
-            spark.range(0).select(col("id").as("id1"), col("id").as("id2"),
-              lit("").as("batch")))
+          val idx = VersionedLayers.readTags(spark, dirs.edgesDir,
+            live.map(_.tag).toSet)
           idx.join(k, col("id1") === col("doc_id"), "leftsemi")
             .unionByName(idx.join(k, col("id2") === col("doc_id"), "leftsemi"))
             .select(col("batch")).distinct()
@@ -1350,18 +1350,19 @@ object Dedup {
     if (VersionedLayers.isVersioned(spark, idxDir)) {
       val live = VersionedLayers.layers(spark, idxDir)
       if (live.isEmpty) return Seq.empty
-      val idx = VersionedLayers.read(spark, idxDir)(
-        return Seq.empty)
+      val liveTags = live.map(_.tag).toSet
       val k = broadcast(keys.select(col(keyCol)).distinct())
       // `knownDirty` = the caller already ran the dirty-tag detection
       // (the near triple's three sub-indexes detect all at once — one
       // action instead of three); intersect with the live manifest so a
       // tag another sub-index holds but this one doesn't is skipped
-      val dirty = knownDirty
-        .map(_.filter(live.map(_.tag).toSet).sorted)
-        .getOrElse(idx.join(k, Seq(keyCol), "leftsemi")
+      val dirty = knownDirty match {
+        case Some(tags) => tags.filter(liveTags).sorted
+        case None => VersionedLayers.readTags(spark, idxDir, liveTags)
+          .join(k, Seq(keyCol), "leftsemi")
           .select(col("batch")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted)
+          .collect().map(_.getString(0)).toSeq.sorted
+      }
       if (dirty.nonEmpty) {
         val surv = VersionedLayers.readTags(spark, idxDir, dirty.toSet)
           .join(k, Seq(keyCol), "leftanti")
@@ -1456,9 +1457,7 @@ object Dedup {
         .map(_.filter(live.map(_.tag).toSet).sorted)
         .getOrElse {
           if (live.isEmpty) Seq.empty
-          else VersionedLayers.read(spark, idxDir, exclude = Some(tag))(
-              return { VersionedLayers.rewriteLayers(spark, idxDir,
-                Seq(tag), fresh); Seq.empty })
+          else VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
             .join(k, Seq(keyCol), "leftsemi")
             .select(col("batch")).distinct()
             .collect().map(_.getString(0)).toSeq.sorted
@@ -1683,9 +1682,9 @@ object Dedup {
       val dir = s"$indexDir/$sub"
       val rows =
         if (VersionedLayers.isVersioned(spark, dir)) {
-          if (VersionedLayers.layers(spark, dir).isEmpty) None
-          else Some(VersionedLayers.read(spark, dir)(
-            return subs.map(_ -> Seq.empty[String]).toMap))
+          val live = VersionedLayers.layers(spark, dir)
+          if (live.isEmpty) None
+          else Some(VersionedLayers.readTags(spark, dir, live.map(_.tag).toSet))
         } else {
           Maintenance.guardInterruptedCompaction(spark, dir)
           if (!hasVisibleData(spark, dir)) None

@@ -5,6 +5,7 @@ import graft.functions.{Headers, TextFns, Times}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Corpus-maintenance operators over a MAINTAINED, time-partitioned
   * landing — the round-13 completion of the x75/x76 story: incremental
@@ -1000,13 +1001,19 @@ object Maintenance {
     .agg(count(lit(1)).as("n_docs"),
       coalesce(sum(size(col("tk")).cast("long")), lit(0L)).as("n_tokens"))
 
+  /** The columns [[docAggOfTk]] and its fold write. */
+  private[graft] val DocAggSchema = StructType(Seq(
+    StructField("source", StringType), StructField("n_docs", LongType),
+    StructField("n_tokens", LongType)))
+
   /** The aggregate view's current contents (via the `_LATEST` pointer —
-    * the t19/t21 versioned-store layout). */
+    * the t19/t21 versioned-store layout), read with its declared schema
+    * (no footer-inference job). */
   private[graft] def readDocAggView(spark: SparkSession, aggDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val root = new Path(aggDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(new Path(root,
+    spark.read.schema(DocAggSchema).parquet(new Path(root,
       graft.streaming.StreamingIngest.readViewPointer(fs, root)).toString)
   }
 
@@ -1233,43 +1240,29 @@ object Maintenance {
         Map[String, Seq[(String, Int)]]]()
       inParallel[Unit](Seq(
         () => labeled(spark, "x94: dirty detect") {
-          def rowsOf(art: String, dir: String, kb: DataFrame,
-                     keyCol: String): Option[DataFrame] = {
-            if (!VersionedLayers.isVersioned(spark, dir) ||
-                VersionedLayers.layers(spark, dir).forall(_.tag == tag)) None
-            else Some(VersionedLayers.read(spark, dir, exclude = Some(tag))(
-                spark.range(0).select(col("id").as(keyCol), lit("").as("batch")))
-              .select(col(keyCol), col("batch"))
-              .join(kb, Seq(keyCol), "leftsemi")
-              .select(lit(art).as("art"), col("batch"),
-                lit(-1).as("cell")))
+          // the published layers other than the batch's own tag, if any
+          def priorOf(dir: String): Option[DataFrame] = {
+            val others = VersionedLayers.layers(spark, dir).map(_.tag).toSet - tag
+            if (others.isEmpty) None
+            else Some(VersionedLayers.readTags(spark, dir, others))
           }
+          def rowsOf(art: String, dir: String, kb: DataFrame,
+                     keyCol: String): Option[DataFrame] =
+            (if (VersionedLayers.isVersioned(spark, dir)) priorOf(dir) else None)
+              .map(_.select(col(keyCol), col("batch"))
+                .join(kb, Seq(keyCol), "leftsemi")
+                .select(lit(art).as("art"), col("batch"), lit(-1).as("cell")))
           val kb = broadcast(kdf)
           val kbVec = broadcast(kdfVec)
-          val ann: Option[DataFrame] =
-            if (VersionedLayers.layers(spark, dirs.annDir).forall(_.tag == tag))
-              None
-            else Some(VersionedLayers.read(spark, dirs.annDir,
-                exclude = Some(tag))(
-                spark.range(0).select(col("id").as("vec_id"),
-                  lit("").as("batch"), col("id").cast("int").as("cell")))
-              .select(col("vec_id"), col("batch"), col("cell"))
+          val ann: Option[DataFrame] = priorOf(dirs.annDir).map(
+            _.select(col("vec_id"), col("batch"), col("cell"))
               .join(kbVec, Seq("vec_id"), "leftsemi")
               .select(lit("ann").as("art"), col("batch"), col("cell")))
-          val edges: Option[DataFrame] =
-            if (VersionedLayers.layers(spark, dirs.cluster.edgesDir)
-                .forall(_.tag == tag)) None
-            else {
-              val idx = VersionedLayers.read(spark, dirs.cluster.edgesDir,
-                exclude = Some(tag))(
-                spark.range(0).select(col("id").as("id1"), col("id").as("id2"),
-                  lit("").as("batch")))
-              Some(idx.join(kb, col("id1") === col("doc_id"), "leftsemi")
-                .unionByName(
-                  idx.join(kb, col("id2") === col("doc_id"), "leftsemi"))
-                .select(lit("edges").as("art"), col("batch"),
-                  lit(-1).as("cell")))
-            }
+          val edges: Option[DataFrame] = priorOf(dirs.cluster.edgesDir).map {
+            idx => idx.join(kb, col("id1") === col("doc_id"), "leftsemi")
+              .unionByName(idx.join(kb, col("id2") === col("doc_id"), "leftsemi"))
+              .select(lit("edges").as("art"), col("batch"), lit(-1).as("cell"))
+          }
           val frames = Seq(
             rowsOf("corpus", dirs.corpusDir, kb, "doc_id"),
             rowsOf("exact", dirs.exactDir, kb, "doc_id"),

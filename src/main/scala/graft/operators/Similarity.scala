@@ -890,8 +890,9 @@ object Similarity {
     // (source and destination never collide)
     if (graft.operators.VersionedLayers.isVersioned(spark, idxDir)) {
       import graft.operators.VersionedLayers
-      if (VersionedLayers.layers(spark, idxDir).isEmpty) return Seq.empty
-      val idx = VersionedLayers.read(spark, idxDir)(return Seq.empty)
+      val live = VersionedLayers.layers(spark, idxDir)
+      if (live.isEmpty) return Seq.empty
+      val idx = VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
       val k = broadcast(keys.select(col("vec_id")).distinct())
       val dirty = idx.join(k, Seq("vec_id"), "leftsemi")
         .select(col("batch"), col("cell")).distinct()
@@ -977,9 +978,7 @@ object Similarity {
         .map(_.filter(livePairs).sorted)
         .getOrElse {
         if (live.isEmpty) Seq.empty[(String, Int)]
-        else VersionedLayers.read(spark, idxDir, exclude = Some(tag))(
-            spark.range(0).select(col("id").as("vec_id"),
-              lit("").as("batch"), col("id").cast("int").as("cell")))
+        else VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
           .join(k, Seq("vec_id"), "leftsemi")
           .select(col("batch"), col("cell")).distinct()
           .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted }

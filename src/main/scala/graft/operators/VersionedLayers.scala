@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 /** Copy-free snapshot isolation for `batch=`-layered swap artifacts
   * (VERDICT r16 #2 — "readers have no isolation during swaps").
@@ -18,10 +19,22 @@ import org.apache.spark.sql.functions._
   *
   * {{{
   *   <root>/_LATEST            pointer file → "m-<seq>"
-  *   <root>/manifests/m-<seq>  one "<tag>\t<storeDirName>" line per layer
+  *   <root>/manifests/m-<seq>  one "<tag>\t<storeDirName>" line per layer,
+  *                             plus one "#schema\t<tag>\t<StructType json>"
+  *                             line per tag
   *   <root>/store/<tag>-g<seq>/  immutable layer data (parquet, optional
   *                               sub-partitioning, e.g. cell=)
   * }}}
+  *
+  * The `#schema` line is the schema a reader of the tag sees, minus the
+  * `batch` column every read re-attaches (a sub-partition column such as
+  * `cell` is kept, last, as partition discovery yields it). Every
+  * publish writes it for the tags it staged and carries it forward for
+  * the rest, so a read plans from the manifest alone: no footer is
+  * sampled and no Spark job runs, the way a Hive reader takes the schema
+  * the metastore published with the partition list. A tag without the
+  * line (a manifest written before schemas were recorded) falls back to
+  * parquet footer inference for that tag only.
   *
   * Writers (single-writer, under the pipeline lease) never touch a
   * published store dir: every mutation writes NEW store dirs, then
@@ -79,6 +92,13 @@ object VersionedLayers {
     * extra planning+footer round-trips per tag. */
   final case class Layer(tag: String, rel: String, cell: Option[Int] = None)
 
+  /** A resolved manifest: its entries and each tag's recorded schema
+    * (absent for tags published before schemas were recorded). */
+  private final case class Manifest(layers: Seq[Layer],
+                                    schemas: Map[String, StructType])
+
+  private val SchemaLine = "#schema"
+
   private def pointerPath(root: Path) = new Path(root, "_LATEST")
   private def manifestsPath(root: Path) = new Path(root, "manifests")
   private def storePath(root: Path) = new Path(root, "store")
@@ -125,7 +145,7 @@ object VersionedLayers {
     if (isVersioned(spark, dir)) return
     fs.mkdirs(storePath(root))
     fs.mkdirs(manifestsPath(root))
-    writeManifest(fs, root, 0L, Seq.empty)
+    writeManifest(fs, root, 0L, Manifest(Seq.empty, Map.empty))
     graft.streaming.StreamingIngest.writeViewPointer(fs, root, "m-0")
   }
 
@@ -137,37 +157,57 @@ object VersionedLayers {
   }
 
   private def writeManifest(fs: FileSystem, root: Path, seq: Long,
-                            layers: Seq[Layer]): Unit = {
+                            m: Manifest): Unit = {
     // overwrite=true: a crash-before-pointer-move leaves an orphan
     // m-<seq> that the (leased, single) writer's retry may clobber
     val out = fs.create(new Path(manifestsPath(root), s"m-$seq"), true)
-    try out.write(layers.map { l =>
+    try out.write((m.layers.map { l =>
       l.cell match {
         case Some(c) => s"${l.tag}\t$c\t${l.rel}\n"
         case None => s"${l.tag}\t${l.rel}\n"
       }
-    }.mkString.getBytes("UTF-8"))
+    } ++ m.schemas.toSeq.sortBy(_._1).map { case (tag, s) =>
+      s"$SchemaLine\t$tag\t${s.json}\n"
+    }).mkString.getBytes("UTF-8"))
     finally out.close()
   }
 
-  private def readManifest(fs: FileSystem, root: Path, seq: Long): Seq[Layer] = {
+  private def readManifest(fs: FileSystem, root: Path, seq: Long): Manifest = {
     val in = fs.open(new Path(manifestsPath(root), s"m-$seq"))
     val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    text.split("\n").toSeq.filter(_.nonEmpty).map { line =>
-      line.split("\t", -1).toSeq match {
-        case Seq(tag, rel) => Layer(tag, rel)
-        case Seq(tag, cell, rel) => Layer(tag, rel, Some(cell.toInt))
-        case _ => throw new IllegalStateException(
-          s"$root: malformed manifest line '$line'")
+    val (layers, schemas) = text.split("\n").toSeq.filter(_.nonEmpty)
+      .partitionMap { line =>
+        line.split("\t", -1).toSeq match {
+          case Seq(SchemaLine, tag, json) =>
+            Right(tag -> DataType.fromJson(json).asInstanceOf[StructType])
+          case Seq(tag, rel) => Left(Layer(tag, rel))
+          case Seq(tag, cell, rel) => Left(Layer(tag, rel, Some(cell.toInt)))
+          case _ => throw new IllegalStateException(
+            s"$root: malformed manifest line '$line'")
+        }
       }
-    }
+    Manifest(layers, schemas.toMap)
+  }
+
+  /** The live manifest (resolved through the pointer). */
+  private def resolve(spark: SparkSession, dir: String): (Path, Manifest) = {
+    val (fs, root) = fsOf(spark, dir)
+    (root, readManifest(fs, root, currentSeq(fs, root)))
   }
 
   /** The live layer list (resolved through the pointer). */
-  private[graft] def layers(spark: SparkSession, dir: String): Seq[Layer] = {
-    val (fs, root) = fsOf(spark, dir)
-    readManifest(fs, root, currentSeq(fs, root))
-  }
+  private[graft] def layers(spark: SparkSession, dir: String): Seq[Layer] =
+    resolve(spark, dir)._2.layers
+
+  /** The schema a reader of a layer staged from `staged` sees, the one
+    * its `#schema` line records: the staged columns minus `batch`, and a
+    * sub-partition column moved last and typed `int`, as partition
+    * discovery plus [[readEntries]]' cast yield it. */
+  private def layerSchema(staged: DataFrame,
+                          subPartition: Option[String]): StructType =
+    StructType(staged.schema.filterNot(f =>
+      f.name == "batch" || subPartition.contains(f.name)) ++
+      subPartition.map(StructField(_, IntegerType)))
 
   /** Snapshot-isolated read of the artifact: the union of the manifest's
     * store dirs, each with its `batch` tag attached — schema-compatible
@@ -180,16 +220,19 @@ object VersionedLayers {
     * layers group into ONE `spark.read.parquet(dirs*)` per tag; cell
     * leaves group per (tag, generation dir) with hive partition discovery
     * recovering `cell` — so a 16-cell tag costs one read call, not 16.
-    * The union width (and so planning cost) shrinks the same way. */
+    * The union width (and so planning cost) shrinks the same way. Each
+    * read takes its tag's recorded schema, so planning runs no Spark job;
+    * only a tag with no recorded schema infers it from a footer. */
   private def readEntries(spark: SparkSession, root: Path,
-                          live: Seq[Layer]): DataFrame = {
+                          m: Manifest, live: Seq[Layer]): DataFrame = {
     val store = storePath(root)
     val groups: Seq[DataFrame] =
       live.groupBy(_.tag).toSeq.sortBy(_._1).flatMap { case (tag, ls) =>
+        def reader = m.schemas.get(tag).fold(spark.read)(spark.read.schema(_))
         val (flat, leaves) = ls.partition(_.cell.isEmpty)
         val flatDf =
           if (flat.isEmpty) Seq.empty
-          else Seq(spark.read
+          else Seq(reader
             .parquet(flat.map(l => new Path(store, l.rel).toString): _*)
             .withColumn("batch", lit(tag)))
         // cell leaves: one read per generation dir (rel = "<gen>/cell=<c>");
@@ -197,7 +240,7 @@ object VersionedLayers {
         // while `cell` still comes from the directory name
         val leafDfs = leaves.groupBy(_.rel.takeWhile(_ != '/')).toSeq
           .sortBy(_._1).map { case (gen, gls) =>
-            spark.read
+            reader
               .option("basePath", new Path(store, gen).toString)
               .parquet(gls.map(l => new Path(store, l.rel).toString): _*)
               .withColumn("cell", col("cell").cast("int"))
@@ -211,9 +254,9 @@ object VersionedLayers {
   private[graft] def read(spark: SparkSession, dir: String,
                           exclude: Option[String] = None)
                          (empty: => DataFrame): DataFrame = {
-    val (_, root) = fsOf(spark, dir)
-    val live = layers(spark, dir).filterNot(l => exclude.contains(l.tag))
-    if (live.isEmpty) empty else readEntries(spark, root, live)
+    val (root, m) = resolve(spark, dir)
+    val live = m.layers.filterNot(l => exclude.contains(l.tag))
+    if (live.isEmpty) empty else readEntries(spark, root, m, live)
   }
 
   /** Read ONLY the named tags' layers (manifest pruning — the versioned
@@ -222,21 +265,21 @@ object VersionedLayers {
     * intersection with the live manifest. */
   private[graft] def readTags(spark: SparkSession, dir: String,
                               tags: Set[String]): DataFrame = {
-    val (_, root) = fsOf(spark, dir)
-    val live = layers(spark, dir).filter(l => tags.contains(l.tag))
+    val (root, m) = resolve(spark, dir)
+    val live = m.layers.filter(l => tags.contains(l.tag))
     require(live.nonEmpty, s"$dir: none of $tags is a live layer")
-    readEntries(spark, root, live)
+    readEntries(spark, root, m, live)
   }
 
   /** Read ONLY the named (tag, cell) leaves of a cell-granular artifact
     * — the IVF-PQ delete fold's manifest-pruned dirty read. */
   private[graft] def readCells(spark: SparkSession, dir: String,
                                pairs: Set[(String, Int)]): DataFrame = {
-    val (_, root) = fsOf(spark, dir)
-    val live = layers(spark, dir).filter(l =>
+    val (root, m) = resolve(spark, dir)
+    val live = m.layers.filter(l =>
       l.cell.exists(c => pairs.contains((l.tag, c))))
     require(live.nonEmpty, s"$dir: none of $pairs is a live (tag, cell) leaf")
-    readEntries(spark, root, live)
+    readEntries(spark, root, m, live)
   }
 
   /** The live layers' store paths (the x95 policy's byte walk). */
@@ -254,15 +297,21 @@ object VersionedLayers {
         s"$dir: versioned artifact has no layers — probe before init/append"))
     else spark.read.parquet(dir)
 
-  /** Publish `next` as the new manifest: write m-<seq+1>, move the
-    * pointer, GC. Single-writer (the pipeline lease). */
+  /** Publish `next(current entries)` as the new manifest: write
+    * m-<seq+1>, move the pointer, GC. `fresh` holds the schemas of the
+    * tags this publish staged; every other live tag carries its recorded
+    * schema forward. Single-writer (the pipeline lease). */
   private def publish(fs: FileSystem, root: Path,
-                      next: Seq[Layer]): Unit = {
+                      fresh: Map[String, StructType])
+                     (next: Seq[Layer] => Seq[Layer]): Unit = {
     val seq = currentSeq(fs, root)
     val prev = readManifest(fs, root, seq)
-    writeManifest(fs, root, seq + 1L, next)
+    val layers = next(prev.layers)
+    val tags = layers.map(_.tag).toSet
+    writeManifest(fs, root, seq + 1L,
+      Manifest(layers, (prev.schemas ++ fresh).filter(e => tags(e._1))))
     graft.streaming.StreamingIngest.writeViewPointer(fs, root, s"m-${seq + 1L}")
-    gc(fs, root, seq + 1L, keep = (next ++ prev).map(_.rel).toSet)
+    gc(fs, root, seq + 1L, keep = (layers ++ prev.layers).map(_.rel).toSet)
   }
 
   /** GC after a pointer move: drop store dirs referenced by NEITHER the
@@ -353,10 +402,9 @@ object VersionedLayers {
       case other => throw new IllegalArgumentException(
         s"$dir: at most one sub-partition column is supported, got $other")
     }
-    publish(fs, root, {
-      if (replaceAll) entries
-      else layers(spark, dir).filterNot(_.tag == tag) ++ entries
-    })
+    publish(fs, root, Map(tag -> layerSchema(df, subPartition.headOption))) {
+      prior => if (replaceAll) entries else prior.filterNot(_.tag == tag) ++ entries
+    }
   }
 
   /** The cell-granular dirty-leaf rewrite behind the IVF-PQ delete fold:
@@ -400,7 +448,8 @@ object VersionedLayers {
       }.toMap
     fs.delete(stage, true)
     val dirty = dirtyPairs.toSet
-    publish(fs, root, layers(spark, dir).flatMap { l =>
+    val schema = layerSchema(survivors, Some("cell"))
+    publish(fs, root, remapped.keys.map(_._1 -> schema).toMap)(_.flatMap { l =>
       // an appended tag's prior entries (a replayed batch's own earlier
       // attempt) are replaced wholesale by the staged generation
       if (appendTag.contains(l.tag)) None
@@ -461,19 +510,21 @@ object VersionedLayers {
     }.toMap
     fs.delete(stage, true)
     val dirty = dirtyTags.toSet
-    val prior = layers(spark, dir)
-    val priorTags = prior.map(_.tag).toSet
+    val schema = layerSchema(survivors, None)
     // staged tags the prior manifest never held are APPENDED (the cluster
     // fold stages its delete-survivors and its new batch layer in one
     // write — one publish, one reader-visible transition, instead of a
     // delete publish followed by an append publish); staged tags the
     // prior manifest held replace their entry, emptied dirty tags drop
-    publish(fs, root, prior.flatMap { l =>
-      if (!dirty.contains(l.tag)) Some(l)
-      else remapped.get(l.tag).map(rel => Layer(l.tag, rel))
-    } ++ remapped.toSeq.sortBy(_._1).collect {
-      case (t, rel) if !priorTags.contains(t) => Layer(t, rel)
-    })
+    publish(fs, root, remapped.keys.map(_ -> schema).toMap) { prior =>
+      val priorTags = prior.map(_.tag).toSet
+      prior.flatMap { l =>
+        if (!dirty.contains(l.tag)) Some(l)
+        else remapped.get(l.tag).map(rel => Layer(l.tag, rel))
+      } ++ remapped.toSeq.sortBy(_._1).collect {
+        case (t, rel) if !priorTags.contains(t) => Layer(t, rel)
+      }
+    }
   }
 
   /** The versioned compaction core: fold every live layer through
@@ -486,11 +537,10 @@ object VersionedLayers {
                                      (content: DataFrame => DataFrame): Int = {
     // the LAYER count is the distinct tag count — a cell-granular
     // artifact holds one entry per (tag, cell) leaf
-    val live = layers(spark, dir).map(_.tag).distinct
+    val (root, m) = resolve(spark, dir)
+    val live = m.layers.map(_.tag).distinct
     if (live.size <= 1) return live.size
-    val folded = content(read(spark, dir)(
-      throw new IllegalStateException(s"$dir: compacting an empty artifact")))
-      .drop("batch")
+    val folded = content(readEntries(spark, root, m, m.layers)).drop("batch")
     // no snapshot needed: the fold READS the live store dirs and WRITES a
     // fresh one — unlike the in-place core, source and destination never
     // collide, which is the whole point of the layout

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** M4 — the continuous mode: the reference's micro-batch loop
   * (`process()`, `/root/reference/.../HiveBatchedSink.scala:297-358`) as
@@ -2358,19 +2359,30 @@ object StreamingIngest {
     else snap.coalesce(1).write.mode("overwrite").parquet(dest)
   }
 
+  /** The columns every stats snapshot holds, fixed by the code that
+    * writes them (`Search.bm25TermDfOf` and its folds; `bm25ScalarsOf`
+    * and its folds): readers pass them instead of sampling a footer. */
+  private[graft] val Bm25TermDfSchema = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType)))
+  private[graft] val Bm25ScalarsSchema = StructType(Seq(
+    StructField("n_docs", LongType), StructField("total_len", LongType)))
+
   /** The current stats artifacts `(termDf, scalars)` via `_LATEST`.
     * Layout-blind: a sharded snapshot's `shard=` partition column is
     * dropped on read, so folds and probes see the same logical table
-    * whichever layout [[writeBm25TermDf]] chose. */
+    * whichever layout [[writeBm25TermDf]] chose. Both reads take their
+    * declared schema, so planning them runs no Spark job. */
   private[graft] def readBm25Stats(spark: SparkSession,
                                    statsDir: String): (DataFrame, DataFrame) = {
     import org.apache.hadoop.fs.Path
     val root = new Path(statsDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val snap = new Path(root, readViewPointer(fs, root))
-    val df = spark.read.parquet(new Path(snap, "df").toString)
+    val df = spark.read.schema(Bm25TermDfSchema)
+      .parquet(new Path(snap, "df").toString)
     (if (df.columns.contains("shard")) df.drop("shard") else df,
-      spark.read.parquet(new Path(snap, "scalars").toString))
+      spark.read.schema(Bm25ScalarsSchema)
+        .parquet(new Path(snap, "scalars").toString))
   }
 
   /** One micro-batch of the streaming BM25-stats maintenance loop (T21 —

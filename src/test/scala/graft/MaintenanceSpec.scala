@@ -538,6 +538,34 @@ class MaintenanceSpec extends SparkSpec {
       "the compaction sweep changed an artifact's contents")
   }
 
+  test("x96 sweep job budget: over the two-layer x94 state each flat swept " +
+      "artifact folds in at most 2 Spark jobs (its shuffle and its write, no " +
+      "footer-inference job); the probe is unchanged") {
+    import graft.operators.{Dedup, Maintenance}
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("source"), col("text"))
+    val dirs = Maintenance.MultiArtifactDirs(
+      Tables.scratchDir("graft_x96_jobs_spec").toString)
+    Maintenance.multiArtifactInit(spark, sf, dirs, docs.where(Dedup.idxBucket <= 7))
+    Maintenance.multiArtifactUpsert(spark, sf, dirs,
+      docs.where(Dedup.idxBucket >= 8),
+      docs.where(Dedup.idxDoomed).select(col("doc_id")), "ops")
+    def probeRows(): Seq[String] = Maintenance.multiArtifactProbe(spark, sf, dirs)
+      .collect().map(_.toString).sorted.toSeq
+    val before = probeRows()
+    val (fired, jobs) = jobsByLabel(
+      Maintenance.multiArtifactCompactIfNeeded(spark, dirs, maxLayers = 1))
+    assert(fired.size == 11 && fired.values.forall(identity),
+      s"sweep outcome: $fired")
+    val perArt = fired.keys.map(a => a -> jobs.getOrElse(s"x96 sweep: $a", 0)).toMap
+    val flat = fired.keySet - "ann" - "cluster_labels"
+    flat.foreach(a => assert(perArt(a) <= 2, s"$a swept in ${perArt(a)} jobs: $perArt"))
+    // the cell-granular index folds like a flat one; the label store's
+    // last-writer-wins fold pays one more shuffle (its window)
+    assert(perArt("ann") == 2 && perArt("cluster_labels") == 3, s"$perArt")
+    assert(probeRows() == before, "the compaction sweep changed an artifact's contents")
+  }
+
   test("writer lease: a second concurrent writer refuses loudly naming the holder; " +
       "a crashed holder's stale lease is taken over; release is nonce-scoped " +
       "(VERDICT r15 #4)") {

@@ -27,4 +27,33 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
+
+  /** `f`'s result and the Spark jobs it started, counted per
+    * `spark.job.description` (unlabelled jobs count under ""). A labelled
+    * no-op job fences the async listener bus, so every job `f` started
+    * is counted. */
+  def jobsByLabel[A](f: => A): (A, Map[String, Int]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val fenceDesc = "graft spec job-count fence"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description"))).getOrElse("") match {
+          case `fenceDesc` => fence.countDown()
+          case d => jobs.merge(d, 1, (a: Int, b: Int) => a + b); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      graft.operators.Maintenance.labeled(spark, fenceDesc)(
+        spark.sparkContext.parallelize(Seq(1), 1).count())
+      assert(fence.await(20, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the fence job")
+      import scala.jdk.CollectionConverters._
+      (r, jobs.asScala.toMap)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -287,4 +287,152 @@ class VersionedLayersSpec extends SparkSpec {
     assert(cleanBefore == cleanAfter,
       "replay rewrote clean leaves of an untouched tag")
   }
+
+  // Reads plan from the manifest alone: every publish records each
+  // staged tag's schema (`#schema` lines), so `read`, `readTags` and
+  // `readCells` run no Spark job to plan, and return exactly what footer
+  // inference over the same store dirs returns.
+
+  private def docs(ids: Range, stamp: Int): DataFrame =
+    ids.map(i => (i.toLong, stamp, s"t$i", Seq(i * 0.5, -i.toDouble)))
+      .toDF("doc_id", "stamp", "text", "v")
+
+  private def enc(ids: Range): DataFrame = ids.map(i => (i.toLong,
+    Seq(i.toLong), Seq(i % 16), i % 4)).toDF("vec_id", "u", "codes", "cell")
+
+  /** The inferred read of `live`: footer inference over each entry's
+    * store dir (partition discovery recovering `cell` for a leaf), plus
+    * its `batch` tag. */
+  private def inferred(dir: String, live: Seq[VersionedLayers.Layer]): DataFrame =
+    live.map { l =>
+      val path = new org.apache.hadoop.fs.Path(s"$dir/store", l.rel).toString
+      val df = l.cell match {
+        case None => spark.read.parquet(path)
+        case Some(_) => spark.read
+          .option("basePath", s"$dir/store/${l.rel.takeWhile(_ != '/')}")
+          .parquet(path).withColumn("cell", col("cell").cast("int"))
+      }
+      df.withColumn("batch", lit(l.tag))
+    }.reduce(_.unionByName(_))
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** `read(df)` planned with `expectJobs` Spark jobs and returns the
+    * inferred read's schema (names, types, order) and rows. */
+  private def assertRead(what: String, dir: String,
+                         live: Seq[VersionedLayers.Layer], expectJobs: Int)
+                        (read: => DataFrame): Unit = {
+    val (df, byLabel) = jobsByLabel { val d = read; d.schema; d }
+    val jobs = byLabel.values.sum
+    assert(jobs == expectJobs, s"$what planned with $jobs Spark jobs")
+    val ref = inferred(dir, live)
+    assert(df.schema == ref.schema,
+      s"$what schema ${df.schema.simpleString} vs inferred ${ref.schema.simpleString}")
+    assert(rowsOf(df) == rowsOf(ref), s"$what rows differ from the inferred read")
+  }
+
+  private def assertFlatReads(dir: String, expectJobs: Int = 0): Unit = {
+    val live = VersionedLayers.layers(spark, dir)
+    assertRead("read", dir, live, expectJobs)(
+      VersionedLayers.read(spark, dir)(fail("no live layers")))
+    val one = live.head.tag
+    assertRead(s"readTags($one)", dir, live.filter(_.tag == one), expectJobs)(
+      VersionedLayers.readTags(spark, dir, Set(one)))
+  }
+
+  private def manifestPath(dir: String): org.apache.hadoop.fs.Path = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new org.apache.hadoop.fs.Path(root, s"manifests/${
+      graft.streaming.StreamingIngest.readViewPointer(fs, root)}")
+  }
+
+  private def manifestLines(dir: String): Seq[String] = {
+    val p = manifestPath(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+    finally in.close()
+  }
+
+  private def schemaTags(dir: String): Set[String] =
+    manifestLines(dir).filter(_.startsWith("#schema\t"))
+      .map(_.split("\t")(1)).toSet
+
+  test("flat reads plan with 0 Spark jobs after publishLayer, a delete fold " +
+      "with a new tag, and compaction — and equal the inferred read") {
+    val dir = Tables.scratchDir("graft_vl_schema_flat").toString
+    VersionedLayers.init(spark, dir)
+    VersionedLayers.writeTagged(spark, dir, "a", docs(1 to 30, 1))
+    VersionedLayers.writeTagged(spark, dir, "b", docs(31 to 60, 2))
+    assert(schemaTags(dir) == Set("a", "b"))
+    assertFlatReads(dir)
+
+    // rewriteLayers: `a` is dirtied, `c` is a fresh tag, `b` is untouched
+    // and carries its schema forward
+    Dedup.indexUpsertFold(spark, dir, Seq(5L, 6L).toDF("doc_id"), "c",
+      docs(61 to 70, 3))
+    assert(VersionedLayers.layers(spark, dir).map(_.tag).sorted ==
+      Seq("a", "b", "c"))
+    assert(schemaTags(dir) == Set("a", "b", "c"))
+    assertFlatReads(dir)
+
+    Maintenance.compactLayers(spark, dir, "compacted", Seq.empty,
+      "graft_vl_schema_c_")
+    assert(VersionedLayers.layers(spark, dir).map(_.tag) == Seq("compacted"))
+    assert(schemaTags(dir) == Set("compacted"))
+    assertFlatReads(dir)
+  }
+
+  test("cell reads plan with 0 Spark jobs after a cell upsert with appendTag " +
+      "and equal the inferred read") {
+    val dir = Tables.scratchDir("graft_vl_schema_cell").toString
+    VersionedLayers.init(spark, dir)
+    VersionedLayers.writeTagged(spark, dir, "base", enc(1 to 40), Seq("cell"))
+    graft.operators.Similarity.ivfPqUpsertEncodedKeys(spark, dir,
+      Seq(5L, 6L).toDF("vec_id"),
+      "grow", enc(41 to 60))
+    val live = VersionedLayers.layers(spark, dir)
+    assert(live.map(_.tag).distinct.sorted == Seq("base", "grow"))
+    assert(schemaTags(dir) == Set("base", "grow"))
+    assertRead("read", dir, live, 0)(
+      VersionedLayers.read(spark, dir)(fail("no live layers")))
+    assertRead("readTags(grow)", dir, live.filter(_.tag == "grow"), 0)(
+      VersionedLayers.readTags(spark, dir, Set("grow")))
+    // one rewritten leaf (base, 1) and one untouched leaf (base, 0)
+    val pairs = Set(("base", 0), ("base", 1))
+    assertRead("readCells", dir,
+      live.filter(l => pairs.contains((l.tag, l.cell.get))), 0)(
+      VersionedLayers.readCells(spark, dir, pairs))
+  }
+
+  test("a manifest without schema lines, as written before schemas were " +
+      "recorded, still reads correctly; the next publish records only the " +
+      "tags it stages") {
+    val dir = Tables.scratchDir("graft_vl_schema_old").toString
+    VersionedLayers.init(spark, dir)
+    VersionedLayers.writeTagged(spark, dir, "a", docs(1 to 30, 1))
+    VersionedLayers.writeTagged(spark, dir, "b", docs(31 to 60, 2))
+    val m = manifestPath(dir)
+    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val kept = manifestLines(dir).filterNot(_.startsWith("#schema"))
+    val out = fs.create(m, true)
+    try out.write(kept.map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()
+    assert(schemaTags(dir).isEmpty)
+    // footer inference, one job per tag
+    val live = VersionedLayers.layers(spark, dir)
+    assertRead("read (old manifest)", dir, live, 2)(
+      VersionedLayers.read(spark, dir)(fail("no live layers")))
+
+    // a new tag records its schema; the old tags still infer theirs
+    VersionedLayers.writeTagged(spark, dir, "c", docs(61 to 70, 3))
+    assert(schemaTags(dir) == Set("c"))
+    assertRead("read (mixed manifest)", dir,
+      VersionedLayers.layers(spark, dir), 2)(
+      VersionedLayers.read(spark, dir)(fail("no live layers")))
+    assertRead("readTags(c)", dir,
+      VersionedLayers.layers(spark, dir).filter(_.tag == "c"), 0)(
+      VersionedLayers.readTags(spark, dir, Set("c")))
+  }
 }
