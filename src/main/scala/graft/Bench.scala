@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main: runs every declared query against SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Uses the `noop` sink so the entire plan executes
@@ -9,23 +9,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reliable-checkpoint FILES (x13's per-round snapshots when a
-      // checkpoint dir is set) are not reclaimed by default; the cleaner
-      // deletes them once their RDD is unreachable. Must be set at context
-      // creation — the ContextCleaner reads it once at startup.
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.local.dir", Tables.scratchLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.ensureParquetConf(spark)
-    Tables.registerScratchReaper()
+    val spark = Sessions.local(cpus.toInt)
     val subset = sys.env.get("SPARK_GRAFT_ONLY").exists(_.trim.nonEmpty)
     // Force-cold index cache for the artifact of record: a full bench run
     // evicts any pre-existing durable index cache BEFORE anything touches

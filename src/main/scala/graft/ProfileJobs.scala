@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Profiling main (guide §1): run ONE declared query with a listener that
   * attributes job wall time to `spark.job.description` labels (the
@@ -22,19 +21,7 @@ object ProfileJobs {
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.local.dir", Tables.scratchLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.ensureParquetConf(spark)
-    Tables.registerScratchReaper()
+    val spark = Sessions.local(cpus.toInt)
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val acc = new java.util.concurrent.ConcurrentHashMap[String, (Int, Double)]()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,19 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.local.dir", Tables.scratchLocalDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.ensureParquetConf(spark)
+    val spark = Sessions.local(cpus.toInt)
     Tables.keepScratch(outDir) // the dump must survive the scratch reaper
-    Tables.registerScratchReaper()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a11,x31 dumps a subset — local iteration on new
     // queries without re-running all ~100 (driver never sets it)

@@ -540,67 +540,6 @@ object Dedup {
     val labelsDir: String = s"$root/labels"
   }
 
-  /** Remove every edge incident to a doomed key from a batch=-layered
-    * (id1, id2) edge table — the TWO-ENDPOINT variant of
-    * [[dedupIndexDeleteKeys]] (an edge is addressed by either endpoint;
-    * one key column cannot name it). Same dirty-layer economics: layers
-    * holding no doomed endpoint keep their exact files, survivors stage
-    * under `partitionBy(batch)` dynamic overwrite, emptied layers drop,
-    * markerless replay no-ops. Returns the dirty layer tags. */
-  private[graft] def edgeIndexDeleteKeys(spark: SparkSession, idxDir: String,
-      keys: DataFrame,
-      gate: Int = Maintenance.keyGateDefault): Seq[String] = {
-    // versioned roots: the two-endpoint variant of the versioned branch
-    // in [[dedupIndexDeleteKeys]] — manifest-pruned dirty read, one
-    // staged rewrite, one manifest swap
-    if (VersionedLayers.isVersioned(spark, idxDir)) {
-      val live = VersionedLayers.layers(spark, idxDir)
-      if (live.isEmpty) return Seq.empty
-      val idx = VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
-      val k = broadcast(keys.select(col("doc_id")).distinct())
-      val touches = idx.join(k, col("id1") === col("doc_id"), "leftsemi")
-        .unionByName(idx.join(k, col("id2") === col("doc_id"), "leftsemi"))
-      val dirty = touches.select(col("batch")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      if (dirty.nonEmpty) {
-        val surv = VersionedLayers.readTags(spark, idxDir, dirty.toSet)
-          .join(k, col("id1") === col("doc_id"), "leftanti")
-          .join(k, col("id2") === col("doc_id"), "leftanti")
-        VersionedLayers.rewriteLayers(spark, idxDir, dirty, surv)
-      }
-      return dirty
-    }
-    Maintenance.guardInterruptedCompaction(spark, idxDir)
-    if (!hasVisibleData(spark, idxDir)) return Seq.empty
-    val idx = spark.read.parquet(idxDir)
-    val k = broadcast(keys.select(col("doc_id")).distinct())
-    val touches = idx.join(k, col("id1") === col("doc_id"), "leftsemi")
-      .unionByName(idx.join(k, col("id2") === col("doc_id"), "leftsemi"))
-    val dirtyDf = touches.select(col("batch")).distinct()
-    val dirty = dirtyDf.collect().map(_.getString(0)).toSeq.sorted
-    if (dirty.nonEmpty) {
-      val restricted = Maintenance.restrictToKeys(idx, "batch", dirtyDf,
-        dirty, gate)
-      val surv = snapshot(spark, restricted
-        .join(k, col("id1") === col("doc_id"), "leftanti")
-        .join(k, col("id2") === col("doc_id"), "leftanti"))
-      val staged = surv.select(col("batch")).distinct()
-        .collect().map(_.getString(0)).toSet
-      if (staged.nonEmpty)
-        VersionedLayers.sizedForWrite(surv, Seq("batch"))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(idxDir)
-      val fs = new org.apache.hadoop.fs.Path(idxDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val emptied = dirty.filterNot(staged)
-      emptied.foreach { t =>
-        fs.delete(new org.apache.hadoop.fs.Path(idxDir, s"batch=$t"), true); ()
-      }
-      if (emptied.nonEmpty) spark.catalog.refreshByPath(idxDir)
-    }
-    dirty
-  }
-
   /** Initialize the maintained cluster pipeline from a stored doc-id set:
     * the edge artifact's `batch=stored` layer holds the verified pairs
     * with BOTH endpoints stored, and the label store's `batch=base`
@@ -615,8 +554,8 @@ object Dedup {
       .join(broadcast(ids.select(col("doc_id").as("id1"))), Seq("id1"), "leftsemi")
       .join(broadcast(ids.select(col("doc_id").as("id2"))), Seq("id2"), "leftsemi")
       .select(col("id1"), col("id2"))
-    VersionedLayers.writeTagged(spark, dirs.edgesDir, "stored", storedEdges)
-    VersionedLayers.writeTagged(spark, dirs.labelsDir, "base",
+    VersionedLayers.publishLayer(spark, dirs.edgesDir, "stored", storedEdges)
+    VersionedLayers.publishLayer(spark, dirs.labelsDir, "base",
       ccLabelsOf(spark, ids,
           VersionedLayers.readAny(spark, dirs.edgesDir).drop("batch"))
         .select(col("doc_id"), col("cluster_id"), lit("U").as("op"),
@@ -649,8 +588,8 @@ object Dedup {
     * each kept row keeps its own `seq`, so the next fold's sequence
     * derivation is unchanged). The merged VIEW is identical before and
     * after by construction — [[mergeClusterLabels]] of the latest-U set
-    * is itself — so this slots into the shared crash-safe swap core as a
-    * content hook ([[Maintenance.compactLayersWith]]). */
+    * is itself — so this slots into the shared compaction core as a
+    * content hook ([[Maintenance.compactIfNeededWith]]). */
   private[graft] def clusterLabelsCompactContent(layered: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("seq").desc)
     layered.withColumn("rk", row_number().over(w))
@@ -685,7 +624,7 @@ object Dedup {
     * append and the label delta are tag-scoped overwrites, and every
     * derivation reads the artifact with the batch's OWN tag excluded
     * (the probeIndexKeepFirst rule) — so a replay recomputes the same
-    * delta bytes and clobbers itself. Final labels ≡ CC over the pairs
+    * delta and its layer replaces itself. Final labels ≡ CC over the pairs
     * among LIVE docs whatever the batch split — deletes remove a doc's
     * edges everywhere, inserts net of cancels never land, and an
     * insert's edge to a later-deleted doc leaves with that doc's delete
@@ -764,43 +703,37 @@ object Dedup {
       .distinct()
       .join(liveIds.select(col("doc_id").as("id1")), Seq("id1"), "leftsemi")
       .join(liveIds.select(col("doc_id").as("id2")), Seq("id2"), "leftsemi")) }
-    // edge-artifact mutations first (both idempotent), then the region
-    // recompute reads the post-mutation graph deterministically. On a
-    // versioned root the delete-survivor rewrite and the new batch layer
-    // stage in ONE partitionBy(batch) write and swap in ONE manifest
-    // publish (r17): readers see a single pre→post transition, and the
-    // fold pays one write job instead of two plus two pointer moves.
-    // Replay converges exactly as before — the dirty set never includes
-    // the batch's own tag (newEdges excludes doomed endpoints), and the
-    // staged tag layer clobbers a crashed attempt's entry.
-    if (VersionedLayers.isVersioned(spark, dirs.edgesDir)) {
-      val live = VersionedLayers.layers(spark, dirs.edgesDir)
-      val k = broadcast(kdf)
-      val dirty = knownDirtyEdges
-        .map(_.filter(live.map(_.tag).toSet).filterNot(_ == tag).sorted)
-        .getOrElse {
-        if (live.isEmpty) Seq.empty[String]
-        else {
-          val idx = VersionedLayers.readTags(spark, dirs.edgesDir,
-            live.map(_.tag).toSet)
-          idx.join(k, col("id1") === col("doc_id"), "leftsemi")
-            .unionByName(idx.join(k, col("id2") === col("doc_id"), "leftsemi"))
-            .select(col("batch")).distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-        } }
-      val fresh = newEdges.withColumn("batch", lit(tag))
-      val staged =
-        if (dirty.isEmpty) fresh
-        else VersionedLayers.readTags(spark, dirs.edgesDir, dirty.toSet)
-          .join(k, col("id1") === col("doc_id"), "leftanti")
-          .join(k, col("id2") === col("doc_id"), "leftanti")
-          .unionByName(fresh)
-      Maintenance.labeled(spark, "cluster: edge fold") {
-        VersionedLayers.rewriteLayers(spark, dirs.edgesDir, dirty :+ tag, staged) }
-    } else {
-      edgeIndexDeleteKeys(spark, dirs.edgesDir, kdf)
-      VersionedLayers.writeTagged(spark, dirs.edgesDir, tag, newEdges)
-    }
+    // edge-artifact mutation first (idempotent), then the region
+    // recompute reads the post-mutation graph deterministically. The
+    // delete-survivor rewrite and the new batch layer stage in ONE
+    // partitionBy(batch) write and swap in ONE manifest publish (r17):
+    // readers see a single pre→post transition. Replay converges — the
+    // dirty set never includes the batch's own tag (newEdges excludes
+    // doomed endpoints), and the staged tag layer replaces a crashed
+    // attempt's entry.
+    val live = VersionedLayers.layers(spark, dirs.edgesDir)
+    val k = broadcast(kdf)
+    val dirty = knownDirtyEdges
+      .map(_.filter(live.map(_.tag).toSet).filterNot(_ == tag).sorted)
+      .getOrElse {
+      if (live.isEmpty) Seq.empty[String]
+      else {
+        val idx = VersionedLayers.readTags(spark, dirs.edgesDir,
+          live.map(_.tag).toSet)
+        idx.join(k, col("id1") === col("doc_id"), "leftsemi")
+          .unionByName(idx.join(k, col("id2") === col("doc_id"), "leftsemi"))
+          .select(col("batch")).distinct()
+          .collect().map(_.getString(0)).toSeq.sorted
+      } }
+    val fresh = newEdges.withColumn("batch", lit(tag))
+    val staged =
+      if (dirty.isEmpty) fresh
+      else VersionedLayers.readTags(spark, dirs.edgesDir, dirty.toSet)
+        .join(k, col("id1") === col("doc_id"), "leftanti")
+        .join(k, col("id2") === col("doc_id"), "leftanti")
+        .unionByName(fresh)
+    Maintenance.labeled(spark, "cluster: edge fold") {
+      VersionedLayers.rewriteLayers(spark, dirs.edgesDir, dirty :+ tag, staged) }
     // dirty clusters: every component a doomed doc or a new edge's
     // stored endpoint belongs to — O(batch) semi-joins, never the graph
     val dirtyLbls = broadcast(priorLabels
@@ -831,7 +764,7 @@ object Dedup {
     // ONE delta layer: the region's relabels + the doomed tombstones —
     // O(region + batch) rows, never the corpus
     Maintenance.labeled(spark, "cluster: label delta") {
-      VersionedLayers.writeTagged(spark, dirs.labelsDir, tag,
+      VersionedLayers.publishLayer(spark, dirs.labelsDir, tag,
         dirtyLabels.select(col("doc_id"), col("cluster_id"), lit("U").as("op"))
           .unionByName(priorLabels.join(broadcast(kdf), Seq("doc_id"), "leftsemi")
             .select(col("doc_id"), lit(null).cast("long").as("cluster_id"),
@@ -1014,59 +947,36 @@ object Dedup {
     * semantics oracle-checked; this is the disk-backed loop a pipeline
     * actually schedules. Near-dup probing persists the shingle prefix
     * index the same way. */
-  /** Read a `batch=`-partitioned index dir with this invocation's own tag
-    * excluded, or `empty` when the index GENUINELY does not exist yet
-    * (path missing / no files). Deliberately an existence probe, not an
-    * exception catch: a structurally broken index (legacy flat layout
-    * without the `batch` column, mixed directory schemes, corrupt footers)
-    * must PROPAGATE — swallowing it as "first run" would silently drop
-    * the entire prior corpus from the probe and re-admit every duplicate. */
-  /** "Exists" must mean VISIBLE DATA, not just a directory entry: a
-    * crashed first write leaves _temporary/.staging debris (or an empty
-    * batch= dir after overwrite cleared it), and treating that as a real
-    * index would make every retry fail on schema inference instead of
-    * self-healing — the readers skip hidden files, so should this probe.
-    * Shared by [[readBatchIndex]] (probes) and [[dedupIndexDeleteKeys]]
-    * (the delete fold — a delete arriving before any append, or a batch
-    * that emptied every layer, must be a structural no-op, not a schema
-    * inference crash in the operational loops). */
-  private[graft] def hasVisibleData(spark: SparkSession, dir: String): Boolean = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    def hasVisibleFile(fs: FileSystem, p: Path): Boolean =
-      fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".") &&
-          (s.isFile || hasVisibleFile(fs, s.getPath))
-      }
-    val p = new Path(dir)
-    hasVisibleFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
+  /** Read a `batch=`-layered index with this invocation's own tag
+    * excluded, or `empty` when no publish has reached it yet. A root
+    * holding data without a pointer (the old in-place layout, a flat
+    * index) is refused by [[VersionedLayers]], never read
+    * as "first run" — that would silently drop the entire prior corpus
+    * from the probe and re-admit every duplicate. */
   private[graft] def readBatchIndex(spark: SparkSession, dir: String,
                                     batchTag: String)
-                                   (empty: => DataFrame): DataFrame = {
-    // versioned roots: own-tag exclusion is manifest pruning, and no
-    // trash protocol exists to guard (VersionedLayers' crash discipline)
-    if (VersionedLayers.isVersioned(spark, dir))
-      return VersionedLayers.read(spark, dir, Some(batchTag))(empty)
-        .drop("batch")
-    Maintenance.guardInterruptedCompaction(spark, dir)
-    if (!hasVisibleData(spark, dir)) empty
-    else spark.read.parquet(dir).where(col("batch") =!= batchTag).drop("batch")
-  }
+                                   (empty: => DataFrame): DataFrame =
+    VersionedLayers.read(spark, dir, Some(batchTag))(empty).drop("batch")
 
-  /** The shared probe-and-keep-first step behind both disk-backed dedup
-    * forms ([[dedupAgainstIndex]] and the streaming
-    * `StreamingIngest.dedupIndexBatch`): anti-join `withFp` against every
-    * OTHER batch's fingerprints (own tag excluded — a retry re-probes
-    * everything except its half-done self), then keep one doc per
-    * fingerprint within the batch (min doc_id, x1's rule). One copy of the
-    * replay-idempotence contract, one place to fix it. */
+  /** The shared probe-and-keep-first step behind every disk-backed exact
+    * dedup ([[dedupAgainstIndex]], the streaming
+    * `StreamingIngest.dedupIndexBatch`, the upsert folds): anti-join
+    * `withFp` against every OTHER batch's fingerprints (own tag excluded —
+    * a retry re-probes everything except its half-done self), then keep
+    * one doc per fingerprint within the batch (min doc_id, x1's rule).
+    * With `deleteKeys` (distinct `doc_id`s) the probe runs against the
+    * POST-DELETE view — the stored keepers the keys name are anti-joined
+    * away first, row-identical to probing after a separate delete
+    * publish. One copy of the replay-idempotence contract, one place to
+    * fix it. */
   private[graft] def probeIndexKeepFirst(withFp: DataFrame, indexDir: String,
-                                         batchTag: String): DataFrame = {
+                                         batchTag: String,
+                                         deleteKeys: Option[DataFrame] = None): DataFrame = {
     val spark = withFp.sparkSession
-    val existing = readBatchIndex(spark, indexDir, batchTag)(
-        spark.range(0).select(col("id").as("fp")))
+    val prior = readBatchIndex(spark, indexDir, batchTag)(
+        spark.range(0).select(col("id").as("fp"), col("id").as("doc_id")))
+    val existing = deleteKeys
+      .fold(prior)(k => prior.join(broadcast(k), Seq("doc_id"), "leftanti"))
       .select(col("fp").as("seen_fp"))
     withFp
       .join(existing, col("fp") === col("seen_fp"), "left_anti")
@@ -1086,9 +996,9 @@ object Dedup {
     // truncation makes both hazards structurally impossible and computes
     // the dedup exactly once.
     val survivors = snapshot(spark, probeIndexKeepFirst(withFp, indexDir, batchTag))
-    // overwrite of the tag-scoped partition: a retry clobbers its own prior
-    // attempt byte-for-byte instead of appending a second copy
-    VersionedLayers.writeTagged(spark, indexDir, batchTag,
+    // tag-scoped publish: a retry replaces its own prior attempt's layer
+    // instead of appending a second copy
+    VersionedLayers.publishLayer(spark, indexDir, batchTag,
       survivors.select(col("fp"), col("doc_id")))
     survivors
   }
@@ -1160,20 +1070,19 @@ object Dedup {
     // the artifact a caller appending with different sizes only fails at
     // merge time with no hint of which layer drifted — so validate HERE,
     // against the stored params, before the incompatible layer can land
-    if (hasVisibleData(spark, idxDir)) {
-      val stored = spark.read.parquet(idxDir)
-        .where(col("batch") =!= tag) // a retry re-validates against OTHERS
-        .select(col("batch"), col("items"), col("bits"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val drifted = stored.filter(s => s._2 != items || s._3 != bits)
-      require(drifted.isEmpty,
-        s"bloomIndexAppend(batch=$tag, items=$items, bits=$bits) is " +
-          s"merge-incompatible with stored layer(s) " +
-          drifted.map(s => s"batch=${s._1}(items=${s._2}, bits=${s._3})")
-            .mkString(", "))
-    }
-    Seq((bytes, items, bits)).toDF("bf", "items", "bits").coalesce(1)
-      .write.mode("overwrite").parquet(s"$idxDir/batch=$tag")
+    // a retry re-validates against OTHER layers only
+    val stored = VersionedLayers.read(spark, idxDir, Some(tag))(
+        Seq.empty[(String, Long, Long)].toDF("batch", "items", "bits"))
+      .select(col("batch"), col("items"), col("bits"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val drifted = stored.filter(s => s._2 != items || s._3 != bits)
+    require(drifted.isEmpty,
+      s"bloomIndexAppend(batch=$tag, items=$items, bits=$bits) is " +
+        s"merge-incompatible with stored layer(s) " +
+        drifted.map(s => s"batch=${s._1}(items=${s._2}, bits=${s._3})")
+          .mkString(", "))
+    VersionedLayers.publishLayer(spark, idxDir, tag,
+      Seq((bytes, items, bits)).toDF("bf", "items", "bits").coalesce(1))
   }
 
   /** Read every layer of a [[bloomIndexAppend]] index and fold them into
@@ -1185,12 +1094,12 @@ object Dedup {
   private[graft] def bloomIndexMerged(spark: SparkSession,
                                       idxDir: String): Array[Byte] = {
     import org.apache.spark.util.sketch.BloomFilter
-    val rows = spark.read.parquet(idxDir)
+    val rows = VersionedLayers.read(spark, idxDir)(
+        throw new IllegalArgumentException(s"no Bloom layers under $idxDir"))
       .select(col("batch"), col("bf"), col("items"), col("bits"))
       .collect()
       .map(r => (r.getString(0), r.getAs[Array[Byte]](1),
         r.getLong(2), r.getLong(3)))
-    require(rows.nonEmpty, s"no Bloom layers under $idxDir")
     val combos = rows.map(r => (r._3, r._4)).distinct
     require(combos.size == 1,
       s"merge-incompatible Bloom layers under $idxDir: " +
@@ -1317,18 +1226,16 @@ object Dedup {
     * keys against the index itself — O(index), narrow columns, never the
     * corpus: keys naming rows the index never kept (ingest-time
     * duplicates, or keys replayed after their layer was already
-    * rewritten) simply match nothing. Under `gate` layers the survivor
-    * fetch is a compiled partition predicate (prunes at the scan), past
-    * it a broadcast semi-join on the tag. Survivors stage under
-    * `partitionBy(batch)`, dynamic overwrite replaces exactly the staged
-    * layers, fully-emptied layers are dropped explicitly, and the
-    * listing cache refreshed. Clean layers keep their exact files
-    * (spec-pinned). Replay-idempotent without markers (t20's argument):
-    * a replayed batch's keys are already absent, the dirty set is empty,
-    * no file is touched. Same single-writer / no-concurrent-reader
-    * contract as the index swaps it mirrors. Returns the dirty layer
-    * tags — bounded by the layer count, the same O(metadata) class as
-    * x75's partition keys.
+    * rewritten) simply match nothing. The dirty layers' survivors (a
+    * manifest-pruned read) stage in one write and swap in one manifest
+    * publish ([[VersionedLayers.rewriteLayers]]); fully-emptied layers
+    * leave the manifest, clean layers keep their exact store dirs, and
+    * concurrent readers keep the pre-delete snapshot. Replay-idempotent
+    * without markers (t20's argument): a replayed batch's keys are
+    * already absent, the dirty set is empty, nothing is published. A
+    * delete before any publish is a structural no-op. Returns the dirty
+    * layer tags — bounded by the layer count, the same O(metadata) class
+    * as x75's partition keys.
     *
     * Semantics note (the contract a caller must know): deleting a keeper
     * does NOT resurrect the duplicates it suppressed — they were dropped
@@ -1341,80 +1248,26 @@ object Dedup {
     * applied to the dedup index artifact. */
   private[graft] def dedupIndexDeleteKeys(spark: SparkSession, idxDir: String,
       keys: DataFrame, keyCol: String = "doc_id",
-      gate: Int = Maintenance.keyGateDefault,
       knownDirty: Option[Seq[String]] = None): Seq[String] = {
-    // versioned roots: same dirty-layer economics, but the rewrite lands
-    // as NEW store dirs + one manifest swap — concurrent readers keep the
-    // pre-delete snapshot (VERDICT r16 #2), and no snapshot() of the
-    // survivors is needed because source and destination never collide
-    if (VersionedLayers.isVersioned(spark, idxDir)) {
-      val live = VersionedLayers.layers(spark, idxDir)
-      if (live.isEmpty) return Seq.empty
-      val liveTags = live.map(_.tag).toSet
-      val k = broadcast(keys.select(col(keyCol)).distinct())
-      // `knownDirty` = the caller already ran the dirty-tag detection
-      // (the near triple's three sub-indexes detect all at once — one
-      // action instead of three); intersect with the live manifest so a
-      // tag another sub-index holds but this one doesn't is skipped
-      val dirty = knownDirty match {
-        case Some(tags) => tags.filter(liveTags).sorted
-        case None => VersionedLayers.readTags(spark, idxDir, liveTags)
-          .join(k, Seq(keyCol), "leftsemi")
-          .select(col("batch")).distinct()
-          .collect().map(_.getString(0)).toSeq.sorted
-      }
-      if (dirty.nonEmpty) {
-        val surv = VersionedLayers.readTags(spark, idxDir, dirty.toSet)
-          .join(k, Seq(keyCol), "leftanti")
-        VersionedLayers.rewriteLayers(spark, idxDir, dirty, surv)
-      }
-      return dirty
-    }
-    Maintenance.guardInterruptedCompaction(spark, idxDir)
-    // delete-before-any-append, or a prior batch that emptied every layer:
-    // no visible data ⇒ nothing to address ⇒ structural no-op (the same
-    // existence-not-exception contract as readBatchIndex — a MALFORMED
-    // index still propagates through the read below)
-    if (!hasVisibleData(spark, idxDir)) return Seq.empty
-    val idx = spark.read.parquet(idxDir)
+    val live = VersionedLayers.layers(spark, idxDir)
+    if (live.isEmpty) return Seq.empty
+    val liveTags = live.map(_.tag).toSet
     val k = broadcast(keys.select(col(keyCol)).distinct())
-    val dirtyDf = knownDirty match {
-      case Some(tags) =>
-        import spark.implicits._
-        tags.toDF("batch")
-      case None => idx.join(k, Seq(keyCol), "leftsemi")
+    // `knownDirty` = the caller already ran the dirty-tag detection
+    // (the near triple's three sub-indexes detect all at once — one
+    // action instead of three); intersect with the live manifest so a
+    // tag another sub-index holds but this one doesn't is skipped
+    val dirty = knownDirty match {
+      case Some(tags) => tags.filter(liveTags).sorted
+      case None => VersionedLayers.readTags(spark, idxDir, liveTags)
+        .join(k, Seq(keyCol), "leftsemi")
         .select(col("batch")).distinct()
+        .collect().map(_.getString(0)).toSeq.sorted
     }
-    val dirty = knownDirty.map(_.sorted)
-      .getOrElse(dirtyDf.collect().map(_.getString(0)).toSeq.sorted)
     if (dirty.nonEmpty) {
-      val restricted = Maintenance.restrictToKeys(idx, "batch", dirtyDf,
-        dirty, gate)
-      // SNAPSHOT the survivors (lineage truncation) instead of staging
-      // them through a scratch parquet roundtrip: the dynamic overwrite
-      // below rewrites idxDir while the survivor plan READS idxDir, so
-      // the lineage must be severed first — but severing it into executor
-      // blocks costs one materialization where the stage dir cost a full
-      // write + re-read (the t24 orchestration-I/O cut, VERDICT r14 #3).
-      // Durability is unchanged: the only mutation of the artifact is
-      // still the single dynamic overwrite, so both crash windows and the
-      // markerless replay argument carry over verbatim.
-      val surv = snapshot(spark, restricted.join(k, Seq(keyCol), "leftanti"))
-      // the staged-layer set is one distinct over the materialized
-      // survivors — bounded by the dirty-layer count
-      val staged = surv.select(col("batch")).distinct()
-        .collect().map(_.getString(0)).toSet
-      if (staged.nonEmpty)
-        VersionedLayers.sizedForWrite(surv, Seq("batch"))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch").parquet(idxDir)
-      val fs = new org.apache.hadoop.fs.Path(idxDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val emptied = dirty.filterNot(staged)
-      emptied.foreach { t =>
-        fs.delete(new org.apache.hadoop.fs.Path(idxDir, s"batch=$t"), true); ()
-      }
-      if (emptied.nonEmpty) spark.catalog.refreshByPath(idxDir)
+      val surv = VersionedLayers.readTags(spark, idxDir, dirty.toSet)
+        .join(k, Seq(keyCol), "leftanti")
+      VersionedLayers.rewriteLayers(spark, idxDir, dirty, surv)
     }
     dirty
   }
@@ -1423,108 +1276,44 @@ object Dedup {
     * index (VERDICT r17 #1 — the cluster edge fold's single-transition
     * form generalized to every upsert pair): stage the dirty layers'
     * delete-survivors AND the batch's new `batch=<tag>` layer in ONE
-    * write, publish ONCE. A versioned root swaps the manifest once
-    * (readers observe a single pre→post transition — both consistent
-    * states; the deletes-applied intermediate the separate publishes
-    * exposed was never read by any declared query); a legacy root runs
-    * one dynamic partition overwrite covering the dirty layers and the
-    * tag layer together. Per micro-batch the artifact pays one write job
-    * and one pointer move where the delete-publish/append-publish pair
-    * paid two of each — the t22–t30 band's per-publish fixed cost,
-    * halved at the source.
+    * write, swap the manifest ONCE — readers observe a single pre→post
+    * transition, and per micro-batch the artifact pays one write job and
+    * one pointer move where a delete-publish/append-publish pair paid
+    * two of each.
     *
     * `newRows` must be net of same-batch cancels and derived against the
     * POST-DELETE index view — the caller probes
-    * `readBatchIndex(...).join(keys, "leftanti")`, row-identical to the
+    * `readBatchIndex(...).join(keys, "leftanti")` (or
+    * [[probeIndexKeepFirst]] with its delete keys), row-identical to the
     * state the append leg saw after a separate delete publish (the
     * delete removes exactly the key-matching rows). Replay converges
-    * exactly as the pair did (t20 + x16): a replayed batch's keys are
-    * already absent (dirty = ∅), its own tag is excluded from dirty
-    * detection, the re-derived tag layer clobbers its prior entry, and a
-    * crash mid-write leaves an unreferenced stage dir (versioned) or
-    * uncommitted temporaries (legacy). Returns the dirty tags. */
+    * (t20 + x16): a replayed batch's keys are already absent (dirty =
+    * ∅), its own tag is excluded from dirty detection, the re-derived tag
+    * layer replaces its prior entry, and a crash mid-write leaves an
+    * unreferenced stage dir. Returns the dirty tags. */
   private[graft] def indexUpsertFold(spark: SparkSession, idxDir: String,
       keys: DataFrame, tag: String, newRows: DataFrame,
       keyCol: String = "doc_id",
-      gate: Int = Maintenance.keyGateDefault,
       knownDirty: Option[Seq[String]] = None): Seq[String] = {
     val k = broadcast(keys.select(col(keyCol)).distinct())
     val fresh = newRows.withColumn("batch", lit(tag))
-    if (VersionedLayers.isVersioned(spark, idxDir)) {
-      val live = VersionedLayers.layers(spark, idxDir)
-        .filterNot(_.tag == tag)
-      val dirty = knownDirty
-        .map(_.filter(live.map(_.tag).toSet).sorted)
-        .getOrElse {
-          if (live.isEmpty) Seq.empty
-          else VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
-            .join(k, Seq(keyCol), "leftsemi")
-            .select(col("batch")).distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-        }
-      val staged =
-        if (dirty.isEmpty) fresh
-        else VersionedLayers.readTags(spark, idxDir, dirty.toSet)
-          .join(k, Seq(keyCol), "leftanti")
-          .unionByName(fresh)
-      VersionedLayers.rewriteLayers(spark, idxDir, dirty :+ tag, staged)
-      return dirty
-    }
-    Maintenance.guardInterruptedCompaction(spark, idxDir)
-    // delete-before-any-append / first batch of a fresh index: nothing to
-    // fold, the new layer is the whole staged set
-    val idxOpt =
-      if (hasVisibleData(spark, idxDir)) Some(spark.read.parquet(idxDir))
-      else None
-    val dirtyDf = idxOpt match {
-      case None => spark.range(0).select(col("id").cast("string").as("batch"))
-      case Some(idx) => knownDirty match {
-        case Some(tags) =>
-          import spark.implicits._
-          tags.filterNot(_ == tag).toDF("batch")
-        case None => idx.where(col("batch") =!= tag)
+    val live = VersionedLayers.layers(spark, idxDir)
+      .filterNot(_.tag == tag)
+    val dirty = knownDirty
+      .map(_.filter(live.map(_.tag).toSet).sorted)
+      .getOrElse {
+        if (live.isEmpty) Seq.empty
+        else VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
           .join(k, Seq(keyCol), "leftsemi")
           .select(col("batch")).distinct()
+          .collect().map(_.getString(0)).toSeq.sorted
       }
-    }
-    val dirty = knownDirty.map(_.filterNot(_ == tag).sorted).getOrElse(
-      dirtyDf.collect().map(_.getString(0)).toSeq.sorted)
-    // SNAPSHOT the dirty layers' survivors before the overwrite (the
-    // dedupIndexDeleteKeys argument: the overwrite rewrites exactly the
-    // partitions their plan reads). The FRESH side deliberately rides
-    // the write un-checkpointed — its probe reads partitions the
-    // overwrite does not touch until job commit, the same safety the
-    // separate append always had; checkpointing it too made t27's
-    // embedding-heavy batch pay a whole extra materialization.
-    val (survTags, stagedSurv) = idxOpt match {
-      case Some(idx) if dirty.nonEmpty =>
-        val s = snapshot(spark,
-          Maintenance.restrictToKeys(idx, "batch", dirtyDf, dirty, gate)
-            .join(k, Seq(keyCol), "leftanti"))
-        (s.select(col("batch")).distinct()
-          .collect().map(_.getString(0)).toSet, s)
-      case _ => (Set.empty[String], null)
-    }
     val staged =
-      if (stagedSurv == null) fresh else stagedSurv.unionByName(fresh)
-    VersionedLayers.sizedForWrite(staged, Seq("batch"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(idxDir)
-    val fs = new org.apache.hadoop.fs.Path(idxDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val emptied = dirty.filterNot(survTags)
-    emptied.foreach { t =>
-      fs.delete(new org.apache.hadoop.fs.Path(idxDir, s"batch=$t"), true); ()
-    }
-    // degenerate end state (everything deleted, nothing admitted): the
-    // dynamic partitionBy write of 0 rows stages NO file at all, where
-    // the old direct-path append left a footer-only part file that kept
-    // the artifact schema-readable (the t23 divergence drill reads it
-    // bare) — land that same marker when the fold emptied the artifact
-    if (!hasVisibleData(spark, idxDir))
-      newRows.where(lit(false)).coalesce(1).write.mode("overwrite")
-        .parquet(s"$idxDir/batch=$tag")
-    if (emptied.nonEmpty) spark.catalog.refreshByPath(idxDir)
+      if (dirty.isEmpty) fresh
+      else VersionedLayers.readTags(spark, idxDir, dirty.toSet)
+        .join(k, Seq(keyCol), "leftanti")
+        .unionByName(fresh)
+    VersionedLayers.rewriteLayers(spark, idxDir, dirty :+ tag, staged)
     dirty
   }
 
@@ -1543,7 +1332,7 @@ object Dedup {
     dedupAgainstIndex(spark, docs.where(idxBucket <= 7), idx, "prior")
     dedupAgainstIndex(spark, docs.where(idxBucket >= 8), idx, "fresh")
     dedupIndexDeleteKeys(spark, idx, docs.where(idxDoomed).select(col("doc_id")))
-    spark.read.parquet(idx).select(col("doc_id"), col("fp"))
+    VersionedLayers.readAny(spark, idx).select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))
   }
 
@@ -1567,15 +1356,7 @@ object Dedup {
     val withFp = inserts
       .join(broadcast(k), Seq("doc_id"), "leftanti")
       .withColumn("fp", TextFns.polyHash(col("text")))
-    val existing = readBatchIndex(spark, idxDir, batchTag)(
-        spark.range(0).select(col("id").as("fp"), col("id").as("doc_id")))
-      .join(broadcast(k), Seq("doc_id"), "leftanti")
-      .select(col("fp").as("seen_fp"))
-    val surv = withFp
-      .join(existing, col("fp") === col("seen_fp"), "left_anti")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("fp")).orderBy(col("doc_id"))))
-      .where(col("rk") === 1).drop("rk")
+    val surv = probeIndexKeepFirst(withFp, idxDir, batchTag, Some(k))
     indexUpsertFold(spark, idxDir, keys, batchTag,
       surv.select(col("fp"), col("doc_id")))
     ()
@@ -1601,18 +1382,17 @@ object Dedup {
     dedupIndexUpsertKeys(spark, idx,
       docs.where(idxBucket >= 8).select(col("doc_id"), col("text")),
       docs.where(idxDoomed).select(col("doc_id")), "ins")
-    spark.read.parquet(idx).select(col("doc_id"), col("fp"))
+    VersionedLayers.readAny(spark, idx).select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))
   }
 
   /** X88 — the dedup index through a LAYER COMPACTION: x86's full
     * maintenance history (two appends, a delete batch) runs first, then
     * the surviving layers fold into one through the shared
-    * [[Maintenance.compactLayers]] core (x85's crash discipline, no
-    * sub-partitioning below the layer key) and the query returns the
-    * compacted index. The oracle is x86's verbatim — the green hash
-    * states compaction is a pure re-layout — and the spec pins the
-    * crash drills on this layout. With append (x61/t14), delete (x86),
+    * [[VersionedLayers.compactVersioned]] core (no sub-partitioning below the
+    * layer key) and the query returns the compacted index. The oracle is
+    * x86's verbatim — the green hash states compaction is a pure
+    * re-layout. With append (x61/t14), delete (x86),
     * upsert (x87), streaming (t23), and compaction, the dedup index now
     * has the same complete operational lifecycle as the layered ANN
     * index. */
@@ -1622,9 +1402,8 @@ object Dedup {
     dedupAgainstIndex(spark, docs.where(idxBucket <= 7), idx, "prior")
     dedupAgainstIndex(spark, docs.where(idxBucket >= 8), idx, "fresh")
     dedupIndexDeleteKeys(spark, idx, docs.where(idxDoomed).select(col("doc_id")))
-    Maintenance.compactLayers(spark, idx, "compacted", Seq.empty,
-      "graft_x88_stage_")
-    spark.read.parquet(idx).select(col("doc_id"), col("fp"))
+    VersionedLayers.compactVersioned(spark, idx, "compacted", Seq.empty)(identity)
+    VersionedLayers.readAny(spark, idx).select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))
   }
 
@@ -1647,12 +1426,12 @@ object Dedup {
     dedupAgainstIndex(spark, docs.where(idxBucket >= 8), idx, "fresh")
     dedupIndexDeleteKeys(spark, idx, docs.where(idxDoomed).select(col("doc_id")))
     require(!Maintenance.compactIfNeeded(spark, idx, "compacted", Seq.empty,
-      "graft_x95_stage_", maxLayers = 16),
+      maxLayers = 16),
       "x95: policy fired below its thresholds")
     require(Maintenance.compactIfNeeded(spark, idx, "compacted", Seq.empty,
-      "graft_x95_stage_", maxLayers = 1),
+      maxLayers = 1),
       "x95: policy did not fire above the layer threshold")
-    spark.read.parquet(idx).select(col("doc_id"), col("fp"))
+    VersionedLayers.readAny(spark, idx).select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))
   }
 
@@ -1661,8 +1440,8 @@ object Dedup {
     * `sh/`, each `batch=`-layered): one [[dedupIndexDeleteKeys]] swap per
     * sub-index — every sub-index carries the keeper's `doc_id`, so the
     * same key column addresses all three and the swap core is shared
-    * verbatim (clean-layer file identity, emptied-layer drops, markerless
-    * replay — all inherited). Removing the doomed keeper's prefix
+    * verbatim (clean-layer store-dir identity, emptied-layer drops,
+    * markerless replay — all inherited). Removing the doomed keeper's prefix
     * postings and shingle array is what makes FUTURE near-dups of a
     * retracted document admissible again: the candidate join can no
     * longer reach it. Requires a built index (all three sub-dirs exist).
@@ -1680,16 +1459,10 @@ object Dedup {
     val subs = NearSubIndexes
     val perSub = subs.flatMap { sub =>
       val dir = s"$indexDir/$sub"
+      val live = VersionedLayers.layers(spark, dir)
       val rows =
-        if (VersionedLayers.isVersioned(spark, dir)) {
-          val live = VersionedLayers.layers(spark, dir)
-          if (live.isEmpty) None
-          else Some(VersionedLayers.readTags(spark, dir, live.map(_.tag).toSet))
-        } else {
-          Maintenance.guardInterruptedCompaction(spark, dir)
-          if (!hasVisibleData(spark, dir)) None
-          else Some(spark.read.parquet(dir))
-        }
+        if (live.isEmpty) None
+        else Some(VersionedLayers.readTags(spark, dir, live.map(_.tag).toSet))
       rows.map(df => sub -> df.select(col(keyCol), col("batch"))
         .join(kb, Seq(keyCol), "leftsemi")
         .select(lit(sub).as("sub"), col("batch")).distinct())
@@ -1703,8 +1476,7 @@ object Dedup {
   }
 
   private[graft] def nearDedupIndexDeleteKeys(spark: SparkSession,
-      indexDir: String, keys: DataFrame,
-      gate: Int = Maintenance.keyGateDefault): Map[String, Seq[String]] = {
+      indexDir: String, keys: DataFrame): Map[String, Seq[String]] = {
     // derive the key set ONCE (lineage-truncated — the ops-batch scan
     // behind `keys` must not re-run per sub-index), then run the three
     // independent swaps concurrently: same final state as the sequential
@@ -1717,7 +1489,7 @@ object Dedup {
     Maintenance.inParallel(NearSubIndexes.map(sub => () =>
       sub -> Maintenance.labeled(spark, s"near: $sub delete") {
         dedupIndexDeleteKeys(spark, s"$indexDir/$sub", k,
-          keyCol = keyCol, gate = gate,
+          keyCol = keyCol,
           knownDirty = Some(dirtyBySub.getOrElse(sub, Seq.empty))) })).toMap
   }
 
@@ -1740,7 +1512,7 @@ object Dedup {
     * matches of a SURVIVING keeper. */
   def nearDedupIndexUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val idx = nearDedupMaintained(spark, sfDir, "graft_x89_idx")
-    spark.read.parquet(s"$idx/fp").select(col("doc_id"), col("fp"))
+    VersionedLayers.readAny(spark, s"$idx/fp").select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))
   }
 
@@ -1769,7 +1541,7 @@ object Dedup {
   }
 
   /** X90 — x89's history through a LAYER COMPACTION of all three
-    * sub-indexes (the flat-layout [[Maintenance.compactLayers]], one call
+    * sub-indexes (the flat-layout [[VersionedLayers.compactVersioned]], one call
     * per sub-index): t14-style streams grow one layer per micro-batch in
     * EACH sub-index, so the probe's three reads each union N small files
     * until this maintenance pass folds them. Pure re-layout — the oracle
@@ -1778,9 +1550,8 @@ object Dedup {
   def nearDedupIndexCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val idx = nearDedupMaintained(spark, sfDir, "graft_x90_idx")
     Seq("fp", "pfx", "sh").foreach(sub =>
-      Maintenance.compactLayers(spark, s"$idx/$sub", "compacted", Seq.empty,
-        "graft_x90_stage_"))
-    spark.read.parquet(s"$idx/fp").select(col("doc_id"), col("fp"))
+      VersionedLayers.compactVersioned(spark, s"$idx/$sub", "compacted", Seq.empty)(identity))
+    VersionedLayers.readAny(spark, s"$idx/fp").select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))
   }
 

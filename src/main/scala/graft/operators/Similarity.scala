@@ -14,19 +14,21 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** The probe vector, fetched once (1 row — the query vector every vector
-    * search system ships to workers) and inlined as a literal, so the main
-    * scan needs no join at all: Scan → Project → TakeOrderedAndProject. */
-  private def probeVec(spark: SparkSession, sfDir: String, queryId: Long) =
-    typedLit(Tables.embeddings(spark, sfDir)
+  /** The probe vector, fetched once per query (1 row — the query vector
+    * every vector search system ships to workers). Callers inline it as a
+    * literal, so the main scan needs no join at all: Scan → Project →
+    * TakeOrderedAndProject. */
+  private def queryVec(spark: SparkSession, sfDir: String,
+                       queryId: Long): Seq[Float] =
+    Tables.embeddings(spark, sfDir)
       .where(col("vec_id") === queryId)
-      .select(col("embedding")).head().getSeq[Float](0))
+      .select(col("embedding")).head().getSeq[Float](0)
 
   /** X6 — exact brute-force cosine top-k: the correctness baseline every
     * ANN variant is judged against. One scan, the dot product fused into
     * it, one per-partition-heap top-k. */
   def bruteTopK(spark: SparkSession, sfDir: String, queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val q = probeVec(spark, sfDir, queryId)
+    val q = typedLit(queryVec(spark, sfDir, queryId))
     Tables.embeddings(spark, sfDir)
       .where(col("vec_id") =!= queryId)
       .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -382,7 +384,7 @@ object Similarity {
     * cosine, exact cosine rank over the pruned cells' vectors. */
   private[graft] def ivfProbe(spark: SparkSession, sfDir: String,
       index: DataFrame, queryId: Long, k: Int, nprobe: Int): DataFrame = {
-    val q = probeVec(spark, sfDir, queryId)
+    val q = typedLit(queryVec(spark, sfDir, queryId))
     val probed = ivfCentroids(spark, sfDir)
       .select(col("cell"), VectorFns.cosine(col("centroid"), q).as("csim"))
       .orderBy(col("csim").desc, col("cell"))
@@ -683,20 +685,17 @@ object Similarity {
         .select(col("vec_id"), col("u"), pqCodesExpr(col("u"), cents).as("codes"))
     }
 
-  /** The probe vector in the [[pqFixed]] fixed-point domain, computed
-    * driver-side with the same IEEE ops (exact integers thereafter). */
-  private def fixedProbe(spark: SparkSession, sfDir: String,
-                         queryId: Long): Seq[Long] =
-    Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") === queryId)
-      .select(col("embedding")).head().getSeq[Float](0)
-      .map(x => math.floor(x.toDouble * 1e6 + 0.5).toLong + PqShift)
+  /** A fetched probe vector in the [[pqFixed]] fixed-point domain,
+    * computed driver-side with the same IEEE ops (exact integers
+    * thereafter). */
+  private def fixedProbe(v: Seq[Float]): Seq[Long] =
+    v.map(x => math.floor(x.toDouble * 1e6 + 0.5).toLong + PqShift)
 
   /** Exact integer-L2 brute-force top-k over the fixed-point view — the
     * ground truth the PQ/IVF-PQ quality metrics compare against. */
   private[graft] def bruteL2TopK(spark: SparkSession, sfDir: String,
                                  queryId: Long = 0L, k: Int = 10): DataFrame = {
-    val u0 = fixedProbe(spark, sfDir, queryId)
+    val u0 = fixedProbe(queryVec(spark, sfDir, queryId))
     Tables.embeddings(spark, sfDir)
       .where(col("vec_id") =!= queryId)
       .select(col("vec_id"), pqFixed.as("u"))
@@ -741,10 +740,10 @@ object Similarity {
   /** Incremental IVF-PQ index maintenance: encode a NEW batch of vectors
     * with the FROZEN trained quantizers (coarse cells + PQ codebooks are
     * bounded driver metadata — the corpus index must never shift under a
-    * live query) and land it as the tag-scoped partition
-    * `batch=<tag>/cell=<c>/` of `indexDir`. Properties, both spec-pinned:
-    * a RETRY overwrites its own batch directory byte-for-byte instead of
-    * appending a second copy (the x16 idempotence rule), and because the
+    * live query) and publish it as the tag-scoped layer
+    * `batch=<tag>/cell=<c>` of `indexDir`. Properties, both spec-pinned:
+    * a RETRY replaces its own layer instead of appending a second copy
+    * (the x16 idempotence rule), and because the
     * quantizers are frozen, incrementally-built batches are bit-identical
     * to a full rebuild — growing the corpus never re-encodes it. `cell`
     * stays a partition column through the batch layer, so a probe's
@@ -753,7 +752,7 @@ object Similarity {
                   indexDir: String, batchTag: String): DataFrame = {
     ivfPqAppendEncoded(encodeVectorBatch(spark, sfDir, newVecs), indexDir,
       batchTag)
-    graft.operators.VersionedLayers.readAny(spark, indexDir)
+    VersionedLayers.readAny(spark, indexDir)
   }
 
   /** Encode a batch of raw `(vec_id, embedding)` rows ONCE for EVERY
@@ -784,7 +783,7 @@ object Similarity {
     * for two artifacts). Same columns, same layout, same x16 retry rule. */
   private[graft] def ivfPqAppendEncoded(encoded: DataFrame, indexDir: String,
                                         batchTag: String): Unit =
-    graft.operators.VersionedLayers.writeTagged(encoded.sparkSession,
+    VersionedLayers.publishLayer(encoded.sparkSession,
       indexDir, batchTag,
       encoded.select(col("vec_id"), col("u"), col("codes"), col("cell")),
       subPartition = Seq("cell"))
@@ -810,14 +809,14 @@ object Similarity {
     * codes, exact integer-L2 rerank. */
   private[graft] def ivfPqProbe(spark: SparkSession, sfDir: String, index: DataFrame,
                          queryId: Long, k: Int, nprobe: Int): DataFrame = {
-    val q = probeVec(spark, sfDir, queryId)
+    val v = queryVec(spark, sfDir, queryId)
     val probed = ivfCentroids(spark, sfDir)
-      .select(col("cell"), VectorFns.cosine(col("centroid"), q).as("csim"))
+      .select(col("cell"), VectorFns.cosine(col("centroid"), typedLit(v)).as("csim"))
       .orderBy(col("csim").desc, col("cell"))
       .limit(nprobe)
       .select(col("cell")).collect().map(_.getInt(0)).toSeq
     val cents = pqCodebooks(spark, sfDir)
-    val u0 = fixedProbe(spark, sfDir, queryId)
+    val u0 = fixedProbe(v)
     def sub0(s: Int) = u0.slice(s * PqSubDim, (s + 1) * PqSubDim)
     def d2(a: Seq[Long], b: Seq[Long]) =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -860,91 +859,35 @@ object Similarity {
   }
 
   /** Apply a tombstone KEY table to a BATCH-LAYERED index
-    * (`batch=<tag>/cell=<c>/` — the [[ivfPqAppend]] artifact) by
-    * rewriting ONLY the (batch, cell) leaf partitions that hold a doomed
-    * vector — x80's dirty-cell economics addressed one level deeper. The
-    * dirty set comes from one broadcast semi-join of the keys against
-    * the index; under `gate` pairs the staging restriction compiles to a
-    * per-pair conjunction disjunction (which partition-prunes BOTH
-    * directory levels at the scan), past it the SAME restriction runs as
-    * a broadcast semi-join on the pair. Survivors stage under a
-    * two-level `partitionBy`, dynamic overwrite replaces exactly the
-    * staged leaves, fully-emptied leaves are dropped explicitly, and the
-    * listing cache refreshed. Clean layers — every (batch, cell) the
-    * batch doesn't touch — keep their exact files (spec-pinned), so a
+    * (`batch=<tag>/cell=<c>` — the [[ivfPqAppend]] artifact) by
+    * rewriting ONLY the (batch, cell) leaves that hold a doomed vector —
+    * x80's dirty-cell economics addressed one level deeper. The dirty set
+    * comes from one broadcast semi-join of the keys against the index;
+    * the dirty leaves' survivors (a manifest-pruned read) stage in one
+    * two-level `partitionBy` write and swap in one manifest publish
+    * ([[VersionedLayers.rewriteCellLayers]]). Clean leaves — every
+    * (batch, cell) the batch doesn't touch, including clean cells of a
+    * dirty tag — keep their immutable store dirs (spec-pinned), so a
     * delete against a grown index never re-encodes or rewrites history
-    * it didn't touch. Replay-idempotent without markers (t20's
-    * argument): a replayed batch's keys are already absent, the dirty
-    * set is empty, no file is touched. Same single-writer /
-    * no-concurrent-reader contract as [[cellSwapCore]]. Returns the
-    * dirty (batch, cell) pairs — bounded by layers × K, the same
-    * O(metadata) class as x75's partition keys. */
+    * it didn't touch, and concurrent probes keep the pre-delete
+    * snapshot. Replay-idempotent without markers (t20's argument): a
+    * replayed batch's keys are already absent, the dirty set is empty,
+    * nothing is published. A delete before any publish is a structural
+    * no-op. Returns the dirty (batch, cell) pairs — bounded by layers ×
+    * K, the same O(metadata) class as x75's partition keys. */
   private[graft] def ivfPqLayerDeleteKeys(spark: SparkSession, idxDir: String,
-      keys: DataFrame,
-      gate: Int = Maintenance.keyGateDefault): Seq[(String, Int)] = {
-    // versioned roots (VERDICT r16 #2): the same (batch, cell)
-    // dirty-leaf economics, but each dirty LEAF lands as a new store dir
-    // and all dirty entries swap in one manifest publish — clean cells
-    // of the same tag keep their immutable dirs, concurrent probes keep
-    // the pre-delete snapshot, and the survivor snapshot() is dropped
-    // (source and destination never collide)
-    if (graft.operators.VersionedLayers.isVersioned(spark, idxDir)) {
-      import graft.operators.VersionedLayers
-      val live = VersionedLayers.layers(spark, idxDir)
-      if (live.isEmpty) return Seq.empty
-      val idx = VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
-      val k = broadcast(keys.select(col("vec_id")).distinct())
-      val dirty = idx.join(k, Seq("vec_id"), "leftsemi")
-        .select(col("batch"), col("cell")).distinct()
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-      if (dirty.nonEmpty) {
-        val surv = VersionedLayers.readCells(spark, idxDir, dirty.toSet)
-          .join(k, Seq("vec_id"), "leftanti")
-        VersionedLayers.rewriteCellLayers(spark, idxDir, dirty, surv)
-      }
-      return dirty
-    }
-    // opener-side crash recovery for an interrupted x85 compaction
-    // (ADVICE r14) — same guard as the flat fold's
-    Maintenance.guardInterruptedCompaction(spark, idxDir)
-    // delete-before-any-append / fully-emptied index: structural no-op,
-    // never a schema-inference crash — the flat fold's contract applies
-    // to the layered fold identically
-    if (!graft.operators.Dedup.hasVisibleData(spark, idxDir)) return Seq.empty
-    val idx = spark.read.parquet(idxDir)
+      keys: DataFrame): Seq[(String, Int)] = {
+    val live = VersionedLayers.layers(spark, idxDir)
+    if (live.isEmpty) return Seq.empty
+    val idx = VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
     val k = broadcast(keys.select(col("vec_id")).distinct())
-    val dirtyDf = idx.join(k, Seq("vec_id"), "leftsemi")
+    val dirty = idx.join(k, Seq("vec_id"), "leftsemi")
       .select(col("batch"), col("cell")).distinct()
-    val dirty = dirtyDf.collect().map(r => (r.getString(0), r.getInt(1)))
-      .toSeq.sorted
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
     if (dirty.nonEmpty) {
-      val restricted =
-        if (dirty.size <= gate)
-          idx.where(dirty.map { case (b, c) =>
-            col("batch") === b && col("cell") === c }.reduce(_ || _))
-        else idx.join(broadcast(dirtyDf), Seq("batch", "cell"), "leftsemi")
-      // lineage-truncating snapshot instead of a scratch-parquet stage —
-      // the dedupIndexDeleteKeys argument verbatim (one materialization
-      // replaces a full write + re-read; durability unchanged, the only
-      // artifact mutation is still the single dynamic overwrite)
-      val surv = graft.operators.Dedup.snapshot(spark,
-        restricted.join(k, Seq("vec_id"), "leftanti"))
-      // the staged-pair set is one distinct over the materialized
-      // survivors — bounded by layers × K
-      val staged = surv.select(col("batch"), col("cell")).distinct()
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-      if (staged.nonEmpty)
-        graft.operators.VersionedLayers.sizedForWrite(surv, Seq("batch", "cell"))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch", "cell").parquet(idxDir)
-      val fs = new org.apache.hadoop.fs.Path(idxDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val emptied = dirty.filterNot(staged)
-      emptied.foreach { case (b, c) =>
-        fs.delete(new org.apache.hadoop.fs.Path(idxDir, s"batch=$b/cell=$c"),
-          true); ()
-      }
-      if (emptied.nonEmpty) spark.catalog.refreshByPath(idxDir)
+      val surv = VersionedLayers.readCells(spark, idxDir, dirty.toSet)
+        .join(k, Seq("vec_id"), "leftanti")
+      VersionedLayers.rewriteCellLayers(spark, idxDir, dirty, surv)
     }
     dirty
   }
@@ -953,101 +896,40 @@ object Similarity {
     * #1, the cell-granular twin of `Dedup.indexUpsertFold`): the dirty
     * (batch, cell) leaves' delete-survivors AND the encoded insert
     * batch's new `batch=<tag>` layer stage in ONE two-level
-    * `partitionBy(batch, cell)` write and land in ONE publish — a
-    * versioned root swaps+appends the manifest once, a legacy root runs
-    * one dynamic overwrite — where the append-then-delete pair paid two
-    * write jobs and two publishes. Equivalence with the pair is
-    * order-free: `encoded` is net of same-batch cancels, so its rows
-    * never match `keys` and the dirty set is identical whether the
-    * fresh layer exists yet or not; final state ≡ (stored \ keys) ∪
-    * fresh either way (x84's oracle argument). Replay converges by the
-    * same rules (keys already absent ⇒ dirty = ∅; the re-derived tag
-    * layer replaces its own prior entry). Returns the dirty pairs. */
+    * `partitionBy(batch, cell)` write and land in ONE manifest publish,
+    * where the append-then-delete pair paid two write jobs and two
+    * publishes. Equivalence with the pair is order-free: `encoded` is
+    * net of same-batch cancels, so its rows never match `keys` and the
+    * dirty set is identical whether the fresh layer exists yet or not;
+    * final state ≡ (stored \ keys) ∪ fresh either way (x84's oracle
+    * argument). Replay converges by the same rules (keys already absent
+    * ⇒ dirty = ∅; the re-derived tag layer replaces its own prior
+    * entry). Returns the dirty pairs. */
   private[graft] def ivfPqUpsertEncodedKeys(spark: SparkSession, idxDir: String,
       keys: DataFrame, tag: String, encoded: DataFrame,
-      gate: Int = Maintenance.keyGateDefault,
       knownDirty: Option[Seq[(String, Int)]] = None): Seq[(String, Int)] = {
-    import graft.operators.VersionedLayers
     val k = broadcast(keys.select(col("vec_id")).distinct())
     val fresh = encoded.select(col("vec_id"), col("u"), col("codes"), col("cell"))
       .withColumn("batch", lit(tag))
-    if (VersionedLayers.isVersioned(spark, idxDir)) {
-      val live = VersionedLayers.layers(spark, idxDir).filterNot(_.tag == tag)
-      val livePairs = live.flatMap(l => l.cell.map(c => (l.tag, c))).toSet
-      val dirty = knownDirty
-        .map(_.filter(livePairs).sorted)
-        .getOrElse {
-        if (live.isEmpty) Seq.empty[(String, Int)]
-        else VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
-          .join(k, Seq("vec_id"), "leftsemi")
-          .select(col("batch"), col("cell")).distinct()
-          .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted }
-      val staged =
-        if (dirty.isEmpty) fresh
-        else VersionedLayers.readCells(spark, idxDir, dirty.toSet)
-          .join(k, Seq("vec_id"), "leftanti")
-          .select(col("vec_id"), col("u"), col("codes"), col("cell"),
-            col("batch"))
-          .unionByName(fresh)
-      VersionedLayers.rewriteCellLayers(spark, idxDir, dirty, staged,
-        appendTag = Some(tag))
-      return dirty
-    }
-    Maintenance.guardInterruptedCompaction(spark, idxDir)
-    val idxOpt =
-      if (graft.operators.Dedup.hasVisibleData(spark, idxDir))
-        Some(spark.read.parquet(idxDir))
-      else None
-    val dirtyDf = idxOpt match {
-      case None => spark.range(0).select(col("id").cast("string").as("batch"),
-        col("id").cast("int").as("cell"))
-      case Some(idx) => knownDirty match {
-        case Some(pairs) =>
-          import spark.implicits._
-          pairs.filterNot(_._1 == tag).toDF("batch", "cell")
-        case None => idx.where(col("batch") =!= tag)
-          .join(k, Seq("vec_id"), "leftsemi")
-          .select(col("batch"), col("cell")).distinct()
-      }
-    }
-    val dirty =
-      if (idxOpt.isEmpty) Seq.empty[(String, Int)]
-      else knownDirty.map(_.filterNot(_._1 == tag).sorted).getOrElse(
-        dirtyDf.collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted)
-    // snapshot the dirty leaves' SURVIVORS only before the overwrite
-    // (the ivfPqLayerDeleteKeys argument); the fresh encoded batch rides
-    // the write un-checkpointed — its lineage reads nothing the dynamic
-    // overwrite touches before job commit, the same safety the separate
-    // append always had, and checkpointing the encoded batch again was
-    // a whole extra materialization per micro-batch
-    val (survPairs, stagedSurv) = idxOpt match {
-      case Some(idx) if dirty.nonEmpty =>
-        val restricted =
-          if (dirty.size <= gate)
-            idx.where(dirty.map { case (b, c) =>
-              col("batch") === b && col("cell") === c }.reduce(_ || _))
-          else idx.join(broadcast(dirtyDf), Seq("batch", "cell"), "leftsemi")
-        val s = graft.operators.Dedup.snapshot(spark,
-          restricted.join(k, Seq("vec_id"), "leftanti")
-            .select(col("vec_id"), col("u"), col("codes"), col("cell"),
-              col("batch")))
-        (s.select(col("batch"), col("cell")).distinct()
-          .collect().map(r => (r.getString(0), r.getInt(1))).toSet, s)
-      case _ => (Set.empty[(String, Int)], null)
-    }
+    val live = VersionedLayers.layers(spark, idxDir).filterNot(_.tag == tag)
+    val livePairs = live.flatMap(l => l.cell.map(c => (l.tag, c))).toSet
+    val dirty = knownDirty
+      .map(_.filter(livePairs).sorted)
+      .getOrElse {
+      if (live.isEmpty) Seq.empty[(String, Int)]
+      else VersionedLayers.readTags(spark, idxDir, live.map(_.tag).toSet)
+        .join(k, Seq("vec_id"), "leftsemi")
+        .select(col("batch"), col("cell")).distinct()
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted }
     val staged =
-      if (stagedSurv == null) fresh else stagedSurv.unionByName(fresh)
-    VersionedLayers.sizedForWrite(staged, Seq("batch", "cell"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch", "cell").parquet(idxDir)
-    val fs = new org.apache.hadoop.fs.Path(idxDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val emptied = dirty.filterNot(survPairs)
-    emptied.foreach { case (b, c) =>
-      fs.delete(new org.apache.hadoop.fs.Path(idxDir, s"batch=$b/cell=$c"),
-        true); ()
-    }
-    if (emptied.nonEmpty) spark.catalog.refreshByPath(idxDir)
+      if (dirty.isEmpty) fresh
+      else VersionedLayers.readCells(spark, idxDir, dirty.toSet)
+        .join(k, Seq("vec_id"), "leftanti")
+        .select(col("vec_id"), col("u"), col("codes"), col("cell"),
+          col("batch"))
+        .unionByName(fresh)
+    VersionedLayers.rewriteCellLayers(spark, idxDir, dirty, staged,
+      appendTag = Some(tag))
     dirty
   }
 
@@ -1076,7 +958,7 @@ object Similarity {
     ivfPqAppend(spark, sfDir, vecs.where(pmod(col("vec_id"), lit(2L)) === 1L),
       idx, "grow")
     ivfPqLayerDeleteKeys(spark, idx, vecs.where(x80Tombstone).select(col("vec_id")))
-    ivfPqProbe(spark, sfDir, spark.read.parquet(idx), queryId, k, nprobe)
+    ivfPqProbe(spark, sfDir, VersionedLayers.readAny(spark, idx), queryId, k, nprobe)
   }
 
   /** Compact a batch-layered index's `batch=<tag>` layers into ONE —
@@ -1086,11 +968,9 @@ object Similarity {
     * compaction is a pure re-layout: no row changes, so the probe is
     * bit-equal before and after (spec-pinned; the declared query carries
     * x83's oracle through a compaction to state it cross-engine).
-    * Crash-safe by the t18 retire/publish/restore-first discipline,
-    * single-writer contract (the [[cellSwapCore]] note) — the full
-    * argument and the retire/publish/restore-first mechanics live in
-    * the shared core, [[Maintenance.compactLayers]] (x88 compacts the
-    * dedup fingerprint index through the same code). Cost is one full
+    * Manifest-atomic through the shared core,
+    * [[VersionedLayers.compactVersioned]] (x88 compacts the dedup
+    * fingerprint index through the same code). Cost is one full
     * index read + write — the operator you run in a maintenance window
     * precisely so that every PROBE afterwards reads one layer. Returns
     * the number of layers folded. Reference anchor: the partition
@@ -1099,16 +979,14 @@ object Similarity {
     * incremental landing IS the reference's core job. */
   private[graft] def ivfPqCompactLayers(spark: SparkSession, idxDir: String,
                                         tag: String): Int =
-    Maintenance.compactLayers(spark, idxDir, tag, Seq("cell"),
-      "graft_x85_stage_")
+    VersionedLayers.compactVersioned(spark, idxDir, tag, Seq("cell"))(identity)
 
   /** X85 — the x6g probe served through a LAYER COMPACTION: x83's full
     * maintenance history (two appends, a tombstone batch) runs first,
     * then the surviving layers fold into one and the probe reads the
     * compacted index. The oracle is x83's verbatim — the green hash
     * states compaction is probe-invariant, i.e. re-layout changes no
-    * result — and the spec pins the stronger row-level statement plus
-    * the crash drills. With append (x6h), delete (x83), upsert (x84),
+    * result — and the spec pins the stronger row-level statement. With append (x6h), delete (x83), upsert (x84),
     * streaming (t22), and now compaction, the layered index has the
     * complete operational lifecycle. */
   def ivfPqCompactTopK(spark: SparkSession, sfDir: String, queryId: Long = 0L,
@@ -1121,7 +999,7 @@ object Similarity {
       idx, "grow")
     ivfPqLayerDeleteKeys(spark, idx, vecs.where(x80Tombstone).select(col("vec_id")))
     ivfPqCompactLayers(spark, idx, "compacted")
-    ivfPqProbe(spark, sfDir, spark.read.parquet(idx), queryId, k, nprobe)
+    ivfPqProbe(spark, sfDir, VersionedLayers.readAny(spark, idx), queryId, k, nprobe)
   }
 
   /** X84 — the full index UPSERT: ONE maintenance pass carries an insert
@@ -1153,7 +1031,7 @@ object Similarity {
       encodeVectorBatch(spark, sfDir,
         vecs.where(pmod(col("vec_id"), lit(2L)) === 1L)
           .join(broadcast(tombs), Seq("vec_id"), "leftanti")))
-    ivfPqProbe(spark, sfDir, spark.read.parquet(idx), queryId, k, nprobe)
+    ivfPqProbe(spark, sfDir, VersionedLayers.readAny(spark, idx), queryId, k, nprobe)
   }
 
   /** X6f — product-quantization shortlist + exact rerank, the production
@@ -1175,7 +1053,7 @@ object Similarity {
   def pqTopK(spark: SparkSession, sfDir: String, queryId: Long = 0L,
              k: Int = 10): DataFrame = {
     val cents = pqCodebooks(spark, sfDir)
-    val u0 = fixedProbe(spark, sfDir, queryId)
+    val u0 = fixedProbe(queryVec(spark, sfDir, queryId))
     def sub0(s: Int) = u0.slice(s * PqSubDim, (s + 1) * PqSubDim)
     def d2(a: Seq[Long], b: Seq[Long]) =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -1486,7 +1364,7 @@ object Similarity {
       vecs.where(bucket >= 8)
         .join(broadcast(keys.distinct()), Seq("vec_id"), "leftanti"),
       "fresh", cents, idx, out, threshold, deleteKeys = Some(keys))
-    spark.read.parquet(idx)
+    VersionedLayers.readAny(spark, idx)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
       .orderBy(col("vec_id"))
   }

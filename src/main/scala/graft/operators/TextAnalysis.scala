@@ -1136,9 +1136,9 @@ object TextAnalysis {
     * with the per-row winnowing form (spec-pinned identical to the
     * batch builder — anchor selection is a pure per-doc function, so
     * incrementally-built batches are row-identical to a full rebuild)
-    * and land it as the tag-scoped partition `batch=<tag>/` of
-    * `indexDir`. A RETRY overwrites its own batch directory instead of
-    * appending a second copy (the x16 idempotence rule). The grown
+    * and publish it as the tag-scoped layer `batch=<tag>` of
+    * `indexDir`. A RETRY replaces its own layer instead of appending a
+    * second copy (the x16 idempotence rule). The grown
     * index serves the same probes (x58/t13) across every batch. */
   def spanIndexAppend(spark: SparkSession, newDocs: DataFrame,
                       indexDir: String, batchTag: String, spanLen: Int = 64,
@@ -1146,7 +1146,7 @@ object TextAnalysis {
     // (doc_id, p INT, h) — the exact schema of the batch-built
     // [[spanIndex]], so batches and rebuilds are byte-compatible reads
     // of one index
-    VersionedLayers.writeTagged(spark, indexDir, batchTag,
+    VersionedLayers.publishLayer(spark, indexDir, batchTag,
       localSpanRows(newDocs, spanLen, winnow, kGram))
     VersionedLayers.readAny(spark, indexDir)
   }
@@ -1385,7 +1385,7 @@ object TextAnalysis {
     * TAGS (prior epoch vs novel batch), so its layers can only fold
     * BETWEEN probe epochs: once an epoch's batch has been probed and
     * absorbed, everything folds into the `batch=prior` layer — the shared
-    * crash-safe core (`Maintenance.compactLayers`) with `prior` as the
+    * compaction core (`VersionedLayers.compactVersioned`) with `prior` as the
     * publish tag — and the NEXT epoch's appends are the novel side.
     * Without this fold a long-lived span index accumulates one layer per
     * epoch forever — exactly the small-file pathology x95 exists to
@@ -1419,16 +1419,16 @@ object TextAnalysis {
     Dedup.dedupIndexDeleteKeys(spark, idx, keys)
     // the epoch-1 probe, absorbed (the operational precondition of the
     // fold — layers only fold once their epoch has been read)
-    val e1 = spanHitProbe(spark.read.parquet(idx).withColumn("batch",
+    val e1 = spanHitProbe(VersionedLayers.readAny(spark, idx).withColumn("batch",
       when(col("batch") === "stored", "prior").otherwise("novel"))).count()
     require(e1 > 0, "x97: the epoch-1 probe saw no novel docs")
     // between-epochs policy: below the layer bar the index is untouched;
     // at it the epoch fold publishes batch=prior through the shared core
     require(!Maintenance.compactIfNeeded(spark, idx, "prior", Seq.empty,
-      "graft_x97_sweep_", maxLayers = 16),
+      maxLayers = 16),
       "x97: below-threshold epoch consult fired")
     require(Maintenance.compactIfNeeded(spark, idx, "prior", Seq.empty,
-      "graft_x97_sweep_", maxLayers = 1),
+      maxLayers = 1),
       "x97: the epoch fold did not fire at threshold")
     val grown = spanIndexAppend(spark,
       docs.where(col("b") >= 8).select(col("doc_id"), col("text"))

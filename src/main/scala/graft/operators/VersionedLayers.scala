@@ -8,14 +8,12 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
 /** Copy-free snapshot isolation for `batch=`-layered swap artifacts
   * (VERDICT r16 #2 — "readers have no isolation during swaps").
   *
-  * The in-place layout mutates the only copy of a layer (dynamic
-  * partition overwrite, layer drops, the compaction trash swap), so every
-  * swap core documents "no concurrent reader during the window". A
-  * production pipeline serves probes WHILE maintaining, so the maintained
-  * pipeline's artifacts move to the `_LATEST`-pointer discipline the
-  * stats stores (t19/t21) already use — generalized to LAYERED artifacts
-  * without copying the artifact per fold (a versioned ROOT would rewrite
-  * 100 TB per batch; a versioned MANIFEST rewrites O(delta)):
+  * A production pipeline serves probes WHILE maintaining, so no fold may
+  * mutate the only copy of a layer. Every layered artifact follows the
+  * `_LATEST`-pointer discipline the stats stores (t19/t21) use —
+  * generalized to LAYERED artifacts without copying the artifact per
+  * fold (a versioned ROOT would rewrite 100 TB per batch; a versioned
+  * MANIFEST rewrites O(delta)):
   *
   * {{{
   *   <root>/_LATEST            pointer file → "m-<seq>"
@@ -45,11 +43,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * exactly the pre-fold or the post-fold artifact, never a torn one.
   * (Isolation is per-PUBLISH: a pass that deletes then appends publishes
   * twice, and a reader between the two sees the consistent
-  * deletes-applied version — the same intermediate the in-place layout
-  * exposed, minus the torn windows.)
+  * deletes-applied version.)
   *
-  * Crash discipline — SIMPLER than the legacy trash protocol, because no
-  * step destroys the only copy:
+  * Crash discipline — no step destroys the only copy:
   *  - crash mid-store-write → an orphan store dir no manifest references:
   *    invisible to every reader, deleted by a later publish's GC;
   *  - crash before the pointer move → the artifact is bit-for-bit at the
@@ -58,19 +54,18 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   *    dir and re-publishes — convergent without markers (the x16 rule:
   *    the manifest REPLACES the tag's entry, it never appends a second).
   *
-  * Like the lease and the trash protocol, pointer atomicity rides on the
-  * filesystem's rename/create semantics — exact on HDFS-likes and local
-  * filesystems, advisory on object stores without conditional writes.
+  * Pointer atomicity rides on the filesystem's rename/create semantics —
+  * exact on HDFS-likes and local filesystems, advisory on object stores
+  * without conditional writes.
   *
-  * Adoption state: the multi-artifact orchestrator pipeline
-  * (`Maintenance.MultiArtifactDirs` — corpus, exact, near triple, span,
-  * SemDeDup, both decision logs, both cluster artifacts, AND the
-  * layered IVF-PQ index, whose entries version at (tag, cell)-leaf
-  * granularity) initializes versioned; the shared fold cores are
-  * dual-mode (they detect the layout), so the standalone one-shot
-  * fixtures (x86/x89/x98… — no concurrent reader exists inside a
-  * one-shot oracle query) keep the in-place layout and their
-  * byte-level drills.
+  * This is the only layout a `batch=`-layered artifact has, standalone
+  * one-shot fixtures included. The first publish to a root creates it; a
+  * root no publish has reached reads as the empty manifest. A root that
+  * holds any other visible entry but no pointer — `batch=` dirs of an
+  * in-place layered artifact from before every artifact was versioned,
+  * or the files of a flat or `cell=`-only artifact — is refused, naming
+  * the dir, because reading it as empty would silently re-admit every
+  * duplicate it holds, and a publish would hide its data.
   *
   * Reference anchor: the reference swaps bookkeeping under a ZK writer
   * lock and lets readers hit Hive's last-published partition list
@@ -130,31 +125,33 @@ object VersionedLayers {
     else if (keys.isEmpty) df.hint("REBALANCE")
     else df.hint("REBALANCE", keys.map(col): _*)
 
-  /** A versioned root = pointer AND manifests dir (the stats stores use
-    * `_LATEST` alone — different discipline, snapshot-per-fold). */
-  private[graft] def isVersioned(spark: SparkSession, dir: String): Boolean = {
-    val (fs, root) = fsOf(spark, dir)
-    fs.exists(pointerPath(root)) && fs.exists(manifestsPath(root))
-  }
-
-  /** Initialize an empty versioned artifact: manifest m-0 (no layers),
-    * pointer at it. Idempotent — an existing versioned root is left
-    * untouched. */
-  private[graft] def init(spark: SparkSession, dir: String): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    if (isVersioned(spark, dir)) return
-    fs.mkdirs(storePath(root))
-    fs.mkdirs(manifestsPath(root))
-    writeManifest(fs, root, 0L, Manifest(Seq.empty, Map.empty))
-    graft.streaming.StreamingIngest.writeViewPointer(fs, root, "m-0")
-  }
-
   private def currentSeq(fs: FileSystem, root: Path): Long = {
     val name = graft.streaming.StreamingIngest.readViewPointer(fs, root)
     require(name.startsWith("m-") && name.drop(2).forall(_.isDigit),
       s"$root: malformed versioned-layer pointer '$name'")
     name.drop(2).toLong
   }
+
+  /** The live manifest's sequence number and content, through the
+    * pointer. A root without a pointer is the empty manifest at sequence
+    * 0 only while it holds nothing but a crashed first publish's
+    * `store`/`manifests` dirs and hidden debris; any other visible entry
+    * (`batch=` dirs, flat parquet files, `cell=` dirs) is data this
+    * layout did not write, and the root is refused (see the object doc). */
+  private def current(fs: FileSystem, root: Path): (Long, Manifest) =
+    if (fs.exists(pointerPath(root))) {
+      val seq = currentSeq(fs, root)
+      (seq, readManifest(fs, root, seq))
+    } else {
+      val foreign = if (!fs.exists(root)) Seq.empty
+        else fs.listStatus(root).toSeq.map(_.getPath.getName).filterNot(n =>
+          n.startsWith("_") || n.startsWith(".") || n == "store" || n == "manifests")
+      require(foreign.isEmpty, s"$root holds ${foreign.sorted.mkString(", ")} " +
+        "but no _LATEST pointer: data not written through VersionedLayers " +
+        "(an in-place or flat artifact), which is not read; rebuild it " +
+        "through VersionedLayers")
+      (0L, Manifest(Seq.empty, Map.empty))
+    }
 
   private def writeManifest(fs: FileSystem, root: Path, seq: Long,
                             m: Manifest): Unit = {
@@ -192,7 +189,7 @@ object VersionedLayers {
   /** The live manifest (resolved through the pointer). */
   private def resolve(spark: SparkSession, dir: String): (Path, Manifest) = {
     val (fs, root) = fsOf(spark, dir)
-    (root, readManifest(fs, root, currentSeq(fs, root)))
+    (root, current(fs, root)._2)
   }
 
   /** The live layer list (resolved through the pointer). */
@@ -210,11 +207,9 @@ object VersionedLayers {
       subPartition.map(StructField(_, IntegerType)))
 
   /** Snapshot-isolated read of the artifact: the union of the manifest's
-    * store dirs, each with its `batch` tag attached — schema-compatible
-    * with the legacy partitioned read (batch column last, string). Own-tag
-    * exclusion is MANIFEST pruning (the excluded layer is never even
-    * listed, where the legacy read filtered it row-wise). `empty` when the
-    * manifest holds no layers.
+    * store dirs, each with its `batch` tag attached (string, last column).
+    * Own-tag exclusion is MANIFEST pruning (the excluded layer is never
+    * even listed). `empty` when the manifest holds no layers.
     *
     * Reads are BATCHED (guide §1.2 — fewer driver round-trips): flat
     * layers group into ONE `spark.read.parquet(dirs*)` per tag; cell
@@ -259,9 +254,8 @@ object VersionedLayers {
     if (live.isEmpty) empty else readEntries(spark, root, m, live)
   }
 
-  /** Read ONLY the named tags' layers (manifest pruning — the versioned
-    * delete folds read just the dirty layers, where the legacy layout
-    * needed a partition filter). Caller guarantees a non-empty
+  /** Read ONLY the named tags' layers (manifest pruning — the delete
+    * folds read just the dirty layers). Caller guarantees a non-empty
     * intersection with the live manifest. */
   private[graft] def readTags(spark: SparkSession, dir: String,
                               tags: Set[String]): DataFrame = {
@@ -288,24 +282,22 @@ object VersionedLayers {
     layers(spark, dir).map(l => new Path(storePath(root), l.rel))
   }
 
-  /** Layout-blind whole-artifact read (probes): versioned roots resolve
-    * the pointer, legacy roots read the partitioned dir — both yield the
-    * `batch` column. */
+  /** Whole-artifact read (probes, query results): [[read]] that refuses
+    * an artifact with no layers instead of inventing an empty frame. */
   private[graft] def readAny(spark: SparkSession, dir: String): DataFrame =
-    if (isVersioned(spark, dir))
-      read(spark, dir)(throw new IllegalStateException(
-        s"$dir: versioned artifact has no layers — probe before init/append"))
-    else spark.read.parquet(dir)
+    read(spark, dir)(throw new IllegalStateException(
+      s"$dir: layered artifact has no layers — probe before any publish"))
 
   /** Publish `next(current entries)` as the new manifest: write
-    * m-<seq+1>, move the pointer, GC. `fresh` holds the schemas of the
+    * m-<seq+1>, move the pointer, GC. The first publish to a root
+    * creates it. `fresh` holds the schemas of the
     * tags this publish staged; every other live tag carries its recorded
     * schema forward. Single-writer (the pipeline lease). */
   private def publish(fs: FileSystem, root: Path,
                       fresh: Map[String, StructType])
                      (next: Seq[Layer] => Seq[Layer]): Unit = {
-    val seq = currentSeq(fs, root)
-    val prev = readManifest(fs, root, seq)
+    val (seq, prev) = current(fs, root)
+    if (seq == 0L) fs.mkdirs(storePath(root)) // first publish creates the root
     val layers = next(prev.layers)
     val tags = layers.map(_.tag).toSet
     writeManifest(fs, root, seq + 1L,
@@ -313,6 +305,24 @@ object VersionedLayers {
     graft.streaming.StreamingIngest.writeViewPointer(fs, root, s"m-${seq + 1L}")
     gc(fs, root, seq + 1L, keep = (layers ++ prev.layers).map(_.rel).toSet)
   }
+
+  /** Move a staged dir into the store as `rel` (replacing a crashed
+    * attempt's debris of the same generation). */
+  private def land(fs: FileSystem, root: Path, staged: Path, rel: String): Unit = {
+    val dest = new Path(storePath(root), rel)
+    if (fs.exists(dest)) fs.delete(dest, true)
+    fs.mkdirs(storePath(root))
+    require(fs.rename(staged, dest), s"$root: could not land layer dir $rel")
+  }
+
+  /** Whether `dir` holds a visible data file: a write that produced not
+    * even a footer-only part file leaves only hidden debris. */
+  private def hasVisibleData(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(dir) && fs.listStatus(dir).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".") &&
+        (s.isFile || hasVisibleData(fs, s.getPath))
+    }
 
   /** GC after a pointer move: drop store dirs referenced by NEITHER the
     * new nor the previous manifest (one-generation reader grace), and
@@ -368,7 +378,7 @@ object VersionedLayers {
                                   subPartition: Seq[String] = Seq.empty,
                                   replaceAll: Boolean = false): Unit = {
     val (fs, root) = fsOf(spark, dir)
-    val seq = currentSeq(fs, root) + 1L
+    val seq = current(fs, root)._1 + 1L
     val entries: Seq[Layer] = subPartition match {
       case Seq() =>
         val rel = s"$tag-g$seq"
@@ -376,7 +386,7 @@ object VersionedLayers {
         if (fs.exists(dest)) fs.delete(dest, true) // replay debris
         sizedForWrite(df, Seq.empty).write.mode("overwrite")
           .parquet(dest.toString)
-        if (Dedup.hasVisibleData(spark, dest.toString)) Seq(Layer(tag, rel))
+        if (hasVisibleData(fs, dest)) Seq(Layer(tag, rel))
         else { fs.delete(dest, true); Seq.empty }
       case Seq(cellCol) =>
         // cell-granular artifact: ONE partitionBy job stages the layer,
@@ -389,11 +399,8 @@ object VersionedLayers {
         sizedForWrite(df, Seq(cellCol)).write.mode("overwrite")
           .partitionBy(cellCol).parquet(stage.toString)
         val gen = s"$tag-g$seq"
-        val dest = new Path(storePath(root), gen)
-        if (fs.exists(dest)) fs.delete(dest, true) // replay debris
-        require(fs.rename(stage, dest),
-          s"$dir: could not land cell layer generation $gen")
-        fs.listStatus(dest).toSeq
+        land(fs, root, stage, gen)
+        fs.listStatus(new Path(storePath(root), gen)).toSeq
           .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$cellCol="))
           .map { st =>
             val c = st.getPath.getName.stripPrefix(s"$cellCol=").toInt
@@ -423,7 +430,7 @@ object VersionedLayers {
                                        survivors: DataFrame,
                                        appendTag: Option[String] = None): Unit = {
     val (fs, root) = fsOf(spark, dir)
-    val seq = currentSeq(fs, root) + 1L
+    val seq = current(fs, root)._1 + 1L
     val stage = new Path(root, s".stage_g$seq")
     if (fs.exists(stage)) fs.delete(stage, true)
     sizedForWrite(survivors, Seq("batch", "cell")).write.mode("overwrite")
@@ -435,11 +442,8 @@ object VersionedLayers {
       .flatMap { bdir =>
         val t = bdir.getPath.getName.stripPrefix("batch=")
         val gen = s"$t-g$seq"
-        val dest = new Path(storePath(root), gen)
-        if (fs.exists(dest)) fs.delete(dest, true) // replay debris
-        require(fs.rename(bdir.getPath, dest),
-          s"$dir: could not land rewritten cell generation $gen")
-        fs.listStatus(dest).toSeq
+        land(fs, root, bdir.getPath, gen)
+        fs.listStatus(new Path(storePath(root), gen)).toSeq
           .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
           .map { cdir =>
             val c = cdir.getPath.getName.stripPrefix("cell=").toInt
@@ -464,35 +468,17 @@ object VersionedLayers {
     })
   }
 
-  /** Route a tag-scoped layer write by layout: versioned roots go through
-    * [[publishLayer]], legacy roots keep the byte-identical in-place
-    * `batch=<tag>` overwrite. Every append site writes through here. */
-  private[graft] def writeTagged(spark: SparkSession, dir: String, tag: String,
-                                 df: DataFrame,
-                                 subPartition: Seq[String] = Seq.empty): Unit =
-    if (isVersioned(spark, dir)) publishLayer(spark, dir, tag, df, subPartition)
-    else {
-      // the legacy in-place layer gets the same adaptive sizing: a
-      // KB-sized batch layer as one file, not one near-empty file per
-      // shuffle partition (deterministic for a deterministic input, so
-      // the replay byte-identity drills hold)
-      val w = sizedForWrite(df, subPartition).write.mode("overwrite")
-      (if (subPartition.nonEmpty) w.partitionBy(subPartition: _*) else w)
-        .parquet(s"$dir/batch=$tag")
-    }
-
-  /** The versioned dirty-layer rewrite behind the delete folds:
-    * `survivors` (carrying the `batch` column, restricted to
-    * `dirtyTags`) stages under ONE `partitionBy(batch)` job — the same
-    * single-job economics as the legacy dynamic overwrite — then each
-    * staged layer renames into the store and the manifest swaps all
-    * dirty tags at once (staged ones remapped, emptied ones dropped).
-    * Readers of the pre-delete manifest keep their store dirs. */
+  /** The dirty-layer rewrite behind the delete folds: `survivors`
+    * (carrying the `batch` column, restricted to `dirtyTags`) stages
+    * under ONE `partitionBy(batch)` job, then each staged layer renames
+    * into the store and the manifest swaps all dirty tags at once
+    * (staged ones remapped, emptied ones dropped). Readers of the
+    * pre-delete manifest keep their store dirs. */
   private[graft] def rewriteLayers(spark: SparkSession, dir: String,
                                    dirtyTags: Seq[String],
                                    survivors: DataFrame): Unit = {
     val (fs, root) = fsOf(spark, dir)
-    val seq = currentSeq(fs, root)
+    val seq = current(fs, root)._1
     val stage = new Path(root, s".stage_g${seq + 1L}")
     if (fs.exists(stage)) fs.delete(stage, true)
     sizedForWrite(survivors, Seq("batch")).write.mode("overwrite")
@@ -502,10 +488,7 @@ object VersionedLayers {
       .map(_.getPath.getName.stripPrefix("batch=")).toSet
     val remapped = staged.toSeq.sorted.map { t =>
       val rel = s"$t-g${seq + 1L}"
-      val dest = new Path(storePath(root), rel)
-      if (fs.exists(dest)) fs.delete(dest, true) // replay debris
-      require(fs.rename(new Path(stage, s"batch=$t"), dest),
-        s"$dir: could not land rewritten layer $t")
+      land(fs, root, new Path(stage, s"batch=$t"), rel)
       t -> rel
     }.toMap
     fs.delete(stage, true)
@@ -527,11 +510,20 @@ object VersionedLayers {
     }
   }
 
-  /** The versioned compaction core: fold every live layer through
-    * `content` into ONE `batch=<tag>` layer (manifest-atomic — no trash
-    * protocol, no refusal window: a crash at any point leaves either the
-    * old manifest or the new one, both complete). Returns the pre-fold
-    * layer count, [[Maintenance.compactLayers]]' contract. */
+  /** The compaction core: fold every live layer through `content` into
+    * ONE `batch=<tag>` layer (manifest-atomic: a crash at any point
+    * leaves either the old manifest or the new one, both complete, and a
+    * concurrent reader keeps the one it resolved). Every append-maintained
+    * artifact grows a layer per batch, and probes then list and read N
+    * small files per leaf. With `content = identity` the fold is a pure
+    * re-layout — the IVF-PQ index (x85, `Similarity.ivfPqCompactLayers`,
+    * `subPartition = Seq("cell")`) and the dedup fingerprint indexes
+    * (x88/x90, no sub-partition) — so readers are bit-equal before and
+    * after; the label store's last-writer-wins collapse passes a semantic
+    * fold. Cost is one full artifact read + write. Returns the pre-fold
+    * layer count. Reference anchor: the partition compaction pass
+    * (`HiveBatchedSink.scala:297-358`) — layer management after
+    * incremental landing IS the reference's core job. */
   private[graft] def compactVersioned(spark: SparkSession, dir: String,
                                       tag: String, subPartition: Seq[String])
                                      (content: DataFrame => DataFrame): Int = {
@@ -542,8 +534,7 @@ object VersionedLayers {
     if (live.size <= 1) return live.size
     val folded = content(readEntries(spark, root, m, m.layers)).drop("batch")
     // no snapshot needed: the fold READS the live store dirs and WRITES a
-    // fresh one — unlike the in-place core, source and destination never
-    // collide, which is the whole point of the layout
+    // fresh one — source and destination never collide
     publishLayer(spark, dir, tag, folded, subPartition, replaceAll = true)
     live.size
   }

@@ -785,7 +785,7 @@ object DedupOracles {
     // rebuild, i.e. the fold maintains index ≡ fingerprints(live corpus).
     "x86_dedup_index_delete" -> dedupIndexDeleteSql,
     // x88: x86's history followed by a layer compaction — same rows
-    // (pure re-layout, Maintenance.compactLayers), so x86's oracle
+    // (pure re-layout, VersionedLayers.compactVersioned), so x86's oracle
     // verbatim
     "x88_dedup_index_compact" -> dedupIndexDeleteSql,
     // x95: x88 through the threshold POLICY (compactIfNeeded) — a fired

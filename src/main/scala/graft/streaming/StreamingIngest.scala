@@ -1798,7 +1798,8 @@ object StreamingIngest {
         .start()
       try q.awaitTermination() finally { if (q.isActive) q.stop() }
     }
-    Similarity.ivfPqProbe(spark, sfDir, spark.read.parquet(idxDir),
+    Similarity.ivfPqProbe(spark, sfDir,
+      graft.operators.VersionedLayers.readAny(spark, idxDir),
       queryId = 0L, k = 10, nprobe = 4)
   }
 
@@ -1872,8 +1873,8 @@ object StreamingIngest {
         .start()
       try q.awaitTermination() finally { if (q.isActive) q.stop() }
     }
-    spark.read.parquet(idxDir).select(col("doc_id"), col("fp"))
-      .orderBy(col("doc_id"))
+    graft.operators.VersionedLayers.readAny(spark, idxDir)
+      .select(col("doc_id"), col("fp")).orderBy(col("doc_id"))
   }
 
   /** T24 — the NEAR-dup triple index's upsert as an OPERATIONAL LOOP:
@@ -1933,8 +1934,8 @@ object StreamingIngest {
         .start()
       try q.awaitTermination() finally { if (q.isActive) q.stop() }
     }
-    spark.read.parquet(s"$idxDir/fp").select(col("doc_id"), col("fp"))
-      .orderBy(col("doc_id"))
+    graft.operators.VersionedLayers.readAny(spark, s"$idxDir/fp")
+      .select(col("doc_id"), col("fp")).orderBy(col("doc_id"))
   }
 
   /** T25 — the winnowing span index's upsert as an OPERATIONAL LOOP:
@@ -1996,7 +1997,7 @@ object StreamingIngest {
     }
     // the x91 probe over the streamed state: every non-prior layer is
     // the novel side, whatever its runId tag
-    TextAnalysis.spanHitProbe(spark.read.parquet(idxDir)
+    TextAnalysis.spanHitProbe(graft.operators.VersionedLayers.readAny(spark, idxDir)
       .withColumn("batch",
         when(col("batch") === "prior", "prior").otherwise("novel")))
   }
@@ -2067,7 +2068,7 @@ object StreamingIngest {
         .start()
       try q.awaitTermination() finally { if (q.isActive) q.stop() }
     }
-    spark.read.parquet(idxDir)
+    graft.operators.VersionedLayers.readAny(spark, idxDir)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
       .orderBy(col("vec_id"))
   }
@@ -2226,7 +2227,7 @@ object StreamingIngest {
     // fails to fire (or a span consult that fires mid-epoch) breaks the
     // hash, not merely an assertion.
     val spanConsult = Maintenance.compactIfNeeded(spark, dirs.spanDir,
-      "prior", Seq.empty, "graft_t29_span_", maxLayers = 16)
+      "prior", Seq.empty, maxLayers = 16)
     Maintenance.multiArtifactProbe(spark, sfDir, dirs)
       .unionByName(Maintenance.policyRows(spark, fired.keys.toSeq,
         _ => None, n => Some(fired(n)), spanConsult))
@@ -2240,7 +2241,7 @@ object StreamingIngest {
     * compacts both cluster artifacts — the edge table by pure re-layout,
     * the label store by the last-writer-wins SEMANTIC fold
     * (`Dedup.clusterLabelsCompactContent`), both through the shared
-    * crash-safe core. Final labels are CC over the live graph whatever
+    * compaction core. Final labels are CC over the live graph whatever
     * the batch split (deletes remove a doc's edges everywhere; an
     * insert's edge to a later-deleted doc leaves with that delete;
     * cancels stay same-batch), and both compactions are view-invariant —
@@ -2285,9 +2286,9 @@ object StreamingIngest {
     // (three layers each after two batches — the count bar fires; both
     // folds are view-invariant, so the oracle carries through them)
     val edgesFired = Maintenance.compactIfNeeded(spark, dirs.edgesDir,
-      "compacted", Seq.empty, "graft_t30_edges_", maxLayers = 1)
+      "compacted", Seq.empty, maxLayers = 1)
     val labelsFired = Maintenance.compactIfNeededWith(spark, dirs.labelsDir,
-      "compacted", Seq.empty, "graft_t30_labels_", maxLayers = 1)(
+      "compacted", Seq.empty, maxLayers = 1)(
       Dedup.clusterLabelsCompactContent)
     require(edgesFired && labelsFired,
       s"t30: the cluster sweep did not fire (edges=$edgesFired, labels=$labelsFired)")
@@ -2546,8 +2547,8 @@ object StreamingIngest {
     * form of `Dedup.dedupAgainstIndex` — x16's operational mode fed by a
     * continuously-arriving crawl). Replay-idempotent under `foreachBatch`'s
     * at-least-once contract, by construction rather than by marker files:
-    *  - the fingerprint index is parquet partitioned by `batch=<tag>` where
-    *    the tag is `<runId>-<batchId>` ([[runId]] — durable in the
+    *  - the fingerprint index is layered by `batch=<tag>` where the tag
+    *    is `<runId>-<batchId>` ([[runId]] — durable in the
     *    checkpoint dir): the probe EXCLUDES the current tag, so a replayed
     *    batch is never poisoned by its own earlier partial attempt (which
     *    would silently drop every doc of the batch). Carrying the RUN
@@ -2556,15 +2557,15 @@ object StreamingIngest {
     *    advertised cross-run mode) must treat the old run's batch 0 as
     *    prior corpus, not as its own attempt — a bare batchId key would
     *    both exclude it from the probe and overwrite it;
-    *  - survivors and their index entries are written `overwrite` to
-    *    tag-scoped paths, so a replay clobbers itself byte-for-byte
+    *  - survivors and their index entries publish as tag-scoped layers,
+    *    so a replay replaces its own layer instead of adding a second
     *    (batch content is deterministic from checkpointed offsets).
     * The index holds one `(hash, keeper doc_id)` row per kept doc —
     * O(corpus) metadata, a few GB at 100 TB — and the probe is one anti
     * hash-join; prior text is never rescanned. Within a batch, x1's
     * min-doc_id keeper rule applies.
-    * `batch` must not pre-exist as an input column: it is the index/output
-    * partition key (tag-scoped paths are what make replays overwrite). */
+    * `batch` must not pre-exist as an input column: every read of the
+    * index/output re-attaches it as the layer tag. */
   private[graft] def dedupIndexBatch(batch: DataFrame, batchTag: String,
                                      indexDir: String, outDir: String): Unit = {
     val withFp = batch.withColumn("fp", graft.functions.TextFns.polyHash(col("text")))
@@ -2573,11 +2574,11 @@ object StreamingIngest {
     val survivors = graft.operators.Dedup.probeIndexKeepFirst(withFp, indexDir, batchTag)
     survivors.persist()
     try {
-      graft.operators.VersionedLayers.writeTagged(survivors.sparkSession,
+      graft.operators.VersionedLayers.publishLayer(survivors.sparkSession,
         outDir, batchTag, survivors.drop("fp"))
       // (fp, doc_id) — the keeper id is what lets the delete fold (x86/t23)
       // address index rows by key without a corpus scan
-      graft.operators.VersionedLayers.writeTagged(survivors.sparkSession,
+      graft.operators.VersionedLayers.publishLayer(survivors.sparkSession,
         indexDir, batchTag, survivors.select(col("fp"), col("doc_id")))
     } finally survivors.unpersist()
   }
@@ -2700,11 +2701,11 @@ object StreamingIngest {
           dd.indexUpsertFold(spark, s"$indexDir/$sub", k, batchTag, rows,
             knownDirty = Some(dirtyBySub.getOrElse(sub, Seq.empty)))
           ()
-        case None => vl.writeTagged(spark, s"$indexDir/$sub", batchTag, rows)
+        case None => vl.publishLayer(spark, s"$indexDir/$sub", batchTag, rows)
       }
       graft.operators.Maintenance.inParallel(Seq(
         () => graft.operators.Maintenance.labeled(spark, "near: out write") {
-          vl.writeTagged(spark, outDir, batchTag,
+          vl.publishLayer(spark, outDir, batchTag,
             survivors.drop("fp", "sh", "n")) },
         // (fp, doc_id) — the keeper id lets the delete fold (x89) address
         // all three sub-indexes by one key column without a corpus scan
@@ -2875,7 +2876,7 @@ object StreamingIngest {
           idxDir, outDir, ck, Some(threshold))
       }
     }
-    spark.read.parquet(outDir)
+    graft.operators.VersionedLayers.readAny(spark, outDir)
       .select(col("doc_id"), length(col("text")).cast("long").as("text_len"))
       .orderBy(col("doc_id"))
   }
@@ -3036,13 +3037,13 @@ object StreamingIngest {
                 col("nrm")), keyCol = "vec_id", knownDirty = knownDirty) }
         case None =>
           graft.operators.Maintenance.labeled(spark, "sem: index write") {
-            graft.operators.VersionedLayers.writeTagged(spark, indexDir,
+            graft.operators.VersionedLayers.publishLayer(spark, indexDir,
               batchTag,
               kept.select(col("vec_id"), col("embedding"), col("cell"),
                 col("nrm"))) }
       }
       graft.operators.Maintenance.labeled(spark, "sem: out write") {
-        graft.operators.VersionedLayers.writeTagged(spark, outDir, batchTag,
+        graft.operators.VersionedLayers.publishLayer(spark, outDir, batchTag,
           kept.select(col("vec_id"), col("cell").cast("long").as("cell"))) }
       ()
     } finally kept.unpersist()
@@ -3108,7 +3109,7 @@ object StreamingIngest {
           cents, root.resolve("idx").toString, outDir, ck, threshold)
       }
     }
-    spark.read.parquet(outDir)
+    graft.operators.VersionedLayers.readAny(spark, outDir)
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
       .orderBy(col("vec_id"))
   }

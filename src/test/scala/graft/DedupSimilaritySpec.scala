@@ -1,12 +1,36 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, VersionedLayers}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** [EXT] operator tests: planted near-dups found, LSH candidates ⊆ exact,
   * ANN brute/IVF agreement on the fixture. */
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  /** Publish a hand-built table as layers: one publish per distinct
+    * `batch` value, in tag order. */
+  private def publishLayers(dir: String, df: DataFrame,
+                            sub: Seq[String] = Seq.empty): Unit =
+    df.select($"batch").distinct().as[String].collect().sorted.foreach { t =>
+      VersionedLayers.publishLayer(spark, dir, t,
+        df.where($"batch" === t).drop("batch"), sub)
+    }
+
+  /** Run `publish` and move the pointer back to where it was: the state a
+    * crash between the manifest write and the pointer move leaves (the new
+    * store dirs and manifest exist, no reader can reach them). */
+  private def crashBeforePointerMove(dir: String)(publish: => Any): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prior = graft.streaming.StreamingIngest.readViewPointer(fs, root)
+    publish
+    graft.streaming.StreamingIngest.writeViewPointer(fs, root, prior)
+  }
+
+  private def tags(dir: String): Seq[String] =
+    VersionedLayers.layers(spark, dir).map(_.tag).distinct.sorted
 
   test("minhash LSH finds the planted near-dup pairs (J≥0.8 per exact jaccard)") {
     val exact = Dedup.ngramJaccard(spark, sf, 0.8)
@@ -545,30 +569,31 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("readBatchIndex: write debris reads as empty; a malformed index propagates") {
-    import org.apache.spark.sql.functions.col
     val dir = graft.Tables.scratchDir("graft_idx_probe").toString
     def empty = spark.range(0).select(col("id").as("fp"))
     // missing dir -> empty (first run)
     assert(Dedup.readBatchIndex(spark, s"$dir/missing", "t0")(empty).count() == 0)
-    // crashed first write: only hidden debris -> still "no index yet", so
-    // the retry self-heals instead of failing schema inference forever
-    val debris = java.nio.file.Paths.get(dir, "idx", "batch=t0", "_temporary")
-    java.nio.file.Files.createDirectories(debris)
-    java.nio.file.Files.write(debris.resolve("part-stub"), "x".getBytes)
+    // crashed first publish: a store dir but no pointer -> still "no index
+    // yet", so the retry self-heals instead of failing forever
+    spark.range(3).select(col("id").as("fp")).write.parquet(s"$dir/idx/store/t0-g1")
     assert(Dedup.readBatchIndex(spark, s"$dir/idx", "t0")(empty).count() == 0)
-    // legacy flat layout (no batch= partitions): structurally incompatible
-    // and must THROW, not silently read as first-run (that would re-admit
-    // the whole prior corpus)
+    // an in-place layout (batch= dirs, no pointer) and a legacy flat
+    // layout (parquet files, no batch= level) must THROW, not silently
+    // read as first-run (that would re-admit the whole prior corpus)
+    spark.range(3).select(col("id").as("fp")).write.parquet(s"$dir/inplace/batch=t1")
     spark.range(3).select(col("id").as("fp")).write.parquet(s"$dir/flat")
-    intercept[org.apache.spark.sql.AnalysisException] {
-      Dedup.readBatchIndex(spark, s"$dir/flat", "t0")(empty).count()
+    Seq("inplace", "flat").foreach { d =>
+      val e = intercept[IllegalArgumentException] {
+        Dedup.readBatchIndex(spark, s"$dir/$d", "t0")(empty).count()
+      }
+      assert(e.getMessage.contains(s"$dir/$d"), e.getMessage)
     }
-    // real batch-partitioned index: other batches visible, own tag excluded
-    spark.range(5).select(col("id").as("fp")).write.parquet(s"$dir/idx/batch=t1")
+    // a published index: other batches visible, own tag excluded
+    VersionedLayers.publishLayer(spark, s"$dir/idx", "t1",
+      spark.range(5).select(col("id").as("fp")))
     assert(Dedup.readBatchIndex(spark, s"$dir/idx", "t1")(empty).count() == 0)
     assert(Dedup.readBatchIndex(spark, s"$dir/idx", "t0")(empty).count() == 5)
   }
-
   test("x37: novelty is 100% for the first doc and the novel counts tile the corpus vocab") {
     import graft.operators.TextAnalysis
     import graft.functions.TextFns
@@ -806,8 +831,8 @@ class DedupSimilaritySpec extends SparkSpec {
     // replaying batch b1 (a retry) must clobber itself, not duplicate
     val replayed = Similarity.ivfPqAppend(spark, sf, e.where(col("vec_id") > half), idx, "b1")
     assert(rows(replayed) == full, "replayed batch duplicated or altered rows")
-    // the nprobe filter still prunes at the directory level through batch=
-    val plan = spark.read.parquet(idx).where(col("cell").isin(0, 1))
+    // the nprobe filter still prunes at the directory level through the layers
+    val plan = VersionedLayers.readAny(spark, idx).where(col("cell").isin(0, 1))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell#"),
       s"cell filter did not reach PartitionFilters through the batch layer:\n$plan")
@@ -862,21 +887,17 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("ivfPqLayerDeleteKeys: clean (batch, cell) leaves keep their exact files, an " +
-      "all-doomed leaf drops, gate sides agree, and a replay touches nothing") {
-    import spark.implicits._
-    def mk(tag: String): String = {
-      val idxDir = graft.Tables.scratchDir(s"graft_x83_spec_$tag").toString + "/idx"
-      // base layer: cell 0 clean, cell 1 partially doomed, cell 2 fully
-      // doomed; grow layer: cell 0 partially doomed, cell 1 clean — the
-      // same CELL is dirty in one layer and clean in the other, which is
-      // exactly what the flat x80 swap cannot address
+      "all-doomed leaf drops, and a replay touches nothing") {
+    val idxDir = graft.Tables.scratchDir("graft_x83_spec").toString + "/idx"
+    // base layer: cell 0 clean, cell 1 partially doomed, cell 2 fully
+    // doomed; grow layer: cell 0 partially doomed, cell 1 clean — the
+    // same CELL is dirty in one layer and clean in the other, which is
+    // exactly what the flat x80 swap cannot address
+    publishLayers(idxDir,
       Seq(("base", 1L, 0), ("base", 2L, 0), ("base", 3L, 1), ("base", 4L, 1),
           ("base", 5L, 2), ("grow", 6L, 0), ("grow", 7L, 0), ("grow", 8L, 1))
-        .toDF("batch", "vec_id", "cell")
-        .write.partitionBy("batch", "cell").parquet(idxDir)
-      idxDir
-    }
-    def files(idxDir: String): Map[String, (Long, Long)] = {
+        .toDF("batch", "vec_id", "cell"), Seq("cell"))
+    def files(): Map[String, (Long, Long)] = {
       val fs = new org.apache.hadoop.fs.Path(idxDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(idxDir), true)
@@ -886,38 +907,36 @@ class DedupSimilaritySpec extends SparkSpec {
           b += s.getPath.toString -> ((s.getLen, s.getModificationTime)) }
       b.result()
     }
-    def rows(idxDir: String): Set[(String, Long, Int)] =
-      spark.read.parquet(idxDir).select(col("batch"), col("vec_id"), col("cell"))
+    def leaves(): Map[(String, Int), String] = VersionedLayers.layers(spark, idxDir)
+      .map(l => (l.tag, l.cell.get) -> l.rel).toMap
+    def rows(): Set[(String, Long, Int)] =
+      VersionedLayers.readAny(spark, idxDir).select(col("batch"), col("vec_id"), col("cell"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
     val keys = Seq(4L, 5L, 6L).toDF("vec_id")
-    val survivors = Set(("base", 1L, 0), ("base", 2L, 0), ("base", 3L, 1),
-      ("grow", 7L, 0), ("grow", 8L, 1))
-    val idxDir = mk("isin")
-    val before = files(idxDir)
+    val before = files()
+    val leavesBefore = leaves()
     val dirty = Similarity.ivfPqLayerDeleteKeys(spark, idxDir, keys)
     assert(dirty == Seq(("base", 1), ("base", 2), ("grow", 0)), s"dirty: $dirty")
-    val after = files(idxDir)
-    // clean leaves keep their exact files — including cell 0 of base and
-    // cell 1 of grow, the leaves sharing a CELL id with a dirty leaf of
-    // the OTHER layer
-    val clean = before.filter { case (p, _) =>
-      p.contains("batch=base/cell=0") || p.contains("batch=grow/cell=1") }
+    val after = files()
+    val leavesAfter = leaves()
+    // clean leaves keep their store dirs and exact files — including cell
+    // 0 of base and cell 1 of grow, the leaves sharing a CELL id with a
+    // dirty leaf of the OTHER layer
+    val cleanRels = Seq(("base", 0), ("grow", 1)).map(leavesBefore)
+    assert(cleanRels == Seq(("base", 0), ("grow", 1)).map(leavesAfter),
+      "a clean (batch, cell) leaf was re-genned")
+    val clean = before.filter { case (p, _) => cleanRels.exists(r => p.contains(s"/$r/")) }
     assert(clean.nonEmpty && clean.forall { case (p, m) => after.get(p).contains(m) },
       "a clean (batch, cell) leaf was rewritten")
-    // the all-doomed leaf's dir is gone; its cell survives in the OTHER layer
-    assert(!after.keys.exists(_.contains("batch=base/cell=2")))
-    assert(rows(idxDir) == survivors)
-    // replay: keys already absent → empty dirty set, no file touched
+    // the all-doomed leaf leaves the manifest; its cell survives in the OTHER layer
+    assert(!leavesAfter.contains(("base", 2)))
+    assert(rows() == Set(("base", 1L, 0), ("base", 2L, 0), ("base", 3L, 1),
+      ("grow", 7L, 0), ("grow", 8L, 1)))
+    // replay: keys already absent → empty dirty set, nothing published
     assert(Similarity.ivfPqLayerDeleteKeys(spark, idxDir, keys).isEmpty)
-    assert(files(idxDir) == after, "a replayed layer delete rewrote files")
-    // past the gate the SAME restriction runs as a pair semi-join — the
-    // final state must be identical to the literal-disjunction side
-    val idxDir2 = mk("semi")
-    assert(Similarity.ivfPqLayerDeleteKeys(spark, idxDir2, keys, gate = 0)
-      == Seq(("base", 1), ("base", 2), ("grow", 0)))
-    assert(rows(idxDir2) == survivors)
+    assert(files() == after && leaves() == leavesAfter,
+      "a replayed layer delete rewrote files")
   }
-
   test("x83/x84: layered delete and one-pass upsert converge; no doomed id is retrievable; " +
       "the probe partition-prunes through the batch layer") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -942,60 +961,46 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("x85 compaction: probe-invariant re-layout; layers fold to one; crash drills restore or complete") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
     // row-level invariance at fixture scale: the compacted probe equals
     // x83's (same survivor set, one layer instead of two)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(rows(Similarity.ivfPqCompactTopK(spark, sf)) ==
       rows(Similarity.ivfPqDeleteTopK(spark, sf)),
       "compaction changed the probe result")
-    // structural + crash drills on a hand-layered dir
-    def mk(): (String, Path, org.apache.hadoop.fs.FileSystem) = {
+    // structural + crash drills on a hand-layered index
+    def mk(): String = {
       val idx = graft.Tables.scratchDir("graft_x85_spec").toString + "/idx"
-      Seq(("base", 1L, 0), ("base", 2L, 1), ("grow", 3L, 0), ("grow", 4L, 2))
-        .toDF("batch", "vec_id", "cell")
-        .write.partitionBy("batch", "cell").parquet(idx)
-      val p = new Path(idx)
-      (idx, p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+      publishLayers(idx,
+        Seq(("base", 1L, 0), ("base", 2L, 1), ("grow", 3L, 0), ("grow", 4L, 2))
+          .toDF("batch", "vec_id", "cell"), Seq("cell"))
+      idx
     }
-    def layers(fs: org.apache.hadoop.fs.FileSystem, p: Path): Seq[String] =
-      fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
     def contents(idx: String): Set[(Long, Int)] =
-      spark.read.parquet(idx).select(col("vec_id"), col("cell"))
+      VersionedLayers.readAny(spark, idx).select(col("vec_id"), col("cell"))
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val all = Set((1L, 0), (2L, 1), (3L, 0), (4L, 2))
-    val (idx, root, fs) = mk()
+    val idx = mk()
     assert(Similarity.ivfPqCompactLayers(spark, idx, "c0") == 2)
-    assert(layers(fs, root) == Seq("batch=c0"), "layers did not fold to one")
+    assert(tags(idx) == Seq("c0"), "layers did not fold to one")
     assert(contents(idx) == all, "compaction changed the row set")
     // idempotent re-entry: one layer → nothing to fold
     assert(Similarity.ivfPqCompactLayers(spark, idx, "c0") == 1)
-    // drill 1 — death between retire and publish: every layer sits in
-    // trash, nothing live; the next compaction must RESTORE before it
-    // reads, then complete
-    val (idx2, root2, fs2) = mk()
-    val trash2 = new Path(root2.getParent, "." + root2.getName + "_compact_trash")
-    fs2.mkdirs(trash2)
-    layers(fs2, root2).foreach { n =>
-      require(fs2.rename(new Path(root2, n), new Path(trash2, n)))
-    }
+    // drill 1 — death before the pointer move: the compacted store dir
+    // and its manifest exist, but readers still see the prior version
+    // intact; the re-run replaces the debris and completes
+    val idx2 = mk()
+    crashBeforePointerMove(idx2)(Similarity.ivfPqCompactLayers(spark, idx2, "c0"))
+    assert(tags(idx2) == Seq("base", "grow") && contents(idx2) == all,
+      "a crash before the pointer move did not leave the prior version")
     assert(Similarity.ivfPqCompactLayers(spark, idx2, "c0") == 2)
-    assert(layers(fs2, root2) == Seq("batch=c0") && contents(idx2) == all,
-      "retire-crash recovery did not restore and complete")
-    // drill 2 — death between publish and trash delete: the compacted
-    // layer is live, the old layers still in trash; re-entry must drop
-    // the trash WITHOUT restoring (restoring would double every vector)
-    val (idx3, root3, fs3) = mk()
-    assert(Similarity.ivfPqCompactLayers(spark, idx3, "c0") == 2)
-    val trash3 = new Path(root3.getParent, "." + root3.getName + "_compact_trash")
-    fs3.mkdirs(new Path(trash3, "batch=base")) // stranded retired layer
-    assert(Similarity.ivfPqCompactLayers(spark, idx3, "c0") == 1)
-    assert(!fs3.exists(trash3) && contents(idx3) == all,
-      "publish-crash recovery restored retired layers over the live compacted one")
+    assert(tags(idx2) == Seq("c0") && contents(idx2) == all,
+      "the re-run after a pre-pointer crash did not complete")
+    // drill 2 — death after the pointer move (before GC reclaimed the old
+    // layers' dirs): re-entry folds nothing and doubles no vector
+    assert(Similarity.ivfPqCompactLayers(spark, idx2, "c0") == 1)
+    assert(contents(idx2) == all, "re-entry after a post-pointer crash changed rows")
   }
-
   test("x80: the maintained index's probe equals a rebuild from survivors under the frozen quantizer") {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
@@ -1281,19 +1286,15 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("dedupIndexDeleteKeys: clean layers keep their exact files, never-kept keys are " +
-      "no-ops, an all-doomed layer drops, gate sides agree, and a replay touches nothing") {
-    import spark.implicits._
-    def mk(tag: String): String = {
-      val idxDir = graft.Tables.scratchDir(s"graft_x86_spec_$tag").toString + "/idx"
-      // prior layer: docs 1-3; fresh layer: docs 4-5 — fp values arbitrary
-      // but distinct (the artifact invariant: one keeper per fp)
+      "no-ops, an all-doomed layer drops, and a replay touches nothing") {
+    val idxDir = graft.Tables.scratchDir("graft_x86_spec").toString + "/idx"
+    // prior layer: docs 1-3; fresh layer: docs 4-5 — fp values arbitrary
+    // but distinct (the artifact invariant: one keeper per fp)
+    publishLayers(idxDir,
       Seq(("prior", 10L, 1L), ("prior", 11L, 2L), ("prior", 12L, 3L),
           ("fresh", 13L, 4L), ("fresh", 14L, 5L))
-        .toDF("batch", "fp", "doc_id")
-        .write.partitionBy("batch").parquet(idxDir)
-      idxDir
-    }
-    def files(idxDir: String): Map[String, (Long, Long)] = {
+        .toDF("batch", "fp", "doc_id"))
+    def files(): Map[String, (Long, Long)] = {
       val fs = new org.apache.hadoop.fs.Path(idxDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(idxDir), true)
@@ -1303,44 +1304,42 @@ class DedupSimilaritySpec extends SparkSpec {
           b += s.getPath.toString -> ((s.getLen, s.getModificationTime)) }
       b.result()
     }
-    def rows(idxDir: String): Set[(String, Long, Long)] =
-      spark.read.parquet(idxDir).select(col("batch"), col("fp"), col("doc_id"))
+    def rows(): Set[(String, Long, Long)] =
+      VersionedLayers.readAny(spark, idxDir).select(col("batch"), col("fp"), col("doc_id"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    def rel(tag: String): Option[String] =
+      VersionedLayers.layers(spark, idxDir).find(_.tag == tag).map(_.rel)
     // doc 2 dirties prior; 99 was never kept (ingest-time duplicate) — a
     // structural no-op that must not dirty anything
     val keys = Seq(2L, 99L).toDF("doc_id")
     val survivors = Set(("prior", 10L, 1L), ("prior", 12L, 3L),
       ("fresh", 13L, 4L), ("fresh", 14L, 5L))
-    val idxDir = mk("isin")
-    val before = files(idxDir)
+    val before = files()
+    val freshRel = rel("fresh").get
     assert(Dedup.dedupIndexDeleteKeys(spark, idxDir, keys) == Seq("prior"))
-    val after = files(idxDir)
-    val clean = before.filter(_._1.contains("batch=fresh"))
-    assert(clean.nonEmpty && clean.forall { case (p, m) => after.get(p).contains(m) },
+    val after = files()
+    val clean = before.filter(_._1.contains(s"/$freshRel/"))
+    assert(rel("fresh").contains(freshRel) && clean.nonEmpty &&
+      clean.forall { case (p, m) => after.get(p).contains(m) },
       "the clean fresh layer was rewritten")
-    assert(rows(idxDir) == survivors)
+    assert(rows() == survivors)
     // replay: keys already absent → empty dirty set, no file touched
     assert(Dedup.dedupIndexDeleteKeys(spark, idxDir, keys).isEmpty)
-    assert(files(idxDir) == after, "a replayed delete rewrote files")
-    // an all-doomed layer's directory drops entirely
+    assert(files() == after, "a replayed delete rewrote files")
+    // an all-doomed layer leaves the manifest entirely
     assert(Dedup.dedupIndexDeleteKeys(spark, idxDir, Seq(4L, 5L).toDF("doc_id"))
       == Seq("fresh"))
-    assert(!files(idxDir).keys.exists(_.contains("batch=fresh")),
-      "emptied fresh layer still has files")
-    assert(rows(idxDir) == survivors.filter(_._1 == "prior"))
-    // past the gate the restriction runs as a semi-join — same final state
-    val idxDir2 = mk("semi")
-    assert(Dedup.dedupIndexDeleteKeys(spark, idxDir2, keys, gate = 0) == Seq("prior"))
-    assert(rows(idxDir2) == survivors)
+    assert(tags(idxDir) == Seq("prior"), "emptied fresh layer is still live")
+    assert(rows() == survivors.filter(_._1 == "prior"))
   }
-
   test("dedup-index upsert: delete-first readmits an insert matching a deleted keeper; " +
       "same-batch cancels and in-batch keeper rule hold; batched folds legitimately " +
       "diverge from the one-shot where arrival order matters") {
     import spark.implicits._
+    // an index every layer of which was emptied holds no layers at all
     def ids(idxDir: String): Set[Long] =
-      spark.read.parquet(idxDir).select(col("doc_id")).collect()
-        .map(_.getLong(0)).toSet
+      VersionedLayers.read(spark, idxDir)(Seq.empty[Long].toDF("doc_id"))
+        .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     val idx = graft.Tables.scratchDir("graft_x87_spec").toString + "/idx"
     Dedup.dedupAgainstIndex(spark,
       Seq((1L, "aaa"), (2L, "bbb")).toDF("doc_id", "text"), idx, "s")
@@ -1389,7 +1388,7 @@ class DedupSimilaritySpec extends SparkSpec {
       (root + "/idx", root + "/out")
     }
     def keptIds(idx: String): Set[Long] =
-      spark.read.parquet(s"$idx/fp").select(col("doc_id"))
+      VersionedLayers.readAny(spark, s"$idx/fp").select(col("doc_id"))
         .collect().map(_.getLong(0)).toSet
     // control: with keeper 1 alive, near-dup B is dropped
     val (idx1, out1) = mk("ctl")
@@ -1408,7 +1407,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(dirty == Map("fp" -> Seq("prior"), "pfx" -> Seq("prior"),
       "sh" -> Seq("prior")), s"dirty: $dirty")
     Seq("fp", "pfx", "sh").foreach { sub =>
-      assert(spark.read.parquet(s"$idx2/$sub")
+      assert(VersionedLayers.readAny(spark, s"$idx2/$sub")
         .where(col("doc_id") === 1L).count() == 0,
         s"$sub still holds the doomed keeper's rows")
     }
@@ -1468,7 +1467,7 @@ class DedupSimilaritySpec extends SparkSpec {
           keyCol = "vec_id")
       StreamingIngest.semanticDedupBatch(vecs(10L -> Seq(0.99f, 0.01f)),
         "fresh", cents, idx, root + "/out", 0.4)
-      spark.read.parquet(idx).select(col("vec_id"))
+      VersionedLayers.readAny(spark, idx).select(col("vec_id"))
         .collect().map(_.getLong(0)).toSet
     }
     assert(semFold("ctl", deleteFirst = false) == Set(1L),
@@ -1510,9 +1509,8 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("x88: dedup-index compaction is content-invariant, folds layers to one on the " +
       "flat (no sub-partition) layout, and survives both crash windows") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    import graft.operators.Maintenance
+    def rows(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     // declared-query level: compaction after x86's history changes nothing
     assert(rows(Dedup.dedupIndexCompact(spark, sf)) ==
@@ -1520,56 +1518,43 @@ class DedupSimilaritySpec extends SparkSpec {
       "compaction changed the index contents")
     // structural + crash drills on the FLAT layout (subPartition = empty —
     // the branch x85's cell-partitioned drills never exercise)
-    def mk(): (String, Path, org.apache.hadoop.fs.FileSystem) = {
+    def mk(): String = {
       val idx = graft.Tables.scratchDir("graft_x88_spec").toString + "/idx"
-      Seq(("prior", 10L, 1L), ("prior", 11L, 2L), ("fresh", 13L, 4L))
-        .toDF("batch", "fp", "doc_id")
-        .write.partitionBy("batch").parquet(idx)
-      val p = new Path(idx)
-      (idx, p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+      publishLayers(idx, Seq(("prior", 10L, 1L), ("prior", 11L, 2L), ("fresh", 13L, 4L))
+        .toDF("batch", "fp", "doc_id"))
+      idx
     }
-    def layers(fs: org.apache.hadoop.fs.FileSystem, p: Path): Seq[String] =
-      fs.listStatus(p).map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
     def contents(idx: String): Set[(Long, Long)] =
-      spark.read.parquet(idx).select(col("fp"), col("doc_id"))
+      VersionedLayers.readAny(spark, idx).select(col("fp"), col("doc_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val all = Set((10L, 1L), (11L, 2L), (13L, 4L))
-    import graft.operators.Maintenance
-    val (idx, root, fs) = mk()
-    assert(Maintenance.compactLayers(spark, idx, "c0", Seq.empty, "graft_x88_sp_") == 2)
-    assert(layers(fs, root) == Seq("batch=c0") && contents(idx) == all)
-    assert(Maintenance.compactLayers(spark, idx, "c0", Seq.empty, "graft_x88_sp_") == 1)
-    // drill 1 — death between retire and publish: restore, then complete
-    val (idx2, root2, fs2) = mk()
-    val trash2 = new Path(root2.getParent, "." + root2.getName + "_compact_trash")
-    fs2.mkdirs(trash2)
-    layers(fs2, root2).foreach { n =>
-      require(fs2.rename(new Path(root2, n), new Path(trash2, n)))
-    }
-    assert(Maintenance.compactLayers(spark, idx2, "c0", Seq.empty, "graft_x88_sp_") == 2)
-    assert(layers(fs2, root2) == Seq("batch=c0") && contents(idx2) == all,
-      "retire-crash recovery did not restore and complete")
-    // drill 2 — death after publish: drop the stranded trash WITHOUT
-    // restoring (restoring would double every fingerprint)
-    val (idx3, root3, fs3) = mk()
-    assert(Maintenance.compactLayers(spark, idx3, "c0", Seq.empty, "graft_x88_sp_") == 2)
-    val trash3 = new Path(root3.getParent, "." + root3.getName + "_compact_trash")
-    fs3.mkdirs(new Path(trash3, "batch=prior"))
-    assert(Maintenance.compactLayers(spark, idx3, "c0", Seq.empty, "graft_x88_sp_") == 1)
-    assert(!fs3.exists(trash3) && contents(idx3) == all,
-      "publish-crash recovery restored retired layers over the live compacted one")
+    val idx = mk()
+    assert(VersionedLayers.compactVersioned(spark, idx, "c0", Seq.empty)(identity) == 2)
+    assert(tags(idx) == Seq("c0") && contents(idx) == all)
+    assert(VersionedLayers.compactVersioned(spark, idx, "c0", Seq.empty)(identity) == 1)
+    // drill 1 — death before the pointer move: the prior version reads
+    // intact, then the re-run replaces the debris and completes
+    val idx2 = mk()
+    crashBeforePointerMove(idx2)(VersionedLayers.compactVersioned(spark, idx2, "c0", Seq.empty)(identity))
+    assert(tags(idx2) == Seq("fresh", "prior") && contents(idx2) == all,
+      "a crash before the pointer move did not leave the prior version")
+    assert(VersionedLayers.compactVersioned(spark, idx2, "c0", Seq.empty)(identity) == 2)
+    assert(tags(idx2) == Seq("c0") && contents(idx2) == all,
+      "the re-run after a pre-pointer crash did not complete")
+    // drill 2 — death after the pointer move: re-entry folds nothing and
+    // doubles no fingerprint
+    assert(VersionedLayers.compactVersioned(spark, idx2, "c0", Seq.empty)(identity) == 1)
+    assert(contents(idx2) == all,
+      "re-entry after a post-pointer crash changed rows")
   }
-
   test("x95 compactIfNeeded fires iff a threshold holds: layer-count and small-file " +
-      "triggers, byte-identical no-op below, fired ≡ unconditional, crash-debris override") {
-    import spark.implicits._
+      "triggers, byte-identical no-op below, fired ≡ unconditional") {
     import org.apache.hadoop.fs.Path
     import graft.operators.Maintenance
     def mk(tag: String): String = {
       val idx = graft.Tables.scratchDir(s"graft_x95_spec_$tag").toString + "/idx"
-      Seq(("prior", 10L, 1L), ("prior", 11L, 2L), ("fresh", 13L, 4L))
-        .toDF("batch", "fp", "doc_id")
-        .write.partitionBy("batch").parquet(idx)
+      publishLayers(idx, Seq(("prior", 10L, 1L), ("prior", 11L, 2L), ("fresh", 13L, 4L))
+        .toDF("batch", "fp", "doc_id"))
       idx
     }
     def files(idx: String): Map[String, (Long, Long)] = {
@@ -1577,234 +1562,63 @@ class DedupSimilaritySpec extends SparkSpec {
       val it = fs.listFiles(new Path(idx), true)
       val b = Map.newBuilder[String, (Long, Long)]
       while (it.hasNext) { val s = it.next()
-        if (s.getPath.getName.endsWith(".parquet"))
+        if (!s.getPath.getName.startsWith("."))
           b += s.getPath.toString -> ((s.getLen, s.getModificationTime)) }
       b.result()
     }
     def rows(idx: String): Set[(Long, Long)] =
-      spark.read.parquet(idx).select(col("fp"), col("doc_id"))
+      VersionedLayers.readAny(spark, idx).select(col("fp"), col("doc_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val all = Set((10L, 1L), (11L, 2L), (13L, 4L))
-    // BELOW both thresholds: no-op, artifact byte-identical
+    // BELOW both thresholds: no-op, artifact byte-identical (data files,
+    // manifests and pointer)
     val idx1 = mk("below")
     val before = files(idx1)
-    assert(!Maintenance.compactIfNeeded(spark, idx1, "c0", Seq.empty,
-      "graft_x95_sp_", maxLayers = 8))
+    assert(!Maintenance.compactIfNeeded(spark, idx1, "c0", Seq.empty, maxLayers = 8))
     assert(files(idx1) == before, "a below-threshold policy touched the artifact")
     // layer-count trigger: fires, and the result equals the unconditional core
-    assert(Maintenance.compactIfNeeded(spark, idx1, "c0", Seq.empty,
-      "graft_x95_sp_", maxLayers = 1))
+    assert(Maintenance.compactIfNeeded(spark, idx1, "c0", Seq.empty, maxLayers = 1))
     val idx2 = mk("uncond")
-    Maintenance.compactLayers(spark, idx2, "c0", Seq.empty, "graft_x95_sp_")
+    VersionedLayers.compactVersioned(spark, idx2, "c0", Seq.empty)(identity)
     assert(rows(idx1) == rows(idx2) && rows(idx1) == all)
-    def layerNames(idx: String): Seq[String] = {
-      val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new Path(idx)).map(_.getPath.getName)
-        .filter(_.startsWith("batch=")).sorted.toSeq
-    }
-    assert(layerNames(idx1) == Seq("batch=c0") && layerNames(idx2) == Seq("batch=c0"))
+    assert(tags(idx1) == Seq("c0") && tags(idx2) == Seq("c0"))
     // one live layer NEVER fires, even under an absurd small-file bar
     assert(!Maintenance.compactIfNeeded(spark, idx1, "c1", Seq.empty,
-      "graft_x95_sp_", maxLayers = 1, minFileBytes = Long.MaxValue))
+      maxLayers = 1, minFileBytes = Long.MaxValue))
     // small-file trigger: 2 layers ≤ maxLayers, but KB-sized files under a
     // high byte bar → fires
     val idx3 = mk("small")
     assert(Maintenance.compactIfNeeded(spark, idx3, "c0", Seq.empty,
-      "graft_x95_sp_", maxLayers = 8, minFileBytes = 1L << 20))
-    assert(rows(idx3) == all && layerNames(idx3) == Seq("batch=c0"))
-    // crash-debris override: a stranded trash fires regardless of thresholds
-    // and the core's recovery completes the interrupted swap
-    val idx4 = mk("debris")
-    val root4 = new Path(idx4)
-    val fs4 = root4.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val trash4 = new Path(root4.getParent, "." + root4.getName + "_compact_trash")
-    fs4.mkdirs(trash4)
-    fs4.listStatus(root4).filter(_.getPath.getName.startsWith("batch="))
-      .foreach(s => require(fs4.rename(s.getPath, new Path(trash4, s.getPath.getName))))
-    assert(Maintenance.compactIfNeeded(spark, idx4, "c0", Seq.empty,
-      "graft_x95_sp_", maxLayers = 99, minFileBytes = 0L))
-    assert(rows(idx4) == all && !fs4.exists(trash4))
+      maxLayers = 8, minFileBytes = 1L << 20))
+    assert(rows(idx3) == all && tags(idx3) == Seq("c0"))
   }
-
   test("delete fold on an absent or fully-emptied index is a structural no-op, " +
       "never a schema-inference crash (ADVICE r14)") {
-    import spark.implicits._
     val root = graft.Tables.scratchDir("graft_advfix1").toString
     // delete before ANY append: the dir does not exist yet
     assert(Dedup.dedupIndexDeleteKeys(spark, s"$root/idx",
       Seq(1L).toDF("doc_id")).isEmpty)
+    // the layered (cell) fold, symmetrically
+    assert(Similarity.ivfPqLayerDeleteKeys(spark, s"$root/never",
+      Seq(1L).toDF("vec_id")).isEmpty)
     // a delete batch empties EVERY layer, then a second delete arrives —
-    // the dir now holds only a _SUCCESS-style residue of the dropped
-    // layers' parent; the next fold must no-op, not crash (this is the
-    // t23/t24/t25 operational-loop path)
-    Seq(("only", 10L, 1L)).toDF("batch", "fp", "doc_id")
-      .write.partitionBy("batch").parquet(s"$root/idx")
+    // the manifest now holds no layer; the next fold must no-op, not
+    // crash (this is the t23/t24/t25 operational-loop path)
+    VersionedLayers.publishLayer(spark, s"$root/idx", "only",
+      Seq((10L, 1L)).toDF("fp", "doc_id"))
     assert(Dedup.dedupIndexDeleteKeys(spark, s"$root/idx",
       Seq(1L).toDF("doc_id")) == Seq("only"))
     assert(Dedup.dedupIndexDeleteKeys(spark, s"$root/idx",
       Seq(2L).toDF("doc_id")).isEmpty,
       "delete against an emptied index should be a no-op")
-    // and a subsequent append + probe still works against the healed tree
+    // and a subsequent append + probe still works against the emptied index
     Dedup.dedupAgainstIndex(spark, Seq((7L, "zzz")).toDF("doc_id", "text"),
       s"$root/idx", "fresh")
-    assert(spark.read.parquet(s"$root/idx").count() == 1)
+    assert(VersionedLayers.readAny(spark, s"$root/idx").count() == 1)
   }
-
-  test("index OPENERS finish an interrupted compaction via the trash marker: " +
-      "retire-window restores, publish-window drops, markerless fails fast (ADVICE r14)") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    import graft.operators.Maintenance
-    def mk(tag: String): (String, Path, org.apache.hadoop.fs.FileSystem) = {
-      val idx = graft.Tables.scratchDir(s"graft_advfix2_$tag").toString + "/idx"
-      Seq(("prior", 10L, 1L), ("fresh", 13L, 4L)).toDF("batch", "fp", "doc_id")
-        .write.partitionBy("batch").parquet(idx)
-      val p = new Path(idx)
-      (idx, p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    }
-    def writeMarker(fs: org.apache.hadoop.fs.FileSystem, trash: Path): Unit = {
-      val o = fs.create(new Path(trash, "_PUBLISH_TAG"), true)
-      try o.write("batch=c0".getBytes("UTF-8")) finally o.close()
-    }
-    // retire-window crash: every layer retired to trash, nothing published
-    // — a PROBE (readBatchIndex) must restore before reading, else it
-    // silently reads an empty index and re-admits every duplicate
-    val (idx1, root1, fs1) = mk("ret")
-    val trash1 = new Path(root1.getParent, "." + root1.getName + "_compact_trash")
-    fs1.mkdirs(trash1); writeMarker(fs1, trash1)
-    fs1.listStatus(root1).filter(_.getPath.getName.startsWith("batch="))
-      .foreach(s => require(fs1.rename(s.getPath, new Path(trash1, s.getPath.getName))))
-    val probed = Dedup.readBatchIndex(spark, idx1, "other")(
-      spark.range(0).select(col("id").as("fp"), col("id").as("doc_id")))
-    assert(probed.count() == 2, "opener did not restore the retired layers")
-    assert(!fs1.exists(trash1), "trash not cleared after restore")
-    // publish-window crash: compacted layer live, old layers stranded in
-    // trash — the DELETE FOLD must drop the trash WITHOUT restoring
-    // (restoring would double every row)
-    val (idx2, root2, fs2) = mk("pub")
-    assert(Maintenance.compactLayers(spark, idx2, "c0", Seq.empty, "graft_advfix2_") == 2)
-    val trash2 = new Path(root2.getParent, "." + root2.getName + "_compact_trash")
-    fs2.mkdirs(trash2); writeMarker(fs2, trash2)
-    Seq(("prior", 10L, 1L)).toDF("batch", "fp", "doc_id")
-      .write.partitionBy("batch").parquet(trash2.toString + "/stranded")
-    fs2.rename(new Path(trash2, "stranded/batch=prior"), new Path(trash2, "batch=prior"))
-    assert(Dedup.dedupIndexDeleteKeys(spark, idx2, Seq(1L).toDF("doc_id"))
-      == Seq("c0"))
-    assert(!fs2.exists(trash2) && spark.read.parquet(idx2).count() == 1,
-      "publish-window trash was restored over the live compacted layer")
-    // a trash WITHOUT the marker is ambiguous to a reader — fail fast
-    val (idx3, root3, fs3) = mk("nomark")
-    val trash3 = new Path(root3.getParent, "." + root3.getName + "_compact_trash")
-    fs3.mkdirs(new Path(trash3, "batch=prior"))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.readBatchIndex(spark, idx3, "other")(spark.range(0).toDF())
-    }
-    assert(e.getMessage.contains("interrupted compaction"))
-  }
-
-  test("a LATER compaction with a DIFFERENT tag recovers a marked crash via the marker, " +
-      "never by its own publish path — no row doubling; layered delete fold no-ops on " +
-      "an absent index (review r15)") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    import graft.operators.{Maintenance, Similarity}
-    def mk(tag: String): (String, Path, org.apache.hadoop.fs.FileSystem) = {
-      val idx = graft.Tables.scratchDir(s"graft_r15rev_$tag").toString + "/idx"
-      Seq(("prior", 10L, 1L), ("fresh", 13L, 4L)).toDF("batch", "fp", "doc_id")
-        .write.partitionBy("batch").parquet(idx)
-      val p = new Path(idx)
-      (idx, p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-    }
-    def writeMarker(fs: org.apache.hadoop.fs.FileSystem, trash: Path,
-                    publish: String): Unit = {
-      val o = fs.create(new Path(trash, "_PUBLISH_TAG"), true)
-      try o.write(publish.getBytes("UTF-8")) finally o.close()
-    }
-    val all = Set((10L, 1L), (13L, 4L))
-    def contents(idx: String): Set[(Long, Long)] =
-      spark.read.parquet(idx).select(col("fp"), col("doc_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // publish-window crash of a tag-c0 compaction, recovered by a tag-c1
-    // compaction: deciding restore-vs-drop by c1's own publish path would
-    // restore the retired layers next to the live batch=c0 (every row
-    // doubled); the marker names c0, so the trash DROPS
-    val (idx1, root1, fs1) = mk("pub")
-    assert(Maintenance.compactLayers(spark, idx1, "c0", Seq.empty, "graft_r15rev_") == 2)
-    val trash1 = new Path(root1.getParent, "." + root1.getName + "_compact_trash")
-    fs1.mkdirs(trash1); writeMarker(fs1, trash1, "batch=c0")
-    Seq(("prior", 10L, 1L)).toDF("batch", "fp", "doc_id")
-      .write.partitionBy("batch").parquet(trash1.toString + "/stranded")
-    fs1.rename(new Path(trash1, "stranded/batch=prior"), new Path(trash1, "batch=prior"))
-    assert(Maintenance.compactLayers(spark, idx1, "c1", Seq.empty, "graft_r15rev_") == 1)
-    assert(contents(idx1) == all,
-      s"cross-tag recovery doubled rows: ${contents(idx1)}")
-    // retire-window crash of a tag-c0 compaction, recovered by tag-c1:
-    // nothing published under c0, so the layers RESTORE, then c1 folds them
-    val (idx2, root2, fs2) = mk("ret")
-    val trash2 = new Path(root2.getParent, "." + root2.getName + "_compact_trash")
-    fs2.mkdirs(trash2); writeMarker(fs2, trash2, "batch=c0")
-    fs2.listStatus(root2).filter(_.getPath.getName.startsWith("batch="))
-      .foreach(s => require(fs2.rename(s.getPath, new Path(trash2, s.getPath.getName))))
-    assert(Maintenance.compactLayers(spark, idx2, "c1", Seq.empty, "graft_r15rev_") == 2)
-    assert(contents(idx2) == all)
-    // the layered delete fold's structural no-op (the flat fold's
-    // ADVICE-r14 contract, applied symmetrically)
-    assert(Similarity.ivfPqLayerDeleteKeys(spark,
-      graft.Tables.scratchDir("graft_r15rev_absent").toString + "/never",
-      Seq(1L).toDF("vec_id")).isEmpty)
-  }
-
-  test("a SAME-TAG re-compaction retires its prior published layer BEFORE the marker: " +
-      "a mid-retire crash restores losslessly instead of reading as death-after-publish " +
-      "(ADVICE r15 high)") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    import graft.operators.Maintenance
-    val idx = graft.Tables.scratchDir("graft_r16adv").toString + "/idx"
-    Seq(("prior", 10L, 1L), ("fresh", 13L, 4L)).toDF("batch", "fp", "doc_id")
-      .write.partitionBy("batch").parquet(idx)
-    assert(Maintenance.compactLayers(spark, idx, "compacted", Seq.empty,
-      "graft_r16adv_") == 2)
-    // the maintenance-window rhythm: a new batch lands after the sweep
-    Seq(("late", 99L, 9L)).toDF("batch", "fp", "doc_id")
-      .write.mode("append").partitionBy("batch").parquet(idx)
-    val root = new Path(idx)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // construct the exact state the NEW retire order leaves when a
-    // re-compaction (same constant tag) dies mid-retire AFTER the marker:
-    // the old batch=compacted is already in trash (it retires first), the
-    // marker names batch=compacted, batch=late is still live, nothing
-    // published. Under the old order this instant had batch=compacted
-    // still live instead — the guard read it as death-after-publish and
-    // deleted the trash holding the only copy of the retired layers.
-    val trash = new Path(root.getParent, "." + root.getName + "_compact_trash")
-    fs.mkdirs(trash)
-    require(fs.rename(new Path(root, "batch=compacted"),
-      new Path(trash, "batch=compacted")))
-    val o = fs.create(new Path(trash, "_PUBLISH_TAG"), true)
-    try o.write("batch=compacted".getBytes("UTF-8")) finally o.close()
-    // any opener must classify this as a retire-window death and RESTORE
-    Maintenance.guardInterruptedCompaction(spark, idx)
-    assert(!fs.exists(trash))
-    def contents: Set[(Long, Long)] = spark.read.parquet(idx)
-      .select(col("fp"), col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(contents == Set((10L, 1L), (13L, 4L), (99L, 9L)),
-      s"mid-retire recovery lost rows: $contents")
-    // and the re-compaction then completes for real, same tag, no loss
-    assert(Maintenance.compactLayers(spark, idx, "compacted", Seq.empty,
-      "graft_r16adv_") == 2)
-    assert(contents == Set((10L, 1L), (13L, 4L), (99L, 9L)))
-    val layers = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).toSeq
-    assert(layers == Seq("batch=compacted"))
-  }
-
   test("x98 cluster-index upsert on a hand graph: splits, merges, fresh singletons, " +
       "readmission; the delta layer holds ONLY the touched region; a full replay " +
       "converges; the semantic compaction is view-invariant") {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
     import graft.operators.Maintenance
     // stored graph: {1,2,3} via 1-2, 2-3 (label 1); {5,6} (label 5);
     // singletons 7, 8
@@ -1831,13 +1645,13 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out == expect, s"fold state: $out")
     // the delta layer is O(region): only the touched clusters' survivors,
     // the inserts, and the tombstone — never untouched docs 5/6/7
-    val delta = spark.read.parquet(s"${dirs.labelsDir}/batch=ops")
+    val delta = VersionedLayers.readTags(spark, dirs.labelsDir, Set("ops"))
       .select(col("doc_id"), col("op")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(delta == Set((1L, "U"), (3L, "U"), (10L, "U"), (11L, "U"),
       (8L, "U"), (12L, "U"), (2L, "D")), s"delta layer: $delta")
     // edges incident to the doomed doc left the edge artifact
-    val edges = spark.read.parquet(dirs.edgesDir)
+    val edges = VersionedLayers.readAny(spark, dirs.edgesDir)
       .select(col("id1"), col("id2")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edges == Set((5L, 6L), (3L, 10L), (10L, 11L), (8L, 12L)))
@@ -1848,13 +1662,10 @@ class DedupSimilaritySpec extends SparkSpec {
     // the label store's SEMANTIC compaction: last-writer-wins collapse —
     // merged view invariant, tombstoned doc stays gone, one layer left
     assert(Maintenance.compactIfNeededWith(spark, dirs.labelsDir,
-      "compacted", Seq.empty, "graft_x98_spec_", maxLayers = 1)(
+      "compacted", Seq.empty, maxLayers = 1)(
       Dedup.clusterLabelsCompactContent))
     assert(labels() == expect, "the label compaction changed the view")
-    val fs = new Path(dirs.labelsDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.listStatus(new Path(dirs.labelsDir)).map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).toSeq == Seq("batch=compacted"))
+    assert(tags(dirs.labelsDir) == Seq("compacted"))
     // and the NEXT fold works off the compacted store (sequence derivation
     // reads the kept rows' seq): delete 12 → 8 back to a singleton
     Dedup.clusterIndexUpsert(spark, dirs,
@@ -1871,7 +1682,7 @@ class DedupSimilaritySpec extends SparkSpec {
     Dedup.bloomIndexAppend(spark,
       Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"), idx, "b0")
     // params are IN the artifact
-    val stored = spark.read.parquet(idx)
+    val stored = VersionedLayers.readAny(spark, idx)
       .select(col("batch"), col("items"), col("bits")).collect()
     assert(stored.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
       == Seq(("b0", 1000000L, 8000000L)))
@@ -1886,13 +1697,13 @@ class DedupSimilaritySpec extends SparkSpec {
     // a same-tag RETRY with different params validates against OTHERS only
     Dedup.bloomIndexAppend(spark,
       Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"), idx, "b0")
-    // hand-plant a drifted layer (simulating a pre-validation writer):
-    // the merge names it instead of throwing a blind
-    // IncompatibleMergeException
+    // publish a drifted layer past the append check (simulating a
+    // pre-validation writer): the merge names it instead of throwing a
+    // blind IncompatibleMergeException
     val bf = org.apache.spark.util.sketch.BloomFilter.create(500L, 4000L)
     val bs = new java.io.ByteArrayOutputStream(); bf.writeTo(bs)
-    Seq((bs.toByteArray, 500L, 4000L)).toDF("bf", "items", "bits")
-      .write.parquet(s"$idx/batch=bad")
+    VersionedLayers.publishLayer(spark, idx, "bad",
+      Seq((bs.toByteArray, 500L, 4000L)).toDF("bf", "items", "bits"))
     val eMrg = intercept[IllegalArgumentException] {
       Dedup.bloomIndexMerged(spark, idx)
     }

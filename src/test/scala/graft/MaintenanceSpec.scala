@@ -453,7 +453,7 @@ class MaintenanceSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(twin.aggDir), "batch=ops")
     // swaps + appends, artifact by artifact
     Dedup.dedupIndexDeleteKeys(spark, twin.corpusDir, kdf)
-    graft.operators.VersionedLayers.writeTagged(spark, twin.corpusDir, "ops", netI)
+    graft.operators.VersionedLayers.publishLayer(spark, twin.corpusDir, "ops", netI)
     Dedup.dedupIndexUpsertKeys(spark, twin.exactDir,
       inserts.select(col("doc_id"), col("text")), kdf, "ops")
     Dedup.nearDedupIndexDeleteKeys(spark, twin.nearDir, kdf)
@@ -513,19 +513,9 @@ class MaintenanceSpec extends SparkSpec {
       "near_out" -> true, "sem_out" -> true,
       "cluster_edges" -> true, "cluster_labels" -> true),
       s"sweep outcome: $fired")
-    // layout-blind layer listing: versioned roots list the manifest,
-    // legacy roots (the ann index) list batch= dirs
-    def layers(dir: String): Seq[String] = {
-      import graft.operators.VersionedLayers
-      if (VersionedLayers.isVersioned(spark, dir))
-        VersionedLayers.layers(spark, dir).map(l => s"batch=${l.tag}")
-          .distinct.sorted
-      else {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .listStatus(p).map(_.getPath.getName).filter(_.startsWith("batch=")).sorted.toSeq
-      }
-    }
+    def layers(dir: String): Seq[String] =
+      graft.operators.VersionedLayers.layers(spark, dir)
+        .map(l => s"batch=${l.tag}").distinct.sorted
     Seq(orch.corpusDir, orch.exactDir, s"${orch.nearDir}/fp",
         s"${orch.nearDir}/pfx", s"${orch.nearDir}/sh", orch.semDir,
         orch.annDir, orch.nearOutDir, orch.semOutDir,

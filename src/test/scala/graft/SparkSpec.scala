@@ -5,22 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one JVM-wide SparkSession for all suites. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.local.dir", Tables.scratchLocalDir())
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Tables.ensureParquetConf(s)
-    Tables.registerScratchReaper()
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
   val sf = "/root/testdata/sf0.001"
 }
 

@@ -364,7 +364,7 @@ class StreamingSpec extends SparkSpec {
     def writeDocs(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").repartition(1).write.mode("append").parquet(srcDir)
     def stream = spark.readStream.schema(schema).parquet(srcDir)
-    def keptIds = spark.read.parquet(outDir)
+    def keptIds = graft.operators.VersionedLayers.readAny(spark, outDir)
       .select("doc_id").as[Long].collect().toSet
 
     // run 1: within-batch dup (docs 0/2 share text) → min-id keeper only
@@ -475,7 +475,7 @@ class StreamingSpec extends SparkSpec {
       .collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toSeq).toSeq
     def stream = spark.readStream.schema(
       org.apache.spark.sql.types.StructType(vecs.schema)).parquet(srcDir)
-    def kept = spark.read.parquet(outDir)
+    def kept = graft.operators.VersionedLayers.readAny(spark, outDir)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().toMap
     vecs.where(bkt <= 7).repartition(1).write.mode("append").parquet(srcDir)
     StreamingIngest.semanticDedupStream(stream, cents, idxDir, outDir, ckpt, 0.4)
@@ -518,7 +518,7 @@ class StreamingSpec extends SparkSpec {
     def writeDocs(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").repartition(1).write.mode("append").parquet(srcDir)
     def stream = spark.readStream.schema(schema).parquet(srcDir)
-    def keptIds = spark.read.parquet(outDir)
+    def keptIds = graft.operators.VersionedLayers.readAny(spark, outDir)
       .select("doc_id").as[Long].collect().toSet
 
     // 30 distinct tokens → 28 distinct 3-shingles; editing one middle token
@@ -1365,7 +1365,8 @@ class StreamingSpec extends SparkSpec {
     Similarity.ivfPqAppend(spark, sf, ins, idx, "b0") // attempt 1: crash after append
     Similarity.ivfPqAppend(spark, sf, ins, idx, "b0") // replay: both legs
     Similarity.ivfPqLayerDeleteKeys(spark, idx, tombs)
-    assert(rows(Similarity.ivfPqProbe(spark, sf, spark.read.parquet(idx),
+    assert(rows(Similarity.ivfPqProbe(spark, sf,
+      graft.operators.VersionedLayers.readAny(spark, idx),
       queryId = 0L, k = 10, nprobe = 4)) == oneShot,
       "crash-replay of an upsert batch diverged")
   }
@@ -1376,7 +1377,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    def state(idx: String) = rows(spark.read.parquet(idx)
+    def state(idx: String) = rows(graft.operators.VersionedLayers.readAny(spark, idx)
       .select(col("doc_id"), col("fp")).orderBy(col("doc_id")))
     // the fold is ORDER-SENSITIVE (admission probes the state as-of
     // arrival), so the streamed result is pinned against a manual replica
@@ -1452,7 +1453,7 @@ class StreamingSpec extends SparkSpec {
       }
       idx
     }
-    def state(idx: String) = rows(spark.read.parquet(s"$idx/fp")
+    def state(idx: String) = rows(graft.operators.VersionedLayers.readAny(spark, s"$idx/fp")
       .select(col("doc_id"), col("fp")).orderBy(col("doc_id")))
     val manual = state(fold("manual", replayA = false))
     assert(rows(StreamingIngest.streamNearDedupIndexUpsert(spark, sf)) == manual,
@@ -1531,7 +1532,7 @@ class StreamingSpec extends SparkSpec {
           .join(broadcast(keys.distinct()), Seq("vec_id"), "leftanti"),
         s"b$h", cents, s"$root/idx", s"$root/out", 0.4)
     }
-    val manual = spark.read.parquet(s"$root/idx")
+    val manual = graft.operators.VersionedLayers.readAny(spark, s"$root/idx")
       .select(col("vec_id"), col("cell").cast("long").as("cell"))
       .orderBy(col("vec_id")).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val streamed = StreamingIngest.streamSemanticIndexUpsert(spark, sf)

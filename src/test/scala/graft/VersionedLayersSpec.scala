@@ -8,7 +8,7 @@ import graft.operators.{Dedup, Maintenance, VersionedLayers}
   * (VERDICT r16 #2): probes running CONCURRENTLY with folds observe
   * exactly a published snapshot — never a torn one — and the crash
   * discipline (orphan store dirs, crash-before-pointer, replay, GC)
-  * holds without the legacy trash protocol. */
+  * holds without markers. */
 class VersionedLayersSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,7 +23,6 @@ class VersionedLayersSpec extends SparkSpec {
   test("concurrent probes during delete/append/compact folds observe only " +
       "published snapshots, never partial state (VERDICT r16 #2)") {
     val dir = Tables.scratchDir("graft_vl_concurrent").toString
-    VersionedLayers.init(spark, dir)
 
     def set(ids: Range, stamp: Int): Set[(Long, Int)] =
       ids.map(i => (i.toLong, stamp)).toSet
@@ -37,7 +36,7 @@ class VersionedLayersSpec extends SparkSpec {
     val l5 = l4 ++ set(51 to 100, 6)
     val legal = Set(l1, l2, l3, l4, l5)
 
-    VersionedLayers.writeTagged(spark, dir, "a", rows(1 to 100, 1))
+    VersionedLayers.publishLayer(spark, dir, "a", rows(1 to 100, 1))
     assert(observed(dir) == l1)
 
     // readers hammer the artifact from other threads while the writer
@@ -59,12 +58,12 @@ class VersionedLayersSpec extends SparkSpec {
     readers.foreach { t => t.setDaemon(true); t.start() }
     try {
       Dedup.dedupIndexDeleteKeys(spark, dir, (1 to 50).map(_.toLong).toDF("doc_id"))
-      VersionedLayers.writeTagged(spark, dir, "b", rows(1 to 50, 3))
-      Maintenance.compactLayers(spark, dir, "compacted", Seq.empty, "graft_vl_c1_")
+      VersionedLayers.publishLayer(spark, dir, "b", rows(1 to 50, 3))
+      VersionedLayers.compactVersioned(spark, dir, "compacted", Seq.empty)(identity)
       Dedup.dedupIndexDeleteKeys(spark, dir,
         (51 to 100).map(_.toLong).toDF("doc_id"))
-      VersionedLayers.writeTagged(spark, dir, "c", rows(51 to 100, 6))
-      Maintenance.compactLayers(spark, dir, "compacted", Seq.empty, "graft_vl_c2_")
+      VersionedLayers.publishLayer(spark, dir, "c", rows(51 to 100, 6))
+      VersionedLayers.compactVersioned(spark, dir, "compacted", Seq.empty)(identity)
     } finally {
       done.set(true)
       readers.foreach(_.join(30000L))
@@ -86,8 +85,7 @@ class VersionedLayersSpec extends SparkSpec {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prevGrace = System.setProperty("graft.versioned.gcGraceMs", "0")
     try {
-      VersionedLayers.init(spark, dir)
-      VersionedLayers.writeTagged(spark, dir, "a", rows(1 to 10, 1))
+      VersionedLayers.publishLayer(spark, dir, "a", rows(1 to 10, 1))
 
       // crash mid-write: an orphan store dir no manifest references —
       // readers never see it
@@ -103,16 +101,16 @@ class VersionedLayersSpec extends SparkSpec {
 
       // replayed publish of the same tag: ONE manifest entry, fresh
       // content, convergent
-      VersionedLayers.writeTagged(spark, dir, "b", rows(11 to 20, 2))
-      VersionedLayers.writeTagged(spark, dir, "b", rows(11 to 20, 3))
+      VersionedLayers.publishLayer(spark, dir, "b", rows(11 to 20, 2))
+      VersionedLayers.publishLayer(spark, dir, "b", rows(11 to 20, 3))
       assert(VersionedLayers.layers(spark, dir).count(_.tag == "b") == 1)
       assert(observed(dir) ==
         ((1 to 10).map(i => (i.toLong, 1)) ++ (11 to 20).map(i => (i.toLong, 3))).toSet)
 
       // GC (grace 0): after two more publishes the junk store dir and
       // stale manifests are gone; the live layers' dirs survive
-      VersionedLayers.writeTagged(spark, dir, "gc1", rows(21 to 21, 4))
-      VersionedLayers.writeTagged(spark, dir, "gc2", rows(22 to 22, 5))
+      VersionedLayers.publishLayer(spark, dir, "gc1", rows(21 to 21, 4))
+      VersionedLayers.publishLayer(spark, dir, "gc2", rows(22 to 22, 5))
       assert(!fs.exists(new Path(root, "store/junk-g99")),
         "unreferenced store dir survived GC")
       val live = VersionedLayers.layers(spark, dir).map(_.rel).toSet
@@ -124,7 +122,7 @@ class VersionedLayersSpec extends SparkSpec {
       // and a delete fold that empties a tag still drops it (the
       // differential spec's rewrite path)
       val before = observed(dir)
-      VersionedLayers.writeTagged(spark, dir, "empty1",
+      VersionedLayers.publishLayer(spark, dir, "empty1",
         rows(1 to 10, 1).where(lit(false)))
       assert(observed(dir) == before)
       // a tag emptied BY THE DELETE FOLD is dropped from the manifest
@@ -137,66 +135,97 @@ class VersionedLayersSpec extends SparkSpec {
     }
   }
 
-  test("versioned delete fold matches the legacy fold row-for-row and prunes " +
-      "untouched layers (the dirty-layer economics carry over)") {
-    val vDir = Tables.scratchDir("graft_vl_diff_v").toString
-    val lDir = Tables.scratchDir("graft_vl_diff_l").toString
-    VersionedLayers.init(spark, vDir)
-    Seq(vDir, lDir).foreach { d =>
-      VersionedLayers.writeTagged(spark, d, "t1", rows(1 to 40, 1))
-      VersionedLayers.writeTagged(spark, d, "t2", rows(41 to 80, 2))
-      VersionedLayers.writeTagged(spark, d, "t3", rows(81 to 120, 3))
-    }
+  test("delete fold equals the recompute from survivors row-for-row and " +
+      "prunes untouched layers (the dirty-layer economics)") {
+    val dir = Tables.scratchDir("graft_vl_diff").toString
+    VersionedLayers.publishLayer(spark, dir, "t1", rows(1 to 40, 1))
+    VersionedLayers.publishLayer(spark, dir, "t2", rows(41 to 80, 2))
+    VersionedLayers.publishLayer(spark, dir, "t3", rows(81 to 120, 3))
     val keys = Seq(5L, 45L).toDF("doc_id")
-    val dv = Dedup.dedupIndexDeleteKeys(spark, vDir, keys)
-    val dl = Dedup.dedupIndexDeleteKeys(spark, lDir, keys)
-    assert(dv == dl && dv == Seq("t1", "t2"), s"dirty tags: $dv vs $dl")
-    val v = VersionedLayers.readAny(spark, vDir)
+    val dirty = Dedup.dedupIndexDeleteKeys(spark, dir, keys)
+    assert(dirty == Seq("t1", "t2"), s"dirty tags: $dirty")
+    val got = VersionedLayers.readAny(spark, dir)
       .select(col("doc_id"), col("stamp"), col("batch")).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val l = VersionedLayers.readAny(spark, lDir)
-      .select(col("doc_id"), col("stamp"), col("batch")).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(v == l, "versioned and legacy delete folds diverged")
+    // the monolithic recompute: every stored row whose key survives
+    val want = Seq((1 to 40, 1, "t1"), (41 to 80, 2, "t2"), (81 to 120, 3, "t3"))
+      .flatMap { case (ids, st, t) => ids.map(i => (i.toLong, st, t)) }
+      .filterNot(r => Set(5L, 45L).contains(r._1)).toSet
+    assert(got == want, "delete fold diverged from the recompute from survivors")
     // the untouched layer kept its exact store dir (no rewrite)
-    val t3 = VersionedLayers.layers(spark, vDir).find(_.tag == "t3").get
+    val t3 = VersionedLayers.layers(spark, dir).find(_.tag == "t3").get
     assert(t3.rel == "t3-g3", s"untouched layer was rewritten: ${t3.rel}")
   }
 
   test("cell-granular artifact: a delete swaps only the dirty (tag, cell) " +
       "leaves — clean cells of the SAME tag keep their immutable dirs, and " +
-      "the versioned fold matches the legacy fold row-for-row") {
+      "the fold equals the recompute from survivors row-for-row") {
     import graft.operators.Similarity
-    def vecs(ids: Range): DataFrame =
-      ids.map(i => (i.toLong, i % 4, i * 10L)).toDF("vec_id", "cell", "u")
-    val vDir = Tables.scratchDir("graft_vl_cell_v").toString
-    val lDir = Tables.scratchDir("graft_vl_cell_l").toString
-    VersionedLayers.init(spark, vDir)
-    Seq(vDir, lDir).foreach { d =>
-      VersionedLayers.writeTagged(spark, d, "b0", vecs(1 to 40), Seq("cell"))
-      VersionedLayers.writeTagged(spark, d, "b1", vecs(41 to 80), Seq("cell"))
-    }
-    val before = VersionedLayers.layers(spark, vDir)
+    def vecs(ids: Range): Seq[(Long, Int, Long)] =
+      ids.map(i => (i.toLong, i % 4, i * 10L))
+    val dir = Tables.scratchDir("graft_vl_cell").toString
+    VersionedLayers.publishLayer(spark, dir, "b0",
+      vecs(1 to 40).toDF("vec_id", "cell", "u"), Seq("cell"))
+    VersionedLayers.publishLayer(spark, dir, "b1",
+      vecs(41 to 80).toDF("vec_id", "cell", "u"), Seq("cell"))
+    val before = VersionedLayers.layers(spark, dir)
     assert(before.map(_.tag).distinct.sorted == Seq("b0", "b1") &&
       before.forall(_.cell.isDefined) && before.size == 8,
       s"expected 2 tags x 4 cell leaves: $before")
     // vec 5 lives in (b0, cell 1); vec 44 in (b1, cell 0)
-    val keys = Seq(5L, 44L).toDF("vec_id")
-    val dv = Similarity.ivfPqLayerDeleteKeys(spark, vDir, keys)
-    val dl = Similarity.ivfPqLayerDeleteKeys(spark, lDir, keys)
-    assert(dv == dl && dv == Seq(("b0", 1), ("b1", 0)), s"dirty: $dv vs $dl")
-    def contents(d: String): Set[(Long, Int, Long, String)] =
-      VersionedLayers.readAny(spark, d)
-        .select(col("vec_id"), col("cell"), col("u"), col("batch")).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3))).toSet
-    assert(contents(vDir) == contents(lDir),
-      "versioned and legacy cell folds diverged")
+    val dirty = Similarity.ivfPqLayerDeleteKeys(spark, dir,
+      Seq(5L, 44L).toDF("vec_id"))
+    assert(dirty == Seq(("b0", 1), ("b1", 0)), s"dirty: $dirty")
+    val got = VersionedLayers.readAny(spark, dir)
+      .select(col("vec_id"), col("cell"), col("u"), col("batch")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3))).toSet
+    val want = (vecs(1 to 40).map(v => (v._1, v._2, v._3, "b0")) ++
+      vecs(41 to 80).map(v => (v._1, v._2, v._3, "b1")))
+      .filterNot(r => Set(5L, 44L).contains(r._1)).toSet
+    assert(got == want, "cell delete fold diverged from the recompute from survivors")
     // clean leaves (including clean cells of the DIRTY tags' siblings)
     // kept their exact store dirs; only the two dirty leaves re-genned
-    val after = VersionedLayers.layers(spark, vDir)
+    val after = VersionedLayers.layers(spark, dir)
     val changed = after.toSet -- before.toSet
     assert(changed.map(l => (l.tag, l.cell.get)) == Set("b0" -> 1, "b1" -> 0),
       s"rewrote more than the dirty leaves: $changed")
+  }
+
+  test("layout rules: a root holding batch= dirs without a pointer is refused " +
+      "naming the dir; a first publish onto an absent root gives a readable " +
+      "artifact") {
+    val refused = Tables.scratchDir("graft_vl_inplace").toString
+    rows(1 to 3, 1).write.parquet(s"$refused/batch=prior")
+    Seq[() => Any](
+      () => VersionedLayers.layers(spark, refused),
+      () => Dedup.readBatchIndex(spark, refused, "t")(spark.range(0).toDF()),
+      () => VersionedLayers.publishLayer(spark, refused, "next", rows(4 to 4, 2))
+    ).foreach { f =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains(refused) && e.getMessage.contains("batch="),
+        e.getMessage)
+    }
+    // so are a flat root and a cell=-only root: any visible data without
+    // a pointer, so a first publish never hides it
+    val flat = Tables.scratchDir("graft_vl_flat").toString + "/idx"
+    rows(1 to 3, 1).write.parquet(flat)
+    val cells = Tables.scratchDir("graft_vl_cells").toString + "/idx"
+    rows(1 to 3, 1).write.partitionBy("stamp").parquet(cells)
+    Seq(flat, cells).foreach { d =>
+      val e = intercept[IllegalArgumentException](
+        VersionedLayers.publishLayer(spark, d, "next", rows(4 to 4, 2)))
+      assert(e.getMessage.contains(d), e.getMessage)
+    }
+    val absent = Tables.scratchDir("graft_vl_first").toString + "/not/yet"
+    assert(VersionedLayers.layers(spark, absent).isEmpty)
+    VersionedLayers.publishLayer(spark, absent, "a", rows(1 to 5, 1))
+    assert(observed(absent) == (1 to 5).map(i => (i.toLong, 1)).toSet)
+    assert(VersionedLayers.layers(spark, absent).map(_.rel) == Seq("a-g1"))
+    // the same for a first upsert fold (stage + rename into a new store)
+    val absentFold = Tables.scratchDir("graft_vl_first_fold").toString + "/idx"
+    Dedup.indexUpsertFold(spark, absentFold, Seq(9L).toDF("doc_id"), "a",
+      rows(1 to 5, 1))
+    assert(observed(absentFold) == (1 to 5).map(i => (i.toLong, 1)).toSet)
   }
 
   private def pointerSeq(dir: String): Long = {
@@ -212,17 +241,16 @@ class VersionedLayersSpec extends SparkSpec {
     val fDir = Tables.scratchDir("graft_vl_upfold").toString
     val tDir = Tables.scratchDir("graft_vl_uptwin").toString
     Seq(fDir, tDir).foreach { d =>
-      VersionedLayers.init(spark, d)
-      VersionedLayers.writeTagged(spark, d, "t1", rows(1 to 40, 1))
-      VersionedLayers.writeTagged(spark, d, "t2", rows(41 to 80, 2))
-      VersionedLayers.writeTagged(spark, d, "t3", rows(81 to 120, 3))
+      VersionedLayers.publishLayer(spark, d, "t1", rows(1 to 40, 1))
+      VersionedLayers.publishLayer(spark, d, "t2", rows(41 to 80, 2))
+      VersionedLayers.publishLayer(spark, d, "t3", rows(81 to 120, 3))
     }
     // keys dirty t1 (one row) and EMPTY t2 entirely; t3 stays clean
     val keys = (Seq(5L) ++ (41L to 80L)).toDF("doc_id")
     val fresh = rows(200 to 210, 9)
     // twin: the sequential two-step composition (two publishes)
     Dedup.dedupIndexDeleteKeys(spark, tDir, keys)
-    VersionedLayers.writeTagged(spark, tDir, "b9", fresh)
+    VersionedLayers.publishLayer(spark, tDir, "b9", fresh)
     // fold: one publish — the pointer advances by EXACTLY one generation
     val seq0 = pointerSeq(fDir)
     val dirty = Dedup.indexUpsertFold(spark, fDir, keys, "b9", fresh)
@@ -253,15 +281,14 @@ class VersionedLayersSpec extends SparkSpec {
     val fDir = Tables.scratchDir("graft_vl_cellup_f").toString
     val tDir = Tables.scratchDir("graft_vl_cellup_t").toString
     Seq(fDir, tDir).foreach { d =>
-      VersionedLayers.init(spark, d)
-      VersionedLayers.writeTagged(spark, d, "base",
+      VersionedLayers.publishLayer(spark, d, "base",
         enc(1 to 40).select(col("vec_id"), col("u"), col("codes"), col("cell")),
         Seq("cell"))
     }
     val keys = Seq(5L, 6L).toDF("vec_id") // cells 1 and 2 of base go dirty
     val fresh = enc(41 to 60)
     // twin: append then delete (two publishes)
-    VersionedLayers.writeTagged(spark, tDir, "grow",
+    VersionedLayers.publishLayer(spark, tDir, "grow",
       fresh.select(col("vec_id"), col("u"), col("codes"), col("cell")),
       Seq("cell"))
     Similarity.ivfPqLayerDeleteKeys(spark, tDir, keys)
@@ -363,9 +390,8 @@ class VersionedLayersSpec extends SparkSpec {
   test("flat reads plan with 0 Spark jobs after publishLayer, a delete fold " +
       "with a new tag, and compaction — and equal the inferred read") {
     val dir = Tables.scratchDir("graft_vl_schema_flat").toString
-    VersionedLayers.init(spark, dir)
-    VersionedLayers.writeTagged(spark, dir, "a", docs(1 to 30, 1))
-    VersionedLayers.writeTagged(spark, dir, "b", docs(31 to 60, 2))
+    VersionedLayers.publishLayer(spark, dir, "a", docs(1 to 30, 1))
+    VersionedLayers.publishLayer(spark, dir, "b", docs(31 to 60, 2))
     assert(schemaTags(dir) == Set("a", "b"))
     assertFlatReads(dir)
 
@@ -378,8 +404,7 @@ class VersionedLayersSpec extends SparkSpec {
     assert(schemaTags(dir) == Set("a", "b", "c"))
     assertFlatReads(dir)
 
-    Maintenance.compactLayers(spark, dir, "compacted", Seq.empty,
-      "graft_vl_schema_c_")
+    VersionedLayers.compactVersioned(spark, dir, "compacted", Seq.empty)(identity)
     assert(VersionedLayers.layers(spark, dir).map(_.tag) == Seq("compacted"))
     assert(schemaTags(dir) == Set("compacted"))
     assertFlatReads(dir)
@@ -388,8 +413,7 @@ class VersionedLayersSpec extends SparkSpec {
   test("cell reads plan with 0 Spark jobs after a cell upsert with appendTag " +
       "and equal the inferred read") {
     val dir = Tables.scratchDir("graft_vl_schema_cell").toString
-    VersionedLayers.init(spark, dir)
-    VersionedLayers.writeTagged(spark, dir, "base", enc(1 to 40), Seq("cell"))
+    VersionedLayers.publishLayer(spark, dir, "base", enc(1 to 40), Seq("cell"))
     graft.operators.Similarity.ivfPqUpsertEncodedKeys(spark, dir,
       Seq(5L, 6L).toDF("vec_id"),
       "grow", enc(41 to 60))
@@ -411,9 +435,8 @@ class VersionedLayersSpec extends SparkSpec {
       "recorded, still reads correctly; the next publish records only the " +
       "tags it stages") {
     val dir = Tables.scratchDir("graft_vl_schema_old").toString
-    VersionedLayers.init(spark, dir)
-    VersionedLayers.writeTagged(spark, dir, "a", docs(1 to 30, 1))
-    VersionedLayers.writeTagged(spark, dir, "b", docs(31 to 60, 2))
+    VersionedLayers.publishLayer(spark, dir, "a", docs(1 to 30, 1))
+    VersionedLayers.publishLayer(spark, dir, "b", docs(31 to 60, 2))
     val m = manifestPath(dir)
     val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val kept = manifestLines(dir).filterNot(_.startsWith("#schema"))
@@ -426,7 +449,7 @@ class VersionedLayersSpec extends SparkSpec {
       VersionedLayers.read(spark, dir)(fail("no live layers")))
 
     // a new tag records its schema; the old tags still infer theirs
-    VersionedLayers.writeTagged(spark, dir, "c", docs(61 to 70, 3))
+    VersionedLayers.publishLayer(spark, dir, "c", docs(61 to 70, 3))
     assert(schemaTags(dir) == Set("c"))
     assertRead("read (mixed manifest)", dir,
       VersionedLayers.layers(spark, dir), 2)(
