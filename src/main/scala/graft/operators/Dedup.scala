@@ -531,10 +531,10 @@ object Dedup {
   // ──────────────────────────────────────────────────────────────────────
 
   /** The maintained cluster pipeline's layout: the edge artifact
-    * (`batch=<tag>` layers of verified (id1 < id2) pairs) and the
-    * versioned label store (`_LATEST`-pointed snapshots, the t19/t21
-    * discipline — the fold is read-modify-write, so it is
-    * snapshot-marker gated). */
+    * (`batch=<tag>` layers of verified (id1 < id2) pairs) and the label
+    * store, a delta-layered [[VersionedLayers]] artifact (each fold
+    * publishes its batch's relabelled rows as a layer, and reads the
+    * prior labels with its own tag excluded, so a replay converges). */
   final case class ClusterDirs(root: String) {
     val edgesDir: String = s"$root/edges"
     val labelsDir: String = s"$root/labels"
@@ -669,8 +669,8 @@ object Dedup {
         spark.range(0).select(col("id").as("doc_id"),
           col("id").as("cluster_id"), lit("U").as("op"), col("id").as("seq")))
     // max(seq) rides the merged-labels snapshot's own materialization
-    // job as an observe metric (the t21 discipline — it observes the
-    // rows BELOW the window filter, so the max is over every prior row):
+    // job as an observe metric (it observes the rows BELOW the window
+    // filter, so the max is over every prior row):
     // one driver action where the fold paid two, with the old aggregate
     // as the honest fallback if the listener bus is slow
     val seqObs = org.apache.spark.sql.Observation()

@@ -576,7 +576,7 @@ object Maintenance {
   // ──────────────────────────────────────────────────────────────────────
 
   /** The lease marker's file name ("_"-prefixed: invisible to parquet
-    * readers, like the snapshot markers). */
+    * readers, like the versioned-layer pointer). */
   private[graft] val WriterLeaseFile = "_WRITER_LEASE"
 
   /** Age past which a lease is presumed crashed and may be taken over
@@ -777,39 +777,11 @@ object Maintenance {
     .agg(count(lit(1)).as("n_docs"),
       coalesce(sum(size(col("tk")).cast("long")), lit(0L)).as("n_tokens"))
 
-  /** The columns [[docAggOfTk]] and its fold write. */
-  private[graft] val DocAggSchema = StructType(Seq(
-    StructField("source", StringType), StructField("n_docs", LongType),
-    StructField("n_tokens", LongType)))
-
-  /** The aggregate view's current contents (via the `_LATEST` pointer —
-    * the t19/t21 versioned-store layout), read with its declared schema
-    * (no footer-inference job). */
-  private[graft] def readDocAggView(spark: SparkSession, aggDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(aggDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.schema(DocAggSchema).parquet(new Path(root,
-      graft.streaming.StreamingIngest.readViewPointer(fs, root)).toString)
-  }
-
-  /** Marker-gated versioned-store fold (the t19/t21 snapshot discipline,
-    * hoisted): run `fold` into a fresh snapshot iff `batch=<tag>` has not
-    * already published, then move `_LATEST` and GC — so a replayed batch
-    * skips straight to the (idempotent) pointer move instead of folding
-    * its own output into itself. */
-  private[graft] def statsSnapshotFold(spark: SparkSession, rootDir: String,
-      tag: String)(fold: org.apache.hadoop.fs.Path => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.streaming.StreamingIngest
-    val root = new Path(rootDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = new Path(root, s"batch=$tag")
-    if (!fs.exists(new Path(snap, "_SUCCESS")))
-      StreamingIngest.publishSnapshot(fs, root, snap)(fold)
-    StreamingIngest.writeViewPointer(fs, root, s"batch=$tag")
-    StreamingIngest.gcSnapshots(fs, root, tag)
-  }
+  /** The aggregate view's live snapshot (a snapshot store — see
+    * [[VersionedLayers]]), read with the schema its manifest records (no
+    * footer-inference job). */
+  private[graft] def readDocAggView(spark: SparkSession, aggDir: String): DataFrame =
+    VersionedLayers.readAny(spark, aggDir).drop("batch")
 
   /** Initialize every artifact of [[MultiArtifactDirs]] from the stored
     * corpus — nine independent builds, run concurrently (each scans
@@ -820,7 +792,6 @@ object Maintenance {
     * frozen corpus-trained quantizers (the x6h contract). */
   private[graft] def multiArtifactInit(spark: SparkSession, sfDir: String,
       dirs: MultiArtifactDirs, storedDocs: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.streaming.StreamingIngest
     val docs = storedDocs.select(col("doc_id"), col("source"), col("text"))
     val vecs = vecsOfDocs(spark, sfDir, docs.select(col("doc_id")))
@@ -832,8 +803,8 @@ object Maintenance {
       // concurrently with maintenance read a consistent snapshot. The
       // layered IVF-PQ index versions at (tag, cell)-LEAF granularity
       // (one manifest entry per leaf — the x83 dirty-leaf economics,
-      // copy-free); the stats stores have their own snapshot discipline
-      // (t19/t21).
+      // copy-free); the BM25 and aggregate stores are snapshot stores,
+      // each publish holding only its batch's layers.
       inParallel[Any](Seq(
         () => labeled(spark, "x94 init: corpus") {
           VersionedLayers.publishLayer(spark, dirs.corpusDir, "stored",
@@ -848,13 +819,8 @@ object Maintenance {
         () => labeled(spark, "x94 init: bm25") {
           StreamingIngest.initBm25Stats(spark, docs, dirs.bm25Dir) },
         () => labeled(spark, "x94 init: agg") {
-          val root = new Path(dirs.aggDir)
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          docAggOfTk(docs.withColumn("tk", TextFns.tokens(col("text"))))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(new Path(root, "base").toString)
-          StreamingIngest.writeViewPointer(fs, root, "base")
-        },
+          VersionedLayers.publishLayer(spark, dirs.aggDir, "base",
+            docAggOfTk(docs.withColumn("tk", TextFns.tokens(col("text"))))) },
         () => labeled(spark, "x94 init: sem") {
           StreamingIngest.semanticDedupBatch(vecs, "stored", cents,
             dirs.semDir, dirs.semOutDir, SemDedupThreshold) },
@@ -889,7 +855,7 @@ object Maintenance {
     // key versioned with the artifact inventory: a new artifact class in
     // the stored tree must invalidate caches whose SOURCE fingerprints
     // haven't moved (the cluster leg landed exactly this way)
-    DfCache.materializedTree(spark, s"x94init:v5:$sfDir",
+    DfCache.materializedTree(spark, s"x94init:v6:$sfDir",
       Seq(s"$sfDir/documents.parquet", s"$sfDir/embeddings.parquet")) { tmp =>
       multiArtifactInit(spark, sfDir, MultiArtifactDirs(tmp),
         Tables.documents(spark, sfDir)
@@ -941,7 +907,7 @@ object Maintenance {
     *
     * Phase order is the exactly-once argument (t26 runs this body per
     * micro-batch): stats folds FIRST (they read the pre-delete corpus and
-    * are marker-gated — a replay arriving after the corpus swap skips
+    * are replay-gated — a replay arriving after the corpus swap skips
     * them; t21's argument), then the delete swaps (markerless-idempotent,
     * t20's argument — the SemDeDup and layered-ANN key swaps are x92's
     * and x83's, both in that class), then the append legs (tag-scoped
@@ -955,7 +921,6 @@ object Maintenance {
   private[graft] def multiArtifactUpsert(spark: SparkSession, sfDir: String,
       dirs: MultiArtifactDirs, inserts: DataFrame, keys: DataFrame,
       tag: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import graft.streaming.StreamingIngest
     // The shared derivations SNAPSHOT inside the lease (ADVICE r16): the
     // doomed-row fetch scans the live corpus artifact and the enrichment
@@ -978,7 +943,7 @@ object Maintenance {
         VersionedLayers.readAny(spark, dirs.corpusDir).drop("batch")
           .join(broadcast(kdf), Seq("doc_id"), "leftsemi")
           .withColumn("tk", TextFns.tokens(col("text")))) }
-      // Phase 0 — marker-gated stats folds (read pre-delete state). The
+      // Phase 0 — replay-gated stats folds (read pre-delete state). The
       // vector-batch encode rides in the same parallel group: it reads
       // only the embeddings table + the already-materialized `enriched`,
       // so deriving it here overlaps its wall time with the stats folds
@@ -1071,32 +1036,27 @@ object Maintenance {
                   col("cell"), col("nrm")), SemDedupThreshold))) }
         },
         () => labeled(spark, "x94 p0: bm25 fold") {
-          statsSnapshotFold(spark, dirs.bm25Dir, tag) { tmp =>
-          val (baseDf, baseSc) = StreamingIngest.readBm25Stats(spark, dirs.bm25Dir)
-          StreamingIngest.writeBm25TermDf(
-            Search.bm25FoldTermDf(
-              Search.bm25RetractTermDf(baseDf, Search.bm25TermDfOfTk(doomedStored)),
-              Search.bm25TermDfOfTk(enriched)),
-            new Path(tmp, "df").toString)
-          Search.bm25FoldScalars(
-              Search.bm25RetractScalars(spark, baseSc,
-                Search.bm25ScalarsOfTk(doomedStored)),
-              Search.bm25ScalarsOfTk(enriched))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(new Path(tmp, "scalars").toString)
-        } },
+          StreamingIngest.publishBm25Stats(spark, dirs.bm25Dir, tag) {
+            val (baseDf, baseSc) = StreamingIngest.readBm25Stats(spark, dirs.bm25Dir)
+            (Search.bm25FoldTermDf(
+                Search.bm25RetractTermDf(baseDf, Search.bm25TermDfOfTk(doomedStored)),
+                Search.bm25TermDfOfTk(enriched)),
+              Search.bm25FoldScalars(
+                Search.bm25RetractScalars(spark, baseSc,
+                  Search.bm25ScalarsOfTk(doomedStored)),
+                Search.bm25ScalarsOfTk(enriched)))
+          } },
         () => labeled(spark, "x94 p0: agg fold") {
-          statsSnapshotFold(spark, dirs.aggDir, tag) { tmp =>
-          val neg = docAggOfTk(doomedStored).select(col("source"),
-            (-col("n_docs")).as("n_docs"), (-col("n_tokens")).as("n_tokens"))
-          readDocAggView(spark, dirs.aggDir)
-            .unionByName(docAggOfTk(enriched)).unionByName(neg)
-            .groupBy(col("source"))
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("n_tokens")).as("n_tokens"))
-            .where(col("n_docs") > 0)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        } }))
+          VersionedLayers.foldOnce(spark, dirs.aggDir, Seq(tag)) {
+            val neg = docAggOfTk(doomedStored).select(col("source"),
+              (-col("n_docs")).as("n_docs"), (-col("n_tokens")).as("n_tokens"))
+            Seq(readDocAggView(spark, dirs.aggDir)
+              .unionByName(docAggOfTk(enriched)).unionByName(neg)
+              .groupBy(col("source"))
+              .agg(sum(col("n_docs")).as("n_docs"),
+                sum(col("n_tokens")).as("n_tokens"))
+              .where(col("n_docs") > 0))
+          } }))
       val vecEnriched = vecEnrichedRef.get()
       val dirtyByArt = dirtyByArtRef.get()
       def dirtyTags(art: String): Option[Seq[String]] =
@@ -1320,9 +1280,9 @@ object Maintenance {
     * the next epoch's appends are the novel side. Callers inside an OPEN
     * epoch may still CONSULT span's policy (x96/t29 do, below
     * threshold) — the same `compactIfNeeded` with tag `prior`. (The
-    * stats stores need no layer compaction: each snapshot is already one
-    * bounded artifact — sharded past the vocab gate — and the per-batch
-    * GC bounds the snapshot count.) Runs under the pipeline's writer
+    * snapshot stores need no layer compaction: each publish replaces the
+    * whole manifest with one batch's layers, and the publish GC bounds
+    * the store dirs.) Runs under the pipeline's writer
     * lease. Returns which artifacts fired. */
   private[graft] def multiArtifactCompactIfNeeded(spark: SparkSession,
       dirs: MultiArtifactDirs, maxLayers: Int,

@@ -9,11 +9,10 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * (VERDICT r16 #2 — "readers have no isolation during swaps").
   *
   * A production pipeline serves probes WHILE maintaining, so no fold may
-  * mutate the only copy of a layer. Every layered artifact follows the
-  * `_LATEST`-pointer discipline the stats stores (t19/t21) use —
-  * generalized to LAYERED artifacts without copying the artifact per
-  * fold (a versioned ROOT would rewrite 100 TB per batch; a versioned
-  * MANIFEST rewrites O(delta)):
+  * mutate the only copy of a layer. Every maintained artifact publishes
+  * through ONE atomic manifest commit that readers resolve once — a
+  * versioned MANIFEST rewrites O(delta) per fold, where a versioned ROOT
+  * would rewrite the whole artifact (100 TB) per batch:
   *
   * {{{
   *   <root>/_LATEST            pointer file → "m-<seq>"
@@ -66,6 +65,14 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructTyp
   * or the files of a flat or `cell=`-only artifact — is refused, naming
   * the dir, because reading it as empty would silently re-admit every
   * duplicate it holds, and a publish would hide its data.
+  *
+  * Two kinds of artifact share the layout. A LAYERED artifact (dedup
+  * indexes, the corpus, the IVF-PQ index) keeps one layer per landed
+  * batch and folds deletes into the dirty ones. A SNAPSHOT store (the
+  * t19 retraction view, the BM25 stats, the x94 doc-aggregate view)
+  * holds only the layers of the batch that last published: each fold
+  * reads the live snapshot and publishes the next with `replaceAll`, and
+  * [[foldOnce]] skips a replayed batch whose publish already landed.
   *
   * Reference anchor: the reference swaps bookkeeping under a ZK writer
   * lock and lets readers hit Hive's last-published partition list
@@ -125,8 +132,32 @@ object VersionedLayers {
     else if (keys.isEmpty) df.hint("REBALANCE")
     else df.hint("REBALANCE", keys.map(col): _*)
 
+  /** The pointer's content: the live manifest's name, "m-<seq>". */
+  private[graft] def readPointer(fs: FileSystem, root: Path): String = {
+    val in = fs.open(pointerPath(root))
+    try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
+  }
+
+  /** Move the pointer to manifest `name`. Write-then-RENAME, not
+    * create-truncate: every read resolves this pointer, and a racing
+    * reader of a truncate-then-write could see a half-written name.
+    * Rename is atomic on POSIX/HDFS; where rename-over-existing is refused
+    * the fallback is delete+rename (the lease-heartbeat pattern — a far
+    * narrower window than truncate+write, and single-writer anyway). The
+    * temp name is fixed: the writer is single (leased), and a crash
+    * leftover is clobbered by the next move's create-overwrite. */
+  private[graft] def writePointer(fs: FileSystem, root: Path, name: String): Unit = {
+    val tmp = new Path(root, ".latest_tmp")
+    val out = fs.create(tmp, true)
+    try out.write(name.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, pointerPath(root))) {
+      fs.delete(pointerPath(root), false)
+      require(fs.rename(tmp, pointerPath(root)), s"could not move pointer at $root")
+    }
+  }
+
   private def currentSeq(fs: FileSystem, root: Path): Long = {
-    val name = graft.streaming.StreamingIngest.readViewPointer(fs, root)
+    val name = readPointer(fs, root)
     require(name.startsWith("m-") && name.drop(2).forall(_.isDigit),
       s"$root: malformed versioned-layer pointer '$name'")
     name.drop(2).toLong
@@ -206,10 +237,10 @@ object VersionedLayers {
       f.name == "batch" || subPartition.contains(f.name)) ++
       subPartition.map(StructField(_, IntegerType)))
 
-  /** Snapshot-isolated read of the artifact: the union of the manifest's
-    * store dirs, each with its `batch` tag attached (string, last column).
-    * Own-tag exclusion is MANIFEST pruning (the excluded layer is never
-    * even listed). `empty` when the manifest holds no layers.
+  /** Snapshot-isolated read of the artifact's live layers, ONE frame per
+    * tag (sorted by tag), each the union of its store dirs with its
+    * `batch` tag attached (string, last column). Own-tag exclusion is
+    * MANIFEST pruning (the excluded layer is never even listed).
     *
     * Reads are BATCHED (guide §1.2 — fewer driver round-trips): flat
     * layers group into ONE `spark.read.parquet(dirs*)` per tag; cell
@@ -218,40 +249,53 @@ object VersionedLayers {
     * The union width (and so planning cost) shrinks the same way. Each
     * read takes its tag's recorded schema, so planning runs no Spark job;
     * only a tag with no recorded schema infers it from a footer. */
-  private def readEntries(spark: SparkSession, root: Path,
-                          m: Manifest, live: Seq[Layer]): DataFrame = {
+  private def readEntries(spark: SparkSession, root: Path, m: Manifest,
+                          live: Seq[Layer]): Seq[(String, DataFrame)] = {
     val store = storePath(root)
-    val groups: Seq[DataFrame] =
-      live.groupBy(_.tag).toSeq.sortBy(_._1).flatMap { case (tag, ls) =>
-        def reader = m.schemas.get(tag).fold(spark.read)(spark.read.schema(_))
-        val (flat, leaves) = ls.partition(_.cell.isEmpty)
-        val flatDf =
-          if (flat.isEmpty) Seq.empty
-          else Seq(reader
-            .parquet(flat.map(l => new Path(store, l.rel).toString): _*)
-            .withColumn("batch", lit(tag)))
-        // cell leaves: one read per generation dir (rel = "<gen>/cell=<c>");
-        // basePath pins discovery so only the LISTED leaves are scanned
-        // while `cell` still comes from the directory name
-        val leafDfs = leaves.groupBy(_.rel.takeWhile(_ != '/')).toSeq
-          .sortBy(_._1).map { case (gen, gls) =>
-            reader
-              .option("basePath", new Path(store, gen).toString)
-              .parquet(gls.map(l => new Path(store, l.rel).toString): _*)
-              .withColumn("cell", col("cell").cast("int"))
-              .withColumn("batch", lit(tag))
-          }
-        flatDf ++ leafDfs
-      }
-    groups.reduce(_.unionByName(_))
+    live.groupBy(_.tag).toSeq.sortBy(_._1).map { case (tag, ls) =>
+      def reader = m.schemas.get(tag).fold(spark.read)(spark.read.schema(_))
+      val (flat, leaves) = ls.partition(_.cell.isEmpty)
+      val flatDf =
+        if (flat.isEmpty) Seq.empty
+        else Seq(reader
+          .parquet(flat.map(l => new Path(store, l.rel).toString): _*)
+          .withColumn("batch", lit(tag)))
+      // cell leaves: one read per generation dir (rel = "<gen>/cell=<c>");
+      // basePath pins discovery so only the LISTED leaves are scanned
+      // while `cell` still comes from the directory name
+      val leafDfs = leaves.groupBy(_.rel.takeWhile(_ != '/')).toSeq
+        .sortBy(_._1).map { case (gen, gls) =>
+          reader
+            .option("basePath", new Path(store, gen).toString)
+            .parquet(gls.map(l => new Path(store, l.rel).toString): _*)
+            .withColumn("cell", col("cell").cast("int"))
+            .withColumn("batch", lit(tag))
+        }
+      tag -> (flatDf ++ leafDfs).reduce(_.unionByName(_))
+    }
   }
+
+  private def readUnion(spark: SparkSession, root: Path, m: Manifest,
+                        live: Seq[Layer]): DataFrame =
+    readEntries(spark, root, m, live).map(_._2).reduce(_.unionByName(_))
 
   private[graft] def read(spark: SparkSession, dir: String,
                           exclude: Option[String] = None)
                          (empty: => DataFrame): DataFrame = {
     val (root, m) = resolve(spark, dir)
     val live = m.layers.filterNot(l => exclude.contains(l.tag))
-    if (live.isEmpty) empty else readEntries(spark, root, m, live)
+    if (live.isEmpty) empty else readUnion(spark, root, m, live)
+  }
+
+  /** The live layers as one frame per tag, every frame from ONE resolved
+    * manifest: the layers one publish wrote together (the BM25 stats'
+    * `df`/`scalars` pair) are read as that publish's pair, never one
+    * beside its predecessor's partner. Empty when no publish reached the
+    * root. */
+  private[graft] def readEach(spark: SparkSession,
+                              dir: String): Map[String, DataFrame] = {
+    val (root, m) = resolve(spark, dir)
+    readEntries(spark, root, m, m.layers).toMap
   }
 
   /** Read ONLY the named tags' layers (manifest pruning — the delete
@@ -262,7 +306,7 @@ object VersionedLayers {
     val (root, m) = resolve(spark, dir)
     val live = m.layers.filter(l => tags.contains(l.tag))
     require(live.nonEmpty, s"$dir: none of $tags is a live layer")
-    readEntries(spark, root, m, live)
+    readUnion(spark, root, m, live)
   }
 
   /** Read ONLY the named (tag, cell) leaves of a cell-granular artifact
@@ -273,7 +317,7 @@ object VersionedLayers {
     val live = m.layers.filter(l =>
       l.cell.exists(c => pairs.contains((l.tag, c))))
     require(live.nonEmpty, s"$dir: none of $pairs is a live (tag, cell) leaf")
-    readEntries(spark, root, m, live)
+    readUnion(spark, root, m, live)
   }
 
   /** The live layers' store paths (the x95 policy's byte walk). */
@@ -302,7 +346,7 @@ object VersionedLayers {
     val tags = layers.map(_.tag).toSet
     writeManifest(fs, root, seq + 1L,
       Manifest(layers, (prev.schemas ++ fresh).filter(e => tags(e._1))))
-    graft.streaming.StreamingIngest.writeViewPointer(fs, root, s"m-${seq + 1L}")
+    writePointer(fs, root, s"m-${seq + 1L}")
     gc(fs, root, seq + 1L, keep = (layers ++ prev.layers).map(_.rel).toSet)
   }
 
@@ -376,43 +420,75 @@ object VersionedLayers {
   private[graft] def publishLayer(spark: SparkSession, dir: String, tag: String,
                                   df: DataFrame,
                                   subPartition: Seq[String] = Seq.empty,
-                                  replaceAll: Boolean = false): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val seq = current(fs, root)._1 + 1L
-    val entries: Seq[Layer] = subPartition match {
-      case Seq() =>
-        val rel = s"$tag-g$seq"
-        val dest = new Path(storePath(root), rel)
-        if (fs.exists(dest)) fs.delete(dest, true) // replay debris
-        sizedForWrite(df, Seq.empty).write.mode("overwrite")
-          .parquet(dest.toString)
-        if (hasVisibleData(fs, dest)) Seq(Layer(tag, rel))
-        else { fs.delete(dest, true); Seq.empty }
+                                  replaceAll: Boolean = false): Unit =
+    subPartition match {
+      case Seq() => publishLayers(spark, dir, Seq(tag -> df), replaceAll)
       case Seq(cellCol) =>
         // cell-granular artifact: ONE partitionBy job stages the layer,
         // then ONE rename lands the whole generation dir; each cell leaf
         // inside it gets its own manifest entry, so a later delete can
         // swap one cell without touching its siblings (the x83 dirty-leaf
         // economics), while readers batch the generation into one scan
+        val (fs, root) = fsOf(spark, dir)
+        val seq = current(fs, root)._1 + 1L
         val stage = new Path(root, s".stage_g$seq")
         if (fs.exists(stage)) fs.delete(stage, true)
         sizedForWrite(df, Seq(cellCol)).write.mode("overwrite")
           .partitionBy(cellCol).parquet(stage.toString)
         val gen = s"$tag-g$seq"
         land(fs, root, stage, gen)
-        fs.listStatus(new Path(storePath(root), gen)).toSeq
+        val entries = fs.listStatus(new Path(storePath(root), gen)).toSeq
           .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$cellCol="))
           .map { st =>
             val c = st.getPath.getName.stripPrefix(s"$cellCol=").toInt
             Layer(tag, s"$gen/${st.getPath.getName}", Some(c))
           }
+        publish(fs, root, Map(tag -> layerSchema(df, Some(cellCol)))) {
+          prior => if (replaceAll) entries else prior.filterNot(_.tag == tag) ++ entries
+        }
       case other => throw new IllegalArgumentException(
         s"$dir: at most one sub-partition column is supported, got $other")
     }
-    publish(fs, root, Map(tag -> layerSchema(df, subPartition.headOption))) {
-      prior => if (replaceAll) entries else prior.filterNot(_.tag == tag) ++ entries
+
+  /** [[publishLayer]] of several flat layers at once: each `(tag, df)`
+    * part is written to its own fresh store dir, and ONE manifest publish
+    * maps every tag to its dir, so a reader sees all parts of the publish
+    * or none. */
+  private[graft] def publishLayers(spark: SparkSession, dir: String,
+                                   parts: Seq[(String, DataFrame)],
+                                   replaceAll: Boolean = false): Unit = {
+    val (fs, root) = fsOf(spark, dir)
+    val seq = current(fs, root)._1 + 1L
+    val entries = parts.flatMap { case (tag, df) =>
+      val rel = s"$tag-g$seq"
+      val dest = new Path(storePath(root), rel)
+      if (fs.exists(dest)) fs.delete(dest, true) // replay debris
+      sizedForWrite(df, Seq.empty).write.mode("overwrite").parquet(dest.toString)
+      if (hasVisibleData(fs, dest)) Seq(Layer(tag, rel))
+      else { fs.delete(dest, true); Seq.empty }
+    }
+    val tags = parts.map(_._1).toSet
+    publish(fs, root, parts.map { case (t, df) => t -> layerSchema(df, None) }.toMap) {
+      prior => if (replaceAll) entries else prior.filterNot(l => tags(l.tag)) ++ entries
     }
   }
+
+  /** The replay gate of a snapshot store (see the object doc): unless the
+    * live manifest already holds every tag in `tags`, run `fold` — which
+    * reads the live snapshot and returns the next one's frames, one per
+    * tag, in `tags` order — and publish them as the whole next manifest.
+    * A replayed batch whose publish landed skips its fold, which would
+    * otherwise fold the batch into its own output; a crash before the
+    * pointer move leaves the prior snapshot live, so the replay folds
+    * against it again and converges. Single-writer (the pipeline lease). */
+  private[graft] def foldOnce(spark: SparkSession, dir: String, tags: Seq[String])
+                             (fold: => Seq[DataFrame]): Unit =
+    if (!tags.forall(layers(spark, dir).map(_.tag).toSet)) {
+      val next = fold
+      require(next.size == tags.size,
+        s"$dir: fold returned ${next.size} frames for tags $tags")
+      publishLayers(spark, dir, tags.zip(next), replaceAll = true)
+    }
 
   /** The cell-granular dirty-leaf rewrite behind the IVF-PQ delete fold:
     * `survivors` (carrying `batch` and `cell`, restricted to
@@ -532,7 +608,7 @@ object VersionedLayers {
     val (root, m) = resolve(spark, dir)
     val live = m.layers.map(_.tag).distinct
     if (live.size <= 1) return live.size
-    val folded = content(readEntries(spark, root, m, m.layers)).drop("batch")
+    val folded = content(readUnion(spark, root, m, m.layers)).drop("batch")
     // no snapshot needed: the fold READS the live store dirs and WRITES a
     // fresh one — source and destination never collide
     publishLayer(spark, dir, tag, folded, subPartition, replaceAll = true)

@@ -1419,167 +1419,57 @@ object StreamingIngest {
     }
   }
 
-  /** The `_LATEST` pointer of a maintained-view directory: names the
-    * current snapshot dir ("base" or "batch=<tag>"). A torn pointer (death
-    * mid-write) is always repaired before any read: the only reader is the
-    * NEXT batch's fold, which cannot run until this batch commits, and a
-    * replay of THIS batch rewrites the pointer without reading it (its
-    * fold is skipped on the publish marker). */
-  private[graft] def readViewPointer(fs: org.apache.hadoop.fs.FileSystem,
-                              viewRoot: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(new org.apache.hadoop.fs.Path(viewRoot, "_LATEST"))
-    try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-  }
-
-  private[graft] def writeViewPointer(fs: org.apache.hadoop.fs.FileSystem,
-                               viewRoot: org.apache.hadoop.fs.Path,
-                               snapName: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    // write-then-RENAME, not create-truncate: every versioned-layer
-    // probe resolves this pointer, and a racing reader of a truncate-
-    // then-write could see a half-written name. Rename is atomic on
-    // POSIX/HDFS; where rename-over-existing is refused the fallback is
-    // delete+rename (the lease-heartbeat pattern — a far narrower
-    // window than truncate+write, and single-writer anyway).
-    val latest = new Path(viewRoot, "_LATEST")
-    // fixed name: single-writer (leased), and a crash leftover is
-    // clobbered by the next pointer move's own create-overwrite
-    val tmp = new Path(viewRoot, ".latest_tmp")
-    val out = fs.create(tmp, true)
-    try out.write(snapName.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, latest)) {
-      fs.delete(latest, false)
-      require(fs.rename(tmp, latest), s"could not move pointer at $viewRoot")
-    }
-  }
-
   /** Initialize a maintained aggregate view over a day-partitioned events
-    * corpus: the "base" snapshot is the full aggregate, and `_LATEST`
-    * points at it. */
+    * corpus: a snapshot store ([[graft.operators.VersionedLayers]]) whose
+    * `base` layer is the full aggregate. */
   private[graft] def initRetractView(spark: SparkSession, corpusDir: String,
-                                     viewDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val viewRoot = new Path(viewDir)
-    val fs = viewRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.operators.Maintenance.partial(spark.read.parquet(corpusDir))
-      .write.mode("overwrite").parquet(new Path(viewRoot, "base").toString)
-    writeViewPointer(fs, viewRoot, "base")
-  }
+                                     viewDir: String): Unit =
+    graft.operators.VersionedLayers.publishLayer(spark, viewDir, "base",
+      graft.operators.Maintenance.partial(spark.read.parquet(corpusDir)))
 
-  /** The view's current contents (via the `_LATEST` pointer). */
-  private[graft] def readRetractView(spark: SparkSession, viewDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val viewRoot = new Path(viewDir)
-    val fs = viewRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(new Path(viewRoot, readViewPointer(fs, viewRoot)).toString)
-  }
+  /** The view's live snapshot. */
+  private[graft] def readRetractView(spark: SparkSession, viewDir: String): DataFrame =
+    graft.operators.VersionedLayers.readAny(spark, viewDir).drop("batch")
 
   /** One micro-batch of the streaming retraction-view loop (T19 = t18 ∘
     * x77): a batch of tombstone keys `(event_id, logday)` is folded OUT of
     * the stored aggregate view AND deleted from the day-partitioned
-    * corpus, in that order. Exactly-once for the VIEW comes from
-    * snapshot-per-batch publish markers: the fold's output lands as
-    * `batch=<tag>` next to its predecessor and is published by atomic
-    * rename (marker inside), so a replay whose snapshot already published
-    * SKIPS the fold — this matters because the fold is only correct
-    * against the PRE-delete corpus (the max repair rescans surviving
-    * rows), and a replay arrives after the corpus delete may have run.
-    * The corpus delete itself is [[deleteBatch]] (idempotent, crash-safe
-    * swaps). Order of operations per batch: fold+publish → move `_LATEST`
-    * → delete corpus partitions; every prefix of that sequence replays to
-    * the same end state, and the view is never behind the corpus (it
-    * leads it within a batch, by at most the batch). Each snapshot is
-    * O(groups) — the x76/x77 stored-aggregate envelope — so the per-batch
-    * cost is O(batch keys + touched groups + dirty buckets' rows). */
+    * corpus, in that order. Exactly-once for the VIEW comes from the
+    * snapshot store's replay gate ([[graft.operators.VersionedLayers.foldOnce]]):
+    * the fold's output publishes as the view's only layer, tagged with the
+    * batch, so a replay whose publish already landed SKIPS the fold — this
+    * matters because the fold is only correct against the PRE-delete
+    * corpus (the max repair rescans surviving rows), and a replay arrives
+    * after the corpus delete may have run. The corpus delete itself is
+    * [[deleteBatch]] (idempotent, crash-safe swaps). Order of operations
+    * per batch: fold+publish (one pointer move) → delete corpus
+    * partitions; a crash before the pointer move leaves both the prior
+    * view and the corpus untouched, so every prefix of that sequence
+    * replays to the same end state, and the view is never behind the
+    * corpus (it leads it within a batch, by at most the batch). Each
+    * snapshot is O(groups) — the x76/x77 stored-aggregate envelope — so
+    * the per-batch cost is O(batch keys + touched groups + dirty buckets'
+    * rows). */
   private[graft] def retractViewBatch(batch: DataFrame, batchTag: String,
                                       corpusDir: String, viewDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    val viewRoot = new Path(viewDir)
-    val fs = viewRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = new Path(viewRoot, s"batch=$batchTag")
     val keys = batch.select(col("event_id"), col("logday")).distinct().persist()
     try {
-      t19Lap(s"b:$batchTag keys")
       // ONE driver round-trip serves as the emptiness gate, the fold's
       // partition-prune list, and the corpus delete's dirty set
       val dayVals = keys.select(col("logday")).distinct()
         .collect().map(_.get(0)).toSeq.sortBy(_.toString)
       if (dayVals.nonEmpty) {
-        t19Lap(s"b:$batchTag nonempty")
-        if (!fs.exists(new Path(snap, "_SUCCESS"))) {
-          val base = readRetractView(spark, viewDir)
-          val folded = graft.operators.Maintenance.aggRetractMergeKeys(
-            spark, spark.read.parquet(corpusDir), base, keys, dayVals)
-          t19Lap(s"b:$batchTag foldplan")
-          publishSnapshot(fs, viewRoot, snap) { tmp =>
-            // one file: a snapshot is O(groups) — single-task write, and
-            // the next batch's fold reads the whole thing anyway
-            folded.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            t19Lap(s"b:$batchTag foldwrite")
-          }
+        graft.operators.VersionedLayers.foldOnce(spark, viewDir, Seq(batchTag)) {
+          Seq(graft.operators.Maintenance.aggRetractMergeKeys(spark,
+            spark.read.parquet(corpusDir), readRetractView(spark, viewDir),
+            keys, dayVals))
         }
-        writeViewPointer(fs, viewRoot, s"batch=$batchTag")
-        t19Lap(s"b:$batchTag publish")
-        gcSnapshots(fs, viewRoot, batchTag)
-        t19Lap(s"b:$batchTag gc")
         deleteBatch(batch, batchTag, corpusDir,
           keyCol = "event_id", partCol = "logday",
           knownDirty = Some(dayVals))
-        t19Lap(s"b:$batchTag delete")
       }
     } finally { keys.unpersist(); () }
-  }
-
-  /** Race-safe snapshot publish under a maintained-artifact root: `write`
-    * fills a fresh `.tmp_*` dir, a `_SUCCESS` marker seals it (Spark's
-    * parquet commit usually wrote one already), and ONE rename publishes
-    * it as `snap`. A refused rename means either a concurrent publisher
-    * won (marker present — ours is discarded) or a markerless partial
-    * attempt occupies the slot (replaced rather than stranding the
-    * batch). Shared by the t19 view fold and the t21 stats fold. */
-  private[graft] def publishSnapshot(fs: org.apache.hadoop.fs.FileSystem,
-                              root: org.apache.hadoop.fs.Path,
-                              snap: org.apache.hadoop.fs.Path)
-                             (write: org.apache.hadoop.fs.Path => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(root, s".tmp_${java.util.UUID.randomUUID()}")
-    write(tmp)
-    val marker = new Path(tmp, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-    if (!fs.rename(tmp, snap)) {
-      if (fs.exists(new Path(snap, "_SUCCESS"))) fs.delete(tmp, true)
-      else {
-        fs.delete(snap, true)
-        require(fs.rename(tmp, snap), s"could not publish snapshot $snap")
-      }
-    }
-  }
-
-  /** GC a maintained-artifact root after the `_LATEST` pointer moved to
-    * `batch=<batchTag>`: THIS RUN's earlier snapshots can never be read
-    * again (foreachBatch replays only the last uncommitted batch, and
-    * cross-run readers resolve through the pointer) — without this sweep
-    * the root grows by one snapshot per micro-batch forever. Orphaned
-    * `.tmp_*` dirs (a crash between write and rename) go the same way;
-    * other runs' snapshots, `base`, and the pointer target are never
-    * touched. Shared by the t19 view loop and the t21 stats loop. */
-  private[graft] def gcSnapshots(fs: org.apache.hadoop.fs.FileSystem,
-                          root: org.apache.hadoop.fs.Path,
-                          batchTag: String): Unit = {
-    val cut = batchTag.lastIndexOf('-')
-    val parsed = cut > 0 && batchTag.substring(cut + 1).nonEmpty &&
-      batchTag.substring(cut + 1).forall(_.isDigit)
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      val superseded = parsed && {
-        val runPrefix = s"batch=${batchTag.substring(0, cut + 1)}"
-        val rest = n.stripPrefix(runPrefix)
-        n.startsWith(runPrefix) && rest.nonEmpty && rest.forall(_.isDigit) &&
-          rest.toLong < batchTag.substring(cut + 1).toLong
-      }
-      if (n.startsWith(".tmp_") || superseded) { fs.delete(st.getPath, true); () }
-    }
   }
 
   /** Drive a tombstone-key stream into [[retractViewBatch]] — the
@@ -1599,8 +1489,9 @@ object StreamingIngest {
   }
 
   /** T19 — [[retractViewStream]] under the driver's oracle gate: copy the
-    * day-partitioned landing and the stored aggregate (filesystem copies
-    * of the durable artifacts), stream the t19 tombstone set at it as TWO
+    * day-partitioned landing (a filesystem copy of the durable artifact),
+    * start a private view store from the stored aggregate, stream the t19
+    * tombstone set at them as TWO
     * micro-batches (ordered-mtime arrival files), and return the FINAL
     * view. Tombstones are the retention cut plus a DAY-BANDED scatter
     * ([[graft.operators.Maintenance.t19Tombstones]]) — the operational
@@ -1610,22 +1501,9 @@ object StreamingIngest {
     * deletes, so the green hash states that the incremental streaming
     * loop — two folds, two partition-pruned max repairs, two corpus
     * swaps — converges to the one-shot retraction. */
-  // GRAFT_T19_PROFILE=1: per-phase wall times to stderr — profiling hook
-  // only, zero work when unset (the t17 discipline)
-  private val t19Profile = sys.env.get("GRAFT_T19_PROFILE").exists(_.trim.nonEmpty)
-  private val t19Mark = new ThreadLocal[java.lang.Long] {
-    override def initialValue() = java.lang.Long.valueOf(System.nanoTime())
-  }
-  private def t19Lap(tag: String): Unit = if (t19Profile) {
-    val now = System.nanoTime()
-    System.err.println(f"[t19] $tag%-14s ${(now - t19Mark.get) / 1e9}%.3f s")
-    t19Mark.set(now)
-  }
-
   def streamRetractView(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.Files
     graft.Tables.ensureParquetConf(spark)
-    t19Lap("start")
     val landed = graft.operators.Maintenance.landedEvents(spark, sfDir)
     val root = graft.Tables.scratchDir("graft_t19")
     val (mn, d) = graft.operators.Maintenance.historyBoundsLanded(spark,
@@ -1639,12 +1517,13 @@ object StreamingIngest {
     val bandHi = graft.operators.Maintenance.dayLitOfEpoch(mn + 6L * d)
     def mutableDay(day: Long): Boolean =
       day <= cutDay || (day >= bandLo && day <= bandHi)
-    // a PRIVATE copy of the landing AND of the stored aggregate: the
-    // stream mutates both, and the durable-cache artifacts are shared by
-    // x76/x77 — filesystem copies, not per-run Spark re-encodes. The
-    // landing copy is COPY-ON-WRITE (VERDICT r13 #4): only the day
-    // partitions the stream can ever rewrite are deep-copied; the clean
-    // majority symlink to the shared artifact read-only
+    // a PRIVATE copy of the landing and a private view store: the stream
+    // mutates both, and the durable-cache artifacts are shared by
+    // x76/x77. The landing copy is a filesystem copy, COPY-ON-WRITE
+    // (VERDICT r13 #4): only the day partitions the stream can ever
+    // rewrite are deep-copied; the clean majority symlink to the shared
+    // artifact read-only. The view's base layer publishes the stored
+    // aggregate (O(groups) rows)
     val corpus = root.resolve("corpus").toString
     copyDirCow(spark,
       graft.operators.Maintenance.landedEventsDir(spark, sfDir), corpus) {
@@ -1652,13 +1531,8 @@ object StreamingIngest {
         mutableDay(name.stripPrefix("logday=").toLong)
     }
     val view = root.resolve("view").toString
-    copyDir(spark, graft.operators.Maintenance.storedAggDir(spark, sfDir),
-      new org.apache.hadoop.fs.Path(view, "base").toString)
-    writeViewPointer(
-      new org.apache.hadoop.fs.Path(view)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(view), "base")
-    t19Lap("copy")
+    graft.operators.VersionedLayers.publishLayer(spark, view, "base",
+      spark.read.parquet(graft.operators.Maintenance.storedAggDir(spark, sfDir)))
     val tomb = landed
       // redundant day conjunct (x76's discipline: changes no row, only
       // prunes partitions) — the tombstone SCAN reads only the envelope
@@ -1680,21 +1554,19 @@ object StreamingIngest {
     landArrivalSplits(tomb, root, srcDir,
       Seq("a_first.parquet" -> (col("logday") <= cutDay),
         "b_second.parquet" -> (col("logday") > cutDay)))
-    t19Lap("land")
     withScratchCheckpoint { ck =>
       retractViewStream(
         spark.readStream.schema(tomb.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir.toString),
         corpus, view, ck)
     }
-    t19Lap("stream")
     readRetractView(spark, view).orderBy(col("category"), col("bucket"))
   }
 
   /** T20 — the x80 dirty-cell index rewrite as an OPERATIONAL LOOP: a
     * stream of vec_id tombstones applied to the cell-partitioned ANN
     * index in `foreachBatch`, one `ivfCellDeleteKeys` swap per
-    * micro-batch. Unlike t19's fold, no publish marker is needed —
+    * micro-batch. Unlike t19's fold, no replay gate is needed —
     * deleting keys from an index is idempotent by construction (a
     * replayed batch's keys are already absent, so the dirty set is empty
     * and no file is touched), which is the t18 corpus-delete discipline
@@ -2130,7 +2002,7 @@ object StreamingIngest {
     * bookkeeping artifact per batch (`HiveBatchedSink.scala:297-373`).
     *
     * Exactly-once is the orchestrator's phase argument, per batch: the
-    * stats folds are snapshot-marker gated (t21), the delete swaps
+    * stats folds are replay-gated (t21), the delete swaps
     * markerless-idempotent (t20), the appends tag-scoped overwrites
     * (x16) — so a replay of any prefix converges (x94's spec drills the
     * full-batch replay). The exact and near legs probe the index as-of
@@ -2295,95 +2167,47 @@ object StreamingIngest {
     Dedup.readClusterLabels(spark, dirs.labelsDir).orderBy(col("doc_id"))
   }
 
-  /** Initialize the maintained BM25-stats artifacts (per-term df table +
-    * scalar n_docs/total_len row — `Search.bm25TermDf`/`bm25Scalars` as
-    * a VERSIONED store): the "base" snapshot holds both, `_LATEST` points
-    * at it. Snapshot layout: `<root>/<snap>/{df,scalars}/` parquet. */
+  /** Publish batch `tag`'s BM25 stats `(termDf, scalars)` —
+    * `Search.bm25TermDf`/`bm25Scalars` as a snapshot store
+    * ([[graft.operators.VersionedLayers]]) — as the store's whole
+    * snapshot: the layers `df.<tag>` and `scalars.<tag>` of ONE publish,
+    * so a reader never pairs one batch's table with another batch's,
+    * unless the store already holds them (a replay —
+    * [[graft.operators.VersionedLayers.foldOnce]]). The write sizes
+    * itself: a small vocabulary lands as one file, a 10⁸-term table as a
+    * wide write (`VersionedLayers.sizedForWrite`). */
+  private[graft] def publishBm25Stats(spark: SparkSession, statsDir: String,
+                                      tag: String)
+                                     (stats: => (DataFrame, DataFrame)): Unit =
+    graft.operators.VersionedLayers.foldOnce(spark, statsDir,
+        Seq(s"df.$tag", s"scalars.$tag")) {
+      val (termDf, scalars) = stats
+      Seq(termDf, scalars)
+    }
+
+  /** Initialize the maintained BM25 stats over `docs` as the `base` batch. */
   private[graft] def initBm25Stats(spark: SparkSession, docs: DataFrame,
-                                   statsDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(statsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = new Path(root, "base")
-    writeBm25TermDf(graft.operators.Search.bm25TermDfOf(docs),
-      new Path(base, "df").toString)
-    graft.operators.Search.bm25ScalarsOf(docs).coalesce(1)
-      .write.mode("overwrite").parquet(new Path(base, "scalars").toString)
-    writeViewPointer(fs, root, "base")
-  }
+                                   statsDir: String): Unit =
+    publishBm25Stats(spark, statsDir, "base")(
+      (graft.operators.Search.bm25TermDfOf(docs),
+        graft.operators.Search.bm25ScalarsOf(docs)))
 
-  /** Vocabulary-size gate past which a term-df snapshot sheds the
-    * single-file layout (sys-prop `graft.bm25.shardRowGate`; the
-    * `unionFindGate` shape — small vocabularies take the cheap one-file
-    * path, large ones the sharded one, a differential spec pins the two
-    * layouts row-identical). Default 2^20 terms: below it one task
-    * rewriting the snapshot is noise; a 100 TB web corpus's term-df table
-    * is 10⁸–10⁹ rows, where one funnel task per fold becomes the
-    * pipeline's serial bottleneck (VERDICT r15 #3). */
-  private[graft] def bm25ShardRowGate: Long =
-    java.lang.Long.getLong("graft.bm25.shardRowGate", 1L << 20)
-
-  /** Shard fan-out for a gated term-df snapshot (sys-prop
-    * `graft.bm25.shardCount`): hash-bucketed `partitionBy` directories,
-    * so the snapshot write runs wide while every reader still gets one
-    * logical table. */
-  private[graft] def bm25ShardCount: Int =
-    Integer.getInteger("graft.bm25.shardCount", 32)
-
-  /** Write a term-df snapshot in whichever layout its size earns: one
-    * file below [[bm25ShardRowGate]] rows (the x78 O(vocab) ledger
-    * shape), hash-bucketed `shard=` partitions above it — the fold stops
-    * funneling the whole vocabulary through one task exactly when that
-    * task stops being noise. The df is SNAPSHOTTED first (lineage
-    * truncation) so the row-count consult and the write run one plan, not
-    * two recomputes of the fold — and the count itself rides the
-    * snapshot's OWN materialization job as an `observe` metric, so the
-    * layout gate costs zero extra driver actions (VERDICT r16 #5: the
-    * explicit `count()` here was one more round-trip per fold in the hot
-    * maintenance loop). The observed value is exact (a global count over
-    * the materialized rows); if the metric hasn't surfaced through the
-    * async listener bus within the bound, the gate falls back to the old
-    * cached-block count rather than guessing. Both layouts are
-    * row-identical (spec-pinned) and [[readBm25Stats]] reads either —
-    * the shard column is layout, not data. */
-  private[graft] def writeBm25TermDf(termDf: DataFrame, dest: String): Unit = {
-    val spark = termDf.sparkSession
-    val obs = org.apache.spark.sql.Observation()
-    val snap = graft.operators.Dedup.snapshot(spark,
-      termDf.observe(obs, count(lit(1)).as("rows")))
-    val nRows = graft.operators.Maintenance.observedOr[Long](obs, "rows")(snap.count())
-    if (nRows > bm25ShardRowGate)
-      snap.withColumn("shard",
-          pmod(graft.functions.TextFns.polyHash(col("term")),
-            lit(bm25ShardCount.toLong)))
-        .write.mode("overwrite").partitionBy("shard").parquet(dest)
-    else snap.coalesce(1).write.mode("overwrite").parquet(dest)
-  }
-
-  /** The columns every stats snapshot holds, fixed by the code that
-    * writes them (`Search.bm25TermDfOf` and its folds; `bm25ScalarsOf`
-    * and its folds): readers pass them instead of sampling a footer. */
-  private[graft] val Bm25TermDfSchema = StructType(Seq(
+  /** The columns of t21's durable stored-split stats: readers pass them
+    * instead of sampling a footer. */
+  private val Bm25TermDfSchema = StructType(Seq(
     StructField("term", StringType), StructField("df", LongType)))
-  private[graft] val Bm25ScalarsSchema = StructType(Seq(
+  private val Bm25ScalarsSchema = StructType(Seq(
     StructField("n_docs", LongType), StructField("total_len", LongType)))
 
-  /** The current stats artifacts `(termDf, scalars)` via `_LATEST`.
-    * Layout-blind: a sharded snapshot's `shard=` partition column is
-    * dropped on read, so folds and probes see the same logical table
-    * whichever layout [[writeBm25TermDf]] chose. Both reads take their
-    * declared schema, so planning them runs no Spark job. */
+  /** The live stats `(termDf, scalars)`, both from ONE resolved manifest
+    * and read with the schemas it records (planning runs no Spark job). */
   private[graft] def readBm25Stats(spark: SparkSession,
                                    statsDir: String): (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(statsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = new Path(root, readViewPointer(fs, root))
-    val df = spark.read.schema(Bm25TermDfSchema)
-      .parquet(new Path(snap, "df").toString)
-    (if (df.columns.contains("shard")) df.drop("shard") else df,
-      spark.read.schema(Bm25ScalarsSchema)
-        .parquet(new Path(snap, "scalars").toString))
+    val parts = graft.operators.VersionedLayers.readEach(spark, statsDir)
+    def part(kind: String): DataFrame = parts.collectFirst {
+      case (tag, df) if tag.startsWith(s"$kind.") => df.drop("batch")
+    }.getOrElse(throw new IllegalStateException(s"$statsDir: no live $kind layer"))
+    (part("df"), part("scalars"))
   }
 
   /** One micro-batch of the streaming BM25-stats maintenance loop (T21 —
@@ -2397,11 +2221,10 @@ object StreamingIngest {
     * the scalar counts/sums — O(vocabulary + batch), never a corpus
     * rescan; zero-df terms leave the vocabulary.
     *
-    * Exactly-once via t19's snapshot-marker discipline, and for the same
-    * reason: the fold READS PRIOR STATE (the `_LATEST` target), so a
-    * replayed batch that re-ran the fold would fold its own output into
-    * itself and double-count — the `_SUCCESS` marker makes the replay
-    * skip straight to the (idempotent) pointer move and GC.
+    * Exactly-once via t19's replay gate, and for the same reason: the fold
+    * READS PRIOR STATE (the live snapshot), so a replayed batch that
+    * re-ran the fold would fold its own output into itself and
+    * double-count — a replay whose publish landed skips the fold.
     *
     * PRECONDITIONS (the x82 batch contract): ops are unique per batch (a
     * doc appears at most once as I and once as D), and `corpusDocs` must
@@ -2416,39 +2239,22 @@ object StreamingIngest {
   private[graft] def bm25StatsBatch(batch: DataFrame, batchTag: String,
                                     corpusDocs: DataFrame,
                                     statsDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.operators.Search
     val spark = batch.sparkSession
-    val root = new Path(statsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snap = new Path(root, s"batch=$batchTag")
-    if (batch.isEmpty) return
-    if (!fs.exists(new Path(snap, "_SUCCESS"))) {
+    if (!batch.isEmpty) publishBm25Stats(spark, statsDir, batchTag) {
       val (baseDf, baseSc) = readBm25Stats(spark, statsDir)
       val inserts = batch.where(col("op") === "I")
         .select(col("doc_id"), col("text"))
       val doomed = corpusDocs.join(
         broadcast(batch.where(col("op") === "D").select(col("doc_id")).distinct()),
         Seq("doc_id"), "leftsemi")
-      val newDf = Search.bm25FoldTermDf(
-        Search.bm25RetractTermDf(baseDf, Search.bm25TermDfOf(doomed)),
-        Search.bm25TermDfOf(inserts))
-      val newSc = Search.bm25FoldScalars(
-        Search.bm25RetractScalars(spark, baseSc, Search.bm25ScalarsOf(doomed)),
-        Search.bm25ScalarsOf(inserts))
-      publishSnapshot(fs, root, snap) { tmp =>
-        // O(vocabulary) rows — gated layout (one file until the vocab
-        // earns sharding, VERDICT r15 #3); scalars are ONE row, always
-        writeBm25TermDf(newDf, new Path(tmp, "df").toString)
-        newSc.coalesce(1).write.mode("overwrite")
-          .parquet(new Path(tmp, "scalars").toString)
-        // the sub-artifact writes each leave their own parquet _SUCCESS;
-        // the SNAPSHOT-level marker below is the one the replay skip keys
-        // on, so it must only appear once both sub-artifacts are complete
-      }
+      (Search.bm25FoldTermDf(
+          Search.bm25RetractTermDf(baseDf, Search.bm25TermDfOf(doomed)),
+          Search.bm25TermDfOf(inserts)),
+        Search.bm25FoldScalars(
+          Search.bm25RetractScalars(spark, baseSc, Search.bm25ScalarsOf(doomed)),
+          Search.bm25ScalarsOf(inserts)))
     }
-    writeViewPointer(fs, root, s"batch=$batchTag")
-    gcSnapshots(fs, root, batchTag)
   }
 
   /** Drive an ops stream `(doc_id, op, text)` into [[bm25StatsBatch]] —
@@ -2477,8 +2283,8 @@ object StreamingIngest {
     * states that N micro-batch folds converge to the one-shot upsert
     * fold: streaming ≡ batch for retrieval-stats maintenance. */
   /** t21's stored-split stats as DURABLE artifacts — built once per
-    * corpus version (the x78 discipline; the fixture copies the tiny
-    * O(vocab)+O(1) outputs into its private versioned store per run
+    * corpus version (the x78 discipline; the fixture publishes the tiny
+    * O(vocab)+O(1) outputs as its private store's base batch per run
     * instead of re-scanning the stored corpus twice per run). */
   private[graft] def t21StoredStatsDirs(spark: SparkSession,
                                         sfDir: String): (String, String) = {
@@ -2502,20 +2308,17 @@ object StreamingIngest {
                       terms: Seq[String] = Seq("spark", "join", "window"),
                       k: Int = 10): DataFrame = {
     import java.nio.file.Files
-    import org.apache.hadoop.fs.Path
     import graft.operators.Search
     graft.Tables.ensureParquetConf(spark)
     val docs = graft.Tables.documents(spark, sfDir)
     val stored = docs.where(!Search.x82IsInsert)
     val root = graft.Tables.scratchDir("graft_t21")
     val statsDir = root.resolve("stats").toString
-    // base snapshot = filesystem copies of the durable stored-split stats
+    // the base batch publishes the durable stored-split stats
     val (dfDir, scDir) = t21StoredStatsDirs(spark, sfDir)
-    copyDir(spark, dfDir, new Path(statsDir, "base/df").toString)
-    copyDir(spark, scDir, new Path(statsDir, "base/scalars").toString)
-    writeViewPointer(new Path(statsDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      new Path(statsDir), "base")
+    publishBm25Stats(spark, statsDir, "base")(
+      (spark.read.schema(Bm25TermDfSchema).parquet(dfDir),
+        spark.read.schema(Bm25ScalarsSchema).parquet(scDir)))
     // ONE scan emits both op legs: inserts carry their text, stored-split
     // tombstones arrive as keys
     val ops = docs.select(col("doc_id"),

@@ -18,17 +18,6 @@ class DedupSimilaritySpec extends SparkSpec {
         df.where($"batch" === t).drop("batch"), sub)
     }
 
-  /** Run `publish` and move the pointer back to where it was: the state a
-    * crash between the manifest write and the pointer move leaves (the new
-    * store dirs and manifest exist, no reader can reach them). */
-  private def crashBeforePointerMove(dir: String)(publish: => Any): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior = graft.streaming.StreamingIngest.readViewPointer(fs, root)
-    publish
-    graft.streaming.StreamingIngest.writeViewPointer(fs, root, prior)
-  }
-
   private def tags(dir: String): Seq[String] =
     VersionedLayers.layers(spark, dir).map(_.tag).distinct.sorted
 

@@ -445,12 +445,8 @@ class MaintenanceSpec extends SparkSpec {
       .groupBy(col("source"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
       .where(col("n_docs") > 0)
-    val aggSnap = new org.apache.hadoop.fs.Path(twin.aggDir, "batch=ops")
-    val aggFs = aggSnap.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Dedup.snapshot(spark, aggFolded).coalesce(1)
-      .write.mode("overwrite").parquet(aggSnap.toString)
-    StreamingIngest.writeViewPointer(aggFs,
-      new org.apache.hadoop.fs.Path(twin.aggDir), "batch=ops")
+    graft.operators.VersionedLayers.publishLayer(spark, twin.aggDir, "ops",
+      aggFolded, replaceAll = true)
     // swaps + appends, artifact by artifact
     Dedup.dedupIndexDeleteKeys(spark, twin.corpusDir, kdf)
     graft.operators.VersionedLayers.publishLayer(spark, twin.corpusDir, "ops", netI)

@@ -13,6 +13,27 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
 
+  /** Run `publish` and move the pointer of the versioned-layer root `dir`
+    * back to where it was: the state a crash between the manifest write
+    * and the pointer move leaves (the new store dirs and manifest exist,
+    * no reader can reach them). */
+  def crashBeforePointerMove(dir: String)(publish: => Any): Unit = {
+    import graft.operators.VersionedLayers
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prior = VersionedLayers.readPointer(fs, root)
+    publish
+    VersionedLayers.writePointer(fs, root, prior)
+  }
+
+  /** `f` with the JVM system property `key` set to `value`, restored after. */
+  def withSysProp[A](key: String, value: String)(f: => A): A = {
+    val prev = System.setProperty(key, value)
+    try f finally {
+      if (prev == null) System.clearProperty(key) else System.setProperty(key, prev)
+    }
+  }
+
   /** `f`'s result and the Spark jobs it started, counted per
     * `spark.job.description` (unlabelled jobs count under ""). A labelled
     * no-op job fences the async listener bus, so every job `f` started

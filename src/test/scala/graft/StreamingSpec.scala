@@ -1180,29 +1180,37 @@ class StreamingSpec extends SparkSpec {
       ("b", 172800L) -> ((1L, 172830L, 9L)))
     assert(viewMap() == afterB2)
     assert(corpusIds() == Set(1L, 2L, 5L, 8L))
-    // replay of batch 2 (at-least-once): the published snapshot marker
-    // skips the fold — which would otherwise be WRONG, because the corpus
-    // delete already ran — and the re-delete is a no-op
+    // replay of batch 2 (at-least-once): the live manifest already holds
+    // the batch's tag, so the fold is skipped — re-running it would be
+    // WRONG, because the corpus delete already ran — and the re-delete is
+    // a no-op
     StreamingIngest.retractViewBatch(b2, "r-1", corpus, view)
     assert(viewMap() == afterB2)
     assert(corpusIds() == Set(1L, 2L, 5L, 8L))
-    // a crashed publish left a markerless partial snapshot dir: the batch
-    // must replace it, not read it or strand on it; a crashed WRITE left
-    // an orphan .tmp_ dir: the next batch's GC must sweep it
-    fs.mkdirs(new Path(view, "batch=r-2"))
-    fs.mkdirs(new Path(view, ".tmp_orphaned-crash-attempt"))
+    // crash before the pointer move: the crashed attempt of batch 3 wrote
+    // its store dir and manifest, and never reached the corpus delete.
+    // The drill runs the batch against a private copy of the corpus, so
+    // the real corpus keeps the pre-delete state that crash leaves
     val b3 = Seq((8L, 19700103L)).toDF("event_id", "logday")
-    StreamingIngest.retractViewBatch(b3, "r-2", corpus, view)
+    val crashedCorpus = root.resolve("corpus_crashed").toString
+    spark.read.parquet(corpus).write.partitionBy("logday").parquet(crashedCorpus)
+    crashBeforePointerMove(view)(
+      StreamingIngest.retractViewBatch(b3, "r-2", crashedCorpus, view))
+    assert(viewMap() == afterB2, "a crashed publish is visible")
+    assert(corpusIds() == Set(1L, 2L, 5L, 8L))
+    // the replay folds against the prior view again and converges to the
+    // crash-free result; with no GC grace, its publish drops every store
+    // dir that neither it nor its predecessor references
+    withSysProp("graft.versioned.gcGraceMs", "0") {
+      StreamingIngest.retractViewBatch(b3, "r-2", corpus, view)
+    }
     assert(viewMap() == Map(
       ("a", 0L) -> ((2L, 20L, 3L)), ("a", 300L) -> ((1L, 350L, 6L))))
     assert(corpusIds() == Set(1L, 2L, 5L))
     // D's day partition dropped with its last row
     assert(!fs.exists(new Path(corpus, "logday=19700103")))
-    // snapshot GC: superseded same-run snapshots and tmp orphans are gone —
-    // the view root holds exactly base, the live snapshot, and the pointer
-    val names = fs.listStatus(new Path(view)).map(_.getPath.getName).toSet
-    assert(names == Set("base", "batch=r-2", "_LATEST"),
-      s"view root not GC'd to the live set: $names")
+    val stored = fs.listStatus(new Path(view, "store")).map(_.getPath.getName).toSet
+    assert(stored == Set("r-1-g3", "r-2-g4"), s"view store not GC'd to the live set: $stored")
   }
 
   test("t21 bm25StatsBatch: fold per batch; replay skips the fold; a partial snapshot is rebuilt") {
@@ -1237,37 +1245,50 @@ class StreamingSpec extends SparkSpec {
       "scan" -> 1L, "rerank" -> 1L)
     assert(dfMap() == afterB1)
     assert(scRow() == ((4L, 11L))) // 12 − 3 (doc 2) + 2 (doc 5)
-    // replay (at-least-once): the snapshot marker must SKIP the fold — a
-    // re-run would fold the batch into its own output and double-count
+    // replay (at-least-once): the gate must SKIP the fold — a re-run
+    // would fold the batch into its own output and double-count
     StreamingIngest.bm25StatsBatch(b1, "r-0", corpus, statsDir)
     assert(dfMap() == afterB1)
     assert(scRow() == ((4L, 11L)))
-    // a crashed publish left a markerless partial snapshot dir: the batch
-    // must replace it; a crashed write left an orphan .tmp_: GC sweeps it
-    fs.mkdirs(new Path(statsDir, "batch=r-1"))
-    fs.mkdirs(new Path(statsDir, ".tmp_orphaned-crash-attempt"))
+    // crash before the pointer move: the crashed attempt's df and scalars
+    // layers and manifest are unreachable, and its replay folds against
+    // the prior snapshot again and converges
     val b2 = Seq((1L, "D", null), (4L, "D", null)).toDF("doc_id", "op", "text")
+    crashBeforePointerMove(statsDir)(
+      StreamingIngest.bm25StatsBatch(b2, "r-1", corpus, statsDir))
+    assert(dfMap() == afterB1, "a crashed publish is visible")
+    assert(scRow() == ((4L, 11L)))
     StreamingIngest.bm25StatsBatch(b2, "r-1", corpus, statsDir)
     assert(dfMap() == Map("spark" -> 1L, "window" -> 1L, "scan" -> 1L,
       "rerank" -> 1L)) // "join" df hit zero and left the vocabulary
     assert(scRow() == ((2L, 4L)))
+    // a crashed attempt of a batch that never replays (its run's
+    // checkpoint was wiped) leaves orphan store dirs; with no GC grace the
+    // next publish drops them, with every dir neither it nor its
+    // predecessor references
+    def stored(): Set[String] = fs.listStatus(new Path(statsDir, "store"))
+      .map(_.getPath.getName).toSet
+    val b3 = Seq((6L, "I", "scan filter")).toDF("doc_id", "op", "text")
+    crashBeforePointerMove(statsDir)(
+      StreamingIngest.bm25StatsBatch(b3, "dead-0", corpus, statsDir))
+    assert(stored().contains("df.dead-0-g4"))
+    withSysProp("graft.versioned.gcGraceMs", "0") {
+      StreamingIngest.bm25StatsBatch(b3, "r-2", corpus, statsDir)
+    }
+    assert(stored() == Set("df.r-1-g3", "scalars.r-1-g3", "df.r-2-g4",
+      "scalars.r-2-g4"), s"stats store not GC'd to the live set: ${stored()}")
     // the folded artifacts equal the monolithic rebuild over the final
     // corpus — the t21 convergence statement, here as a unit check
-    val finalCorpus = Seq((3L, "window scan"),
-      (5L, "spark rerank")).toDF("doc_id", "text")
+    val finalCorpus = Seq((3L, "window scan"), (5L, "spark rerank"),
+      (6L, "scan filter")).toDF("doc_id", "text")
     assert(dfMap() == Search.bm25TermDfOf(finalCorpus).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap)
-    // GC: superseded same-run snapshots and tmp orphans are gone
-    val names = fs.listStatus(new Path(statsDir)).map(_.getPath.getName).toSet
-    assert(names == Set("base", "batch=r-1", "_LATEST"),
-      s"stats root not GC'd to the live set: $names")
+    assert(scRow() == ((3L, 6L)))
   }
 
-  test("bm25 term-df snapshots shard past the row gate: sharded ≡ single-file " +
-      "row-identical, both layouts readable, the fold unchanged (VERDICT r15 #3)") {
-    import org.apache.hadoop.fs.Path
+  test("bm25 term-df publishes size their write: several files ≡ the one-file default") {
     import spark.implicits._
-    val root = Tables.scratchDir("graft_bm25shard")
+    val root = Tables.scratchDir("graft_bm25sized")
     val corpus = Seq(
       (1L, "spark join window"), (2L, "spark spark filter"),
       (3L, "window scan"), (4L, "join join join window"))
@@ -1280,41 +1301,43 @@ class StreamingSpec extends SparkSpec {
       (d.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
         (r.getLong(0), r.getLong(1)))
     }
-    // single-file lineage (gate at default 2^20: vocab stays one file)
-    val single = root.resolve("single").toString
-    StreamingIngest.initBm25Stats(spark, corpus, single)
-    StreamingIngest.bm25StatsBatch(ops, "r-0", corpus, single)
-    // sharded lineage: gate forced to 0 — every snapshot (init + fold)
-    // lands hash-bucketed
-    val sharded = root.resolve("sharded").toString
-    val prev = System.setProperty("graft.bm25.shardRowGate", "0")
-    try {
-      StreamingIngest.initBm25Stats(spark, corpus, sharded)
-      StreamingIngest.bm25StatsBatch(ops, "r-0", corpus, sharded)
-    } finally {
-      if (prev == null) System.clearProperty("graft.bm25.shardRowGate")
-      else System.setProperty("graft.bm25.shardRowGate", prev)
+    // parquet files of the live term-df layer
+    def dfFiles(dir: String): Int = {
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      graft.operators.VersionedLayers.layerPaths(spark, dir)
+        .filter(_.getName.startsWith("df."))
+        .map(p => fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")))
+        .sum
     }
-    // the layout really is sharded — shard= partition dirs on disk
-    val fs = new Path(sharded).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val shardDirs = fs.listStatus(new Path(sharded, "batch=r-0/df"))
-      .map(_.getPath.getName).filter(_.startsWith("shard="))
-    assert(shardDirs.nonEmpty, "gate at 0 did not produce a sharded layout")
-    // row-identical across layouts, init→fold, both readable layout-blind
-    assert(stats(sharded) == stats(single),
-      "sharded term-df snapshot diverged from the single-file layout")
-    // a fold whose BASE is sharded still works (the read drops the layout
-    // column before the retract join / fold union)
+    def initAndFold(dir: String): Unit = {
+      StreamingIngest.initBm25Stats(spark, corpus, dir)
+      StreamingIngest.bm25StatsBatch(ops, "r-0", corpus, dir)
+    }
+    val single = root.resolve("single").toString
+    initAndFold(single)
+    // AQE sizes the REBALANCE before the write: a 1-byte advisory and
+    // minimum partition size keep every shuffle partition its own file
+    val sized = root.resolve("sized").toString
+    val confs = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    val prior = confs.map(k => k -> spark.conf.getOption(k))
+    confs.foreach(spark.conf.set(_, "1b"))
+    try initAndFold(sized)
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(dfFiles(single) == 1, "a small vocabulary did not land as one file")
+    assert(dfFiles(sized) > 1, "the small partition size did not widen the write")
+    assert(stats(sized) == stats(single),
+      "the multi-file term-df diverged from the one-file publish")
+    // a fold whose base is the multi-file publish
     val ops2 = Seq((1L, "D", null)).toDF("doc_id", "op", "text")
     StreamingIngest.bm25StatsBatch(ops2, "r-1", corpus, single)
-    val prev2 = System.setProperty("graft.bm25.shardRowGate", "0")
-    try StreamingIngest.bm25StatsBatch(ops2, "r-1", corpus, sharded)
-    finally {
-      if (prev2 == null) System.clearProperty("graft.bm25.shardRowGate")
-      else System.setProperty("graft.bm25.shardRowGate", prev2)
-    }
-    assert(stats(sharded) == stats(single),
-      "fold over a sharded base diverged from the single-file lineage")
+    StreamingIngest.bm25StatsBatch(ops2, "r-1", corpus, sized)
+    assert(stats(sized) == stats(single),
+      "a fold over the multi-file base diverged from the one-file lineage")
   }
 
   test("t20 streaming index delete equals the one-shot dirty-cell rewrite") {

@@ -231,8 +231,7 @@ class VersionedLayersSpec extends SparkSpec {
   private def pointerSeq(dir: String): Long = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.StreamingIngest.readViewPointer(fs, root)
-      .stripPrefix("m-").toLong
+    VersionedLayers.readPointer(fs, root).stripPrefix("m-").toLong
   }
 
   test("one-publish upsert folds (r18): indexUpsertFold equals the delete-then-" +
@@ -372,7 +371,7 @@ class VersionedLayersSpec extends SparkSpec {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     new org.apache.hadoop.fs.Path(root, s"manifests/${
-      graft.streaming.StreamingIngest.readViewPointer(fs, root)}")
+      VersionedLayers.readPointer(fs, root)}")
   }
 
   private def manifestLines(dir: String): Seq[String] = {

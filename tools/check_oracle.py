@@ -54,13 +54,26 @@ def main():
     OUT = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify")
 
     if "--skip-verify" not in sys.argv:
-        r = subprocess.run(
-            ["sbt", f'runMain graft.Verify {SF} {OUT}'], cwd="/root/repo",
-            capture_output=True, text=True, timeout=1800)
+        # graft.Verify also records the run's approx-quality figures in the
+        # tracked APPROX_QUALITY.json at the repo root; a gate run must not
+        # rewrite that record, so its bytes are put back afterwards
+        repo = Path(__file__).resolve().parent.parent
+        quality = repo / "APPROX_QUALITY.json"
+        saved = quality.read_bytes() if quality.exists() else None
+        try:
+            r = subprocess.run(
+                ["sbt", f'runMain graft.Verify {SF} {OUT}'], cwd=repo,
+                capture_output=True, text=True, timeout=1800)
+        finally:
+            if saved is None:
+                quality.unlink(missing_ok=True)
+            else:
+                quality.write_bytes(saved)
         sys.stdout.write(r.stdout[-3000:])
         sys.stderr.write(r.stderr[-3000:])
         if r.returncode != 0:
             print("VERIFY RUN FAILED"); sys.exit(1)
+        print(f"approx-quality figures of this run: {OUT / 'APPROX_QUALITY.json'}")
 
     oracle = json.loads((OUT / "oracle_sql.json").read_text())
     con = duckdb.connect()
