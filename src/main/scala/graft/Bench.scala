@@ -26,7 +26,7 @@ object Bench {
     // "warm"); SPARK_GRAFT_ONLY subsets never evict — profiling one
     // query should not destroy the shared cache.
     val cacheRoot = new org.apache.hadoop.fs.Path(graft.operators.DfCache.indexCacheRoot)
-    val cacheFs = cacheRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cacheFs = graft.fs.ForkFreeLocalFs.of(spark, cacheRoot)
     locally {
       val keepWarm = sys.env.get("SPARK_GRAFT_WARM_INDEX_CACHE").exists(_.trim.nonEmpty)
       if (!subset && !keepWarm && cacheFs.exists(cacheRoot) &&

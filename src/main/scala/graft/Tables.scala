@@ -13,9 +13,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet timestamp compatibility, applied once per session by the entry
-    * points (Bench/Verify/SparkSpec/entry) rather than as a hidden side
-    * effect of every table load. Two writer dialects arrive in practice:
+  /** The session confs every entry point applies once (Bench, Verify,
+    * SparkSpec, SparkEntry and the benchmark) rather than as a hidden
+    * side effect of every table load.
+    *
+    * The local filesystem: `file:` resolves to [[graft.fs.ForkFreeLocalFs]]
+    * in every `sessionState.newHadoopConf()` — the conf Spark's writers,
+    * readers, listings and streaming checkpoints use, and the one the
+    * engine's own filesystem calls take ([[graft.fs.ForkFreeLocalFs.of]]).
+    * Stock Hadoop without `libhadoop.so` forks `chmod` per created file and
+    * dir and `readlink` per checkpoint-log rename.
+    *
+    * Parquet timestamp compatibility. Two writer dialects arrive in practice:
     *   - TIMESTAMP(NANOS): Spark has no native nanos type — read as long
     *     (SPARK-40819) and truncate to µs in [[load]].
     *   - TIMESTAMP(MICROS, isAdjustedToUTC=false): pandas/Arrow's default.
@@ -26,6 +35,7 @@ object Tables {
   def ensureParquetConf(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    graft.fs.ForkFreeLocalFs.sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   /** Scratch root for `spark.local.dir` (shuffle/spill/state-store working

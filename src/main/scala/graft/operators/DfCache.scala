@@ -100,7 +100,7 @@ private[graft] object DfCache {
     * no data is read. */
   private def fingerprint(spark: SparkSession, paths: Seq[String]): String = {
     import org.apache.hadoop.fs.{FileStatus, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     sha(paths.sorted.map { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
@@ -184,7 +184,7 @@ private[graft] object DfCache {
                                      (build: String => Unit): String = {
     import org.apache.hadoop.fs.Path
     val root = new Path(indexCacheRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, root)
     val slug = sha(key)
     val dir = new Path(root, s"${slug}_${fingerprint(spark, sources)}")
     // _SUCCESS is the visibility marker: a crashed writer never produced

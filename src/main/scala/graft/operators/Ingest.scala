@@ -157,8 +157,7 @@ object Ingest {
       // them — drop the partition dir (bounded: ⊆ the dirty keys)
       val staged = spark.read.parquet(stage).select(col("source")).distinct()
         .collect().map(_.getString(0)).toSet
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = graft.fs.ForkFreeLocalFs.of(spark, new org.apache.hadoop.fs.Path(out))
       val emptied = dirty.filterNot(staged)
       emptied.foreach { s =>
         fs.delete(new org.apache.hadoop.fs.Path(out, s"source=$s"), true); ()

@@ -234,7 +234,7 @@ object Maintenance {
                                     landedDir: String): (Long, Long) = {
     import org.apache.hadoop.fs.Path
     val root = new Path(landedDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, root)
     val days = fs.listStatus(root).map(_.getPath.getName)
       .collect { case n if n.startsWith("logday=") =>
         n.stripPrefix("logday=").toLong }
@@ -544,7 +544,7 @@ object Maintenance {
       (content: DataFrame => DataFrame): Boolean = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     require(maxLayers >= 1, s"maxLayers must be >= 1, got $maxLayers")
-    val fs = new Path(idxDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, new Path(idxDir))
     def dataFiles(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq.flatMap { s =>
       val n = s.getPath.getName
       if (n.startsWith("_") || n.startsWith(".")) Seq.empty
@@ -635,7 +635,7 @@ object Maintenance {
       holder: String)(body: => A): A = {
     import org.apache.hadoop.fs.Path
     val root = new Path(rootDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, root)
     fs.mkdirs(root)
     val lease = new Path(root, WriterLeaseFile)
     val nonce = java.util.UUID.randomUUID().toString
@@ -867,7 +867,7 @@ object Maintenance {
   private[graft] def multiArtifactInitCopied(spark: SparkSession,
       sfDir: String, dirs: MultiArtifactDirs): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val src = new Path(multiArtifactStoredTree(spark, sfDir))
     val dst = new Path(dirs.root)
     val fs = src.getFileSystem(conf)

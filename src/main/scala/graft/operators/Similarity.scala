@@ -465,8 +465,7 @@ object Similarity {
         .write.mode("overwrite").partitionBy("cell").parquet(stage)
       // the staged-cell set is the staging dir's partition listing — free
       // metadata, no second scan of the survivor rows
-      val fs = new org.apache.hadoop.fs.Path(idxDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = graft.fs.ForkFreeLocalFs.of(spark, new org.apache.hadoop.fs.Path(idxDir))
       val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
         .map(_.getPath.getName).collect {
           case n if n.startsWith("cell=") => n.stripPrefix("cell=").toInt

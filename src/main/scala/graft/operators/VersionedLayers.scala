@@ -107,7 +107,7 @@ object VersionedLayers {
 
   private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val root = new Path(dir)
-    (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    (graft.fs.ForkFreeLocalFs.of(spark, root), root)
   }
 
   /** Grace age before an unreferenced store dir / stale manifest may be
@@ -126,9 +126,12 @@ object VersionedLayers {
     * of 32; a 100 TB layer still fans out wide. Keyed by the write's
     * partition columns when present, so a partitionBy write stops
     * emitting (tasks x dirs) files. No-op when AQE is off (REBALANCE
-    * falls back to a fixed-width shuffle that would help nothing). */
+    * falls back to a fixed-width shuffle that would help nothing), and
+    * for a frame of at most one row (a global aggregate such as the BM25
+    * `scalars` layer), which already lands as one file. */
   private[graft] def sizedForWrite(df: DataFrame, keys: Seq[String]): DataFrame =
     if (df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true") != "true") df
+    else if (df.queryExecution.analyzed.maxRows.exists(_ <= 1L)) df
     else if (keys.isEmpty) df.hint("REBALANCE")
     else df.hint("REBALANCE", keys.map(col): _*)
 

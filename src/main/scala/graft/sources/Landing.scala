@@ -119,7 +119,7 @@ object Landing {
       Seq[(String, Int, Long)] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, root)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
@@ -159,7 +159,7 @@ object Landing {
                         maxFiles: Int = 1): Seq[(String, Int, Int)] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, root)
     val staging = new Path(root.getParent,
       "." + root.getName + s"_compact_staging")
     val trash = new Path(root.getParent, "." + root.getName + s"_compact_trash")
@@ -278,7 +278,7 @@ object Landing {
                            catalogTable: Option[String] = None): Seq[String] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, root)
     val trash = new Path(root.getParent, "." + root.getName + "_retention_trash")
     val unescape =
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName _

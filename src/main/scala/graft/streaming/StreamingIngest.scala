@@ -1235,7 +1235,7 @@ object StreamingIngest {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val spark = batch.sparkSession
     val root = new Path(corpusDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.fs.ForkFreeLocalFs.of(spark, root)
     val stagingRoot = new Path(root.getParent, "." + root.getName + "_delprop_staging")
     val staging = new Path(stagingRoot, s"batch=$batchTag")
     val trash = new Path(root.getParent, "." + root.getName + "_delprop_trash")
@@ -1378,7 +1378,7 @@ object StreamingIngest {
     * re-encoding a partition tree through a Spark write). */
   private def copyDir(spark: SparkSession, src: String, dst: String): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val s = new Path(src); val d = new Path(dst)
     val fs = s.getFileSystem(conf)
     val dfs = d.getFileSystem(conf)
@@ -1399,7 +1399,7 @@ object StreamingIngest {
   private def copyDirCow(spark: SparkSession, src: String, dst: String)
                         (mutable: String => Boolean): Unit = {
     import org.apache.hadoop.fs.{FileUtil, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val s = new Path(src); val d = new Path(dst)
     val fs = s.getFileSystem(conf)
     val dfs = d.getFileSystem(conf)
@@ -1437,10 +1437,14 @@ object StreamingIngest {
     * corpus, in that order. Exactly-once for the VIEW comes from the
     * snapshot store's replay gate ([[graft.operators.VersionedLayers.foldOnce]]):
     * the fold's output publishes as the view's only layer, tagged with the
-    * batch, so a replay whose publish already landed SKIPS the fold — this
-    * matters because the fold is only correct against the PRE-delete
-    * corpus (the max repair rescans surviving rows), and a replay arrives
-    * after the corpus delete may have run. The corpus delete itself is
+    * batch, so a replay whose publish already landed SKIPS the fold. The
+    * fold retracts the batch's rows as it finds them in the corpus, so
+    * the gate matters for a replay after a crash between the pointer move
+    * and the corpus delete: the rows are still there and a re-fold would
+    * retract them from the view a second time. After the delete a re-fold
+    * finds none of them and leaves the view as it is; there the gate saves
+    * the work and keeps the store from gaining a generation. The corpus
+    * delete itself is
     * [[deleteBatch]] (idempotent, crash-safe swaps). Order of operations
     * per batch: fold+publish (one pointer move) → delete corpus
     * partitions; a crash before the pointer move leaves both the prior

@@ -1164,10 +1164,21 @@ class StreamingSpec extends SparkSpec {
         (s.getPath.toString, s.getLen, s.getModificationTime)).toSet
     val cleanDayBefore = fileIdents("logday=19700103")
     val b1 = Seq((3L, 19700101L), (4L, 19700101L)).toDF("event_id", "logday")
-    StreamingIngest.retractViewBatch(b1, "r-0", corpus, view)
-    assert(viewMap() == Map(
+    val afterB1 = Map(
       ("a", 0L) -> ((2L, 20L, 3L)), ("a", 300L) -> ((1L, 350L, 6L)),
-      ("b", 0L) -> ((2L, 150L, 15L)), ("b", 172800L) -> ((1L, 172830L, 9L))))
+      ("b", 0L) -> ((2L, 150L, 15L)), ("b", 172800L) -> ((1L, 172830L, 9L)))
+    // crash after the pointer move, before the corpus delete: the crashed
+    // attempt deletes from a private copy of the corpus, so the real one
+    // still holds the batch's rows. The replay must SKIP the fold — a
+    // re-fold against the pre-delete corpus would retract the batch from
+    // the view a second time — and then run the delete
+    val preDelete = root.resolve("corpus_pre_delete").toString
+    spark.read.parquet(corpus).write.partitionBy("logday").parquet(preDelete)
+    StreamingIngest.retractViewBatch(b1, "r-0", preDelete, view)
+    assert(viewMap() == afterB1)
+    assert(corpusIds() == (1L to 8L).toSet)
+    StreamingIngest.retractViewBatch(b1, "r-0", corpus, view)
+    assert(viewMap() == afterB1)
     assert(corpusIds() == Set(1L, 2L, 5L, 6L, 7L, 8L))
     // the clean day's partition kept its exact files (path+len+mtime):
     // the swap rewrote only the keyed day
@@ -1180,10 +1191,10 @@ class StreamingSpec extends SparkSpec {
       ("b", 172800L) -> ((1L, 172830L, 9L)))
     assert(viewMap() == afterB2)
     assert(corpusIds() == Set(1L, 2L, 5L, 8L))
-    // replay of batch 2 (at-least-once): the live manifest already holds
-    // the batch's tag, so the fold is skipped — re-running it would be
-    // WRONG, because the corpus delete already ran — and the re-delete is
-    // a no-op
+    // replay of batch 2 (at-least-once) after its corpus delete: the live
+    // manifest already holds the batch's tag, so the fold is skipped (a
+    // re-fold would find none of the batch's rows left to retract and
+    // publish the same view again), and the re-delete is a no-op
     StreamingIngest.retractViewBatch(b2, "r-1", corpus, view)
     assert(viewMap() == afterB2)
     assert(corpusIds() == Set(1L, 2L, 5L, 8L))
