@@ -100,9 +100,12 @@ object Bench {
       // Streaming-machinery warm-up over 32 rows: the FIRST use of each
       // stateful streaming operator in a JVM pays one-time costs no later
       // micro-batch repays — StreamExecution/offset-log class init, the
-      // state-store provider registry, per-operator codegen, Avro state
-      // encoders, and (largest) extraction+dlopen of the RocksDB native
-      // library. Profiled at ~1-1.5 s PER OPERATOR TYPE, landing on
+      // state-store provider registry, per-operator codegen (once per JVM
+      // only while artifact isolation is off, Tables.ensureParquetConf:
+      // with it on, each query's cloned session gets a fresh class loader
+      // and recompiles all its generated classes), Avro state encoders,
+      // and (largest) extraction+dlopen of the RocksDB native library.
+      // Profiled at ~1-1.5 s PER OPERATOR TYPE, landing on
       // whichever t-query reaches that operator first (t1 3.3→1.9 s,
       // t2b 3.8→1.9 s, t10 3.2→1.6 s cold vs warmed). Same JMH discipline
       // as the codegen warm-up above — a real pipeline executor pays

@@ -24,6 +24,16 @@ object Tables {
     * Stock Hadoop without `libhadoop.so` forks `chmod` per created file and
     * dir and `readlink` per checkpoint-log rename.
     *
+    * Artifact isolation off: every streaming query runs on a clone of the
+    * session, and with `spark.sql.artifact.isolation.enabled` on (Spark 4's
+    * default) each clone's tasks carry a new artifact-session UUID. The
+    * executor then builds a fresh class loader per query, fetching classes
+    * from the driver over RPC, and the codegen cache — keyed by class
+    * loader — recompiles every generated class of every micro-batch. The
+    * engine adds no session artifacts (no jars, files or REPL classes), so
+    * its queries all run under the executor's default loader and reuse one
+    * warm codegen cache.
+    *
     * Parquet timestamp compatibility. Two writer dialects arrive in practice:
     *   - TIMESTAMP(NANOS): Spark has no native nanos type — read as long
     *     (SPARK-40819) and truncate to µs in [[load]].
@@ -36,6 +46,7 @@ object Tables {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     graft.fs.ForkFreeLocalFs.sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
   }
 
   /** Scratch root for `spark.local.dir` (shuffle/spill/state-store working

@@ -838,7 +838,7 @@ class DedupSimilaritySpec extends SparkSpec {
       .write.partitionBy("cell").parquet(idxDir)
     def files(): Map[String, (Long, Long)] = {
       val fs = new org.apache.hadoop.fs.Path(idxDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileSystem(spark.sessionState.newHadoopConf())
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(idxDir), true)
       val b = Map.newBuilder[String, (Long, Long)]
       while (it.hasNext) { val s = it.next()
@@ -888,7 +888,7 @@ class DedupSimilaritySpec extends SparkSpec {
         .toDF("batch", "vec_id", "cell"), Seq("cell"))
     def files(): Map[String, (Long, Long)] = {
       val fs = new org.apache.hadoop.fs.Path(idxDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileSystem(spark.sessionState.newHadoopConf())
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(idxDir), true)
       val b = Map.newBuilder[String, (Long, Long)]
       while (it.hasNext) { val s = it.next()
@@ -1285,7 +1285,7 @@ class DedupSimilaritySpec extends SparkSpec {
         .toDF("batch", "fp", "doc_id"))
     def files(): Map[String, (Long, Long)] = {
       val fs = new org.apache.hadoop.fs.Path(idxDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileSystem(spark.sessionState.newHadoopConf())
       val it = fs.listFiles(new org.apache.hadoop.fs.Path(idxDir), true)
       val b = Map.newBuilder[String, (Long, Long)]
       while (it.hasNext) { val s = it.next()
@@ -1547,7 +1547,7 @@ class DedupSimilaritySpec extends SparkSpec {
       idx
     }
     def files(idx: String): Map[String, (Long, Long)] = {
-      val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = new Path(idx).getFileSystem(spark.sessionState.newHadoopConf())
       val it = fs.listFiles(new Path(idx), true)
       val b = Map.newBuilder[String, (Long, Long)]
       while (it.hasNext) { val s = it.next()

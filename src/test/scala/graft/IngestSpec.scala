@@ -43,7 +43,7 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.orc(out).count() == rowsBefore)
     // staging/trash must be gone — the swap completed and cleaned up
     val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root.getParent,
       "." + root.getName + "_compact_staging")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(root.getParent,
@@ -60,7 +60,7 @@ class IngestSpec extends SparkSpec {
       .write.mode("overwrite").partitionBy("logdate").orc(out)
     val rowsBefore = spark.read.orc(out).count()
     val root = new Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // simulate a crash between the two swap renames: one partition's only
     // copy sits in the trash dir, gone from the live tree
     val victim = Landing.partitionFileStats(spark, out).head._1
@@ -82,7 +82,7 @@ class IngestSpec extends SparkSpec {
     Ingest.enriched(spark, sf).repartition(4)
       .write.mode("overwrite").partitionBy("logdate").orc(out)
     val root = new Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val lock = new Path(root.getParent, "." + root.getName + "_compact_lock")
     // a concurrent (or hard-crashed) run holds the lock: refuse LOUDLY —
     // two compactions sharing staging/trash could destroy a mid-swap
@@ -118,7 +118,7 @@ class IngestSpec extends SparkSpec {
     // crash recovery: a partition stranded in retention trash by a crash
     // is purged (NOT restored) by the next run
     val root = new Path(out)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val trash = new Path(root.getParent, "." + root.getName + "_retention_trash")
     fs.mkdirs(trash)
     require(fs.rename(new Path(root, s"logday=${days(1)}"), new Path(trash, s"logday=${days(1)}")))
@@ -138,7 +138,7 @@ class IngestSpec extends SparkSpec {
       (6L, "kill c1", "C"), (8L, "kill c2", "C"))
       .toDF("doc_id", "text", "source")
       .write.mode("overwrite").partitionBy("source").parquet(out)
-    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(out).getFileSystem(spark.sessionState.newHadoopConf())
     def files(src: String): Seq[(String, Long, Long)] =
       fs.listStatus(new Path(out, s"source=$src")).toSeq
         .filter(_.getPath.getName.endsWith(".parquet"))

@@ -559,7 +559,7 @@ class MaintenanceSpec extends SparkSpec {
     import graft.operators.Maintenance
     val root = Tables.scratchDir("graft_lease_spec").toString
     val lease = new Path(root, Maintenance.WriterLeaseFile)
-    val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = lease.getFileSystem(spark.sessionState.newHadoopConf())
     // concurrent refusal: while writer A holds the lease, writer B fails
     // fast and the message names A
     Maintenance.withWriterLease(spark, root, "writer-A") {
@@ -615,7 +615,7 @@ class MaintenanceSpec extends SparkSpec {
     import graft.operators.Maintenance
     val root = Tables.scratchDir("graft_lease_hb_spec").toString
     val lease = new Path(root, Maintenance.WriterLeaseFile)
-    val fs = lease.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = lease.getFileSystem(spark.sessionState.newHadoopConf())
     val prev = System.setProperty("graft.maintenance.staleLeaseMs", "1200")
     try {
       // without renewal this body outlives the stale bound 3× over, and

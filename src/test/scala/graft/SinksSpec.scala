@@ -76,7 +76,7 @@ class SinksSpec extends SparkSpec {
       // trash, but the process died before the catalog DROP ran — the
       // live listing can no longer re-derive that spec
       val root = new Path(out)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       val trash = new Path(root.getParent, "." + root.getName + "_retention_trash")
       fs.mkdirs(trash)
       require(fs.rename(new Path(root, "logdate=20240101"),
@@ -228,6 +228,35 @@ class SinksSpec extends SparkSpec {
       .select(col("logdate"), col("receivecount"), col("sinkcount"), col("updatetime"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(bk == truth.map { case (ld, (n, maxe)) => ld -> (n, n, maxe) })
+  }
+
+  test("S9: a pipeline's next micro-batch compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // Each landStream runs its query on a clone of the session. Under
+    // Spark's per-session artifact isolation every clone gets a fresh
+    // executor class loader, and the codegen cache (keyed by loader)
+    // compiles every generated class of the batch again.
+    val halves = Seq(0, 1).map(h => eventsSf(s"graft_nocompile_$h",
+      lateAndUncategorized.where(col("event_id") % 2 === h)))
+    val mySf = halves.head
+    val out = tmp("graft_nocompile_out")
+    val ckpt = tmp("graft_nocompile_ckpt")
+    // the first call links mySf's events.parquet into the stream's source
+    // dir (StreamingIngest.source); the second half arrives beside it
+    jobsByLabel(StreamingIngest.landStream(spark, mySf, out, ckpt))
+    val srcDir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+      "graft_stream_src_" + mySf.replaceAll("[^0-9a-zA-Z]", "_"))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(halves(1), "events.parquet"),
+      srcDir.resolve("arrival-1.parquet"))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // jobsByLabel ends on a fence job: the count is read after every job
+    // the call started
+    val (second, _) = jobsByLabel(StreamingIngest.landStream(spark, mySf, out, ckpt))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0,
+      "the second micro-batch compiled generated classes again")
+    val rows = halves.map(h => spark.read.parquet(s"$h/events.parquet").count())
+    assert(second.nEvents == rows(1) && rows(1) > 0)
+    assert(spark.read.orc(out).count() == rows.sum)
   }
 
   test("S2: a batch whose commit marker exists lands nothing and still reports its logdates") {

@@ -20,7 +20,7 @@ trait SparkSpec extends AnyFunSuite {
   def crashBeforePointerMove(dir: String)(publish: => Any): Unit = {
     import graft.operators.VersionedLayers
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prior = VersionedLayers.readPointer(fs, root)
     publish
     VersionedLayers.writePointer(fs, root, prior)

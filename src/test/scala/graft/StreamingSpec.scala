@@ -1092,7 +1092,7 @@ class StreamingSpec extends SparkSpec {
         (4L, "dead2", "C"), (5L, "dead3", "C"))
       .toDF("doc_id", "text", "source")
       .write.mode("overwrite").partitionBy("source").parquet(corpus)
-    val fs = new Path(corpus).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(corpus).getFileSystem(spark.sessionState.newHadoopConf())
     def state(): Set[(Long, String)] = spark.read.parquet(corpus)
       .select(col("doc_id"), col("source")).as[(Long, String)].collect().toSet
     val tombs = Seq((2L, "A"), (4L, "C"), (5L, "C")).toDF("doc_id", "source")
@@ -1151,7 +1151,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("event_id", "category", "es", "v_micro", "logday")
       .write.mode("overwrite").partitionBy("logday").parquet(corpus)
     StreamingIngest.initRetractView(spark, corpus, view)
-    val fs = new Path(view).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(view).getFileSystem(spark.sessionState.newHadoopConf())
     def viewMap(): Map[(String, Long), (Long, Long, Long)] =
       StreamingIngest.readRetractView(spark, view).collect()
         .map(r => (r.getString(0), r.getLong(1)) ->
@@ -1235,7 +1235,7 @@ class StreamingSpec extends SparkSpec {
       (3L, "window scan"), (4L, "join join join window"))
       .toDF("doc_id", "text")
     StreamingIngest.initBm25Stats(spark, corpus, statsDir)
-    val fs = new Path(statsDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(statsDir).getFileSystem(spark.sessionState.newHadoopConf())
     def dfMap(): Map[String, Long] = {
       val (d, _) = StreamingIngest.readBm25Stats(spark, statsDir)
       d.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1315,7 +1315,7 @@ class StreamingSpec extends SparkSpec {
     // parquet files of the live term-df layer
     def dfFiles(dir: String): Int = {
       val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileSystem(spark.sessionState.newHadoopConf())
       graft.operators.VersionedLayers.layerPaths(spark, dir)
         .filter(_.getName.startsWith("df."))
         .map(p => fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")))

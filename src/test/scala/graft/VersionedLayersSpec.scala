@@ -82,7 +82,7 @@ class VersionedLayersSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     val dir = Tables.scratchDir("graft_vl_crash").toString
     val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val prevGrace = System.setProperty("graft.versioned.gcGraceMs", "0")
     try {
       VersionedLayers.publishLayer(spark, dir, "a", rows(1 to 10, 1))
@@ -230,7 +230,7 @@ class VersionedLayersSpec extends SparkSpec {
 
   private def pointerSeq(dir: String): Long = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     VersionedLayers.readPointer(fs, root).stripPrefix("m-").toLong
   }
 
@@ -369,14 +369,14 @@ class VersionedLayersSpec extends SparkSpec {
 
   private def manifestPath(dir: String): org.apache.hadoop.fs.Path = {
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     new org.apache.hadoop.fs.Path(root, s"manifests/${
       VersionedLayers.readPointer(fs, root)}")
   }
 
   private def manifestLines(dir: String): Seq[String] = {
     val p = manifestPath(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(p)
     try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
     finally in.close()
@@ -437,7 +437,7 @@ class VersionedLayersSpec extends SparkSpec {
     VersionedLayers.publishLayer(spark, dir, "a", docs(1 to 30, 1))
     VersionedLayers.publishLayer(spark, dir, "b", docs(31 to 60, 2))
     val m = manifestPath(dir)
-    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = m.getFileSystem(spark.sessionState.newHadoopConf())
     val kept = manifestLines(dir).filterNot(_.startsWith("#schema"))
     val out = fs.create(m, true)
     try out.write(kept.map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()

@@ -58,8 +58,10 @@ def fmt(counts):
     return ", ".join(f"{n} {prog}" for prog, n in counts.most_common()) or "none"
 
 
-def report(spawns, result=None):
-    lines = [f"{len(spawns)} process starts: {fmt(Counter(p for _, p in spawns))}"]
+def report(spawns, result=None, noun="process starts"):
+    """`spawns` ((epoch ms, label) pairs) counted by label, then per
+    operation span of `result` and outside every span."""
+    lines = [f"{len(spawns)} {noun}: {fmt(Counter(p for _, p in spawns))}"]
     if result is None:
         return "\n".join(lines)
     seen = set()
