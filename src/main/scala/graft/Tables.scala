@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -34,6 +35,18 @@ object Tables {
     * its queries all run under the executor's default loader and reuse one
     * warm codegen cache.
     *
+    * Hadoop property provenance dropped: the context's Hadoop conf records,
+    * per key, the resource that set it (`getPropertySources`), and
+    * `Configuration.write` gzips that record per key through a fresh
+    * `Deflater` (`readFields` inflates it through a fresh `Inflater`). With
+    * the ~1,100 keys of the `*-default.xml` resources, that is 5–9 ms to
+    * serialize and 7–10 ms to deserialize one conf, and every Spark job ships
+    * the session's copy (`newHadoopConf()`): a scan broadcasts it, and a
+    * write job serializes two on the DAG scheduler thread (the job
+    * description's and the stats tracker's) that each write task
+    * deserializes. Values are untouched; only the diagnostics-only
+    * `getPropertySources` answers null for them. See [[dropPropertySources]].
+    *
     * Parquet timestamp compatibility. Two writer dialects arrive in practice:
     *   - TIMESTAMP(NANOS): Spark has no native nanos type — read as long
     *     (SPARK-40819) and truncate to µs in [[load]].
@@ -47,7 +60,31 @@ object Tables {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     graft.fs.ForkFreeLocalFs.sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    dropPropertySources(spark.sparkContext.hadoopConfiguration)
   }
+
+  /** Clear `conf`'s per-key source records, keeping every key and value.
+    * The default resources load first (`size()`): a later lazy load would
+    * record their sources again. A reload (`reloadConfiguration`, which
+    * Hadoop also runs on every conf when a new default resource is added)
+    * restores them, so each entry point's [[ensureParquetConf]] clears
+    * again. Hadoop offers no call for this; the records are the private
+    * `updatingResource` map. Without that field (another Hadoop) this is a
+    * no-op, and `HadoopConfSpec` fails. */
+  private[graft] def dropPropertySources(conf: Configuration): Unit =
+    updatingResource.foreach { field =>
+      conf.synchronized {
+        conf.size()
+        Option(field.get(conf)).foreach(_.asInstanceOf[java.util.Map[_, _]].clear())
+      }
+    }
+
+  private lazy val updatingResource: Option[java.lang.reflect.Field] =
+    try {
+      val f = classOf[Configuration].getDeclaredField("updatingResource")
+      f.setAccessible(true)
+      Some(f)
+    } catch { case _: ReflectiveOperationException | _: RuntimeException => None }
 
   /** Scratch root for `spark.local.dir` (shuffle/spill/state-store working
     * files): tmpfs when the machine has one (`/dev/shm`), the JVM tmpdir

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""Execution samples of a benchmark run spent compiling generated code or
-loading classes from the driver, from a JFR recording with the `profile`
-settings.
+"""Execution samples of a benchmark run spent compiling generated code,
+loading classes from the driver or gzipping Hadoop property sources, from a
+JFR recording with the `profile` settings.
 
     JAVA_TOOL_OPTIONS=-XX:StartFlightRecording=filename=/tmp/run.jfr,settings=profile \
         python3 perfbench/run.py --workload sink_microbatch --seed 7 \
@@ -11,11 +11,16 @@ settings.
 
 A sample counts under the first marker (a substring of `Class.method`)
 found in its stack: janino's compiler (`org.codehaus.janino.`: generated
-code being compiled) or Spark's `ExecutorClassLoader` (classes fetched
-from the driver over RPC). A micro-batch whose query reuses the JVM's
-codegen cache has neither. It prints the samples per marker, then per
-operation span of a kept run as `tools/bench_spawns.py` does, then the
-samples outside every span.
+code being compiled), Spark's `ExecutorClassLoader` (classes fetched
+from the driver over RPC), or Hadoop's `WritableUtils` compressed strings,
+written and read apart: the per-key property sources a `Configuration`
+serializes, one gzip stream per key (a job's Hadoop conf on the DAG
+scheduler thread or a scan broadcast; a task deserializing it). A
+micro-batch whose query reuses the JVM's codegen cache has no janino or
+`ExecutorClassLoader` sample; a session whose Hadoop conf carries no
+resource sources (`Tables.dropPropertySources`) has few compressed-string
+ones. It prints the samples per marker, then per operation span of a kept
+run as `tools/bench_spawns.py` does, then the samples outside every span.
 """
 
 import argparse
@@ -24,7 +29,8 @@ import subprocess
 
 from bench_spawns import epoch_ms, jfr_tool, report
 
-MARKERS = ["org.codehaus.janino.", "ExecutorClassLoader"]
+MARKERS = ["org.codehaus.janino.", "ExecutorClassLoader",
+           "WritableUtils.writeCompressedString", "WritableUtils.readCompressedString"]
 
 
 def samples(recording):
